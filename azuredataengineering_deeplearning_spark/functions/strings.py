@@ -82,6 +82,11 @@ def normalize_column_names(columns: list[str]) -> dict[str, str]:
     return out
 
 
+def sql_ident(name: str) -> str:
+    """Any column name as a SQL identifier for expression strings."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def quote_if_needed(name: str) -> str:
     """Backtick-quote column names containing separators
     (``merge_generator.py:59``, ``AIO_delta_table_generator.py:39``)."""

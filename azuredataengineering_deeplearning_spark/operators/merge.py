@@ -8,11 +8,16 @@ Here the same semantics are a *functional* DataFrame transform:
 
     new_target = apply_changeset(target, changeset, ...)
 
-which on Delta becomes two ``DeltaTable.merge`` passes (expire, insert)
-— the builder is gated on delta-spark — and on parquet is a full
-rewrite (overwrite), which at lake scale you'd partition-prune with the
-data-skipping predicate exactly like the reference's injected
-``c.{col} >= '{scalar}'`` conditions (``merge_generator.py:68-78``).
+built as ONE full-outer join of the current slice with the changeset:
+every joined row emits its kept-or-expired current row plus, for a new
+or changed key, the inserted version — the UNION-ALL source as a
+generator rather than a second join — while history rows pass through
+in a union outside every exchange. On Delta the transform becomes two
+``DeltaTable.merge`` passes (expire, insert) — the builder is gated on
+delta-spark — and on parquet a full rewrite (``txlog.overwrite``),
+which at lake scale you'd partition-prune with the data-skipping
+predicate exactly like the reference's injected ``c.{col} >=
+'{scalar}'`` conditions (``merge_generator.py:68-78``).
 
 Change detection is a null-safe row hash over the non-housekeeping
 columns (J6): the reference's generated ``WHERE NOT (c.a = cs.a AND …)``
@@ -24,13 +29,14 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from azuredataengineering_deeplearning_spark.functions.dates import (
     DATE_KEY_OPEN_END,
     date_key,
 )
+from azuredataengineering_deeplearning_spark.functions.strings import sql_ident
 
 HOUSEKEEPING = ("effectiveDate", "expirationDate", "currentVersion")
 
@@ -86,69 +92,59 @@ def apply_changeset(
     - current row with unchanged/absent incoming key: pass through;
     - changed/new incoming rows: inserted as the new current version.
 
-    One shuffle on the natural key for the current⋈changeset join; the
-    history scan never joins (at scale: partition-prune it away
-    entirely with the data-skip predicate)."""
+    ONE full-outer join of the current slice with the changeset on the
+    natural key (one shuffle per side); each joined row emits its
+    kept-or-expired current row and, for a new or changed key, its
+    insert — the reference's UNION-ALL "NULL MERGEKEY" source as one
+    generator instead of a second join. History is a pass-through union
+    outside every exchange (at scale: partition-prune it away entirely
+    with the data-skip predicate)."""
     if compare_cols is None:
         compare_cols = [
             c for c in changeset.columns
             if c not in set(natural_key) | {change_ts} | set(HOUSEKEEPING)
         ]
 
+    cols = target.columns
     history = target.filter(F.col("currentVersion") != 1)
     current = target.filter(F.col("currentVersion") == 1)
 
+    eff = date_key(change_ts)
     cs = changeset.select(
         *[F.col(k).alias(f"__k_{k}") for k in natural_key],
-        date_key(change_ts).alias("__cs_eff"),
+        eff.alias("__cs_eff"),
+        date_key(F.date_sub(F.to_date(eff.cast("string"), "yyyyMMdd"), 1)).alias("__cs_exp"),
         row_change_hash(compare_cols).alias("__cs_hash"),
+        F.struct(*[c for c in cols if c not in HOUSEKEEPING]).alias("__cs"),
     )
     joined = current.withColumn("__t_hash", row_change_hash(compare_cols)).join(
         cs,
         [F.col(k) == F.col(f"__k_{k}") for k in natural_key],
-        "left",
+        "full_outer",
     )
-    changed = F.col("__cs_hash").isNotNull() & (F.col("__cs_hash") != F.col("__t_hash"))
-    updated_current = joined.select(
-        *target.columns,
-        F.when(
-            changed,
-            date_key(
-                F.date_sub(F.to_date(F.col("__cs_eff").cast("string"), "yyyyMMdd"), 1)
-            ),
-        ).otherwise(F.col("expirationDate")).alias("__new_exp"),
-        F.when(changed, F.lit(0)).otherwise(F.col("currentVersion")).cast("tinyint").alias("__new_cur"),
-    ).drop("expirationDate", "currentVersion").withColumnsRenamed(
-        {"__new_exp": "expirationDate", "__new_cur": "currentVersion"}
-    )
+    # the two emitted rows are one SQL expression (built column by column
+    # the Py4J calls cost more than the join); xxhash64 is never NULL, so
+    # a NULL hash means "no row on that side"
+    changed = "(__cs_hash IS NOT NULL AND __cs_hash != __t_hash)"
+    kept = {c: sql_ident(c) for c in cols} | {
+        "expirationDate": f"IF({changed}, __cs_exp, expirationDate)",
+        "currentVersion": f"CAST(IF({changed}, 0, currentVersion) AS TINYINT)",
+    }
+    inserted = {c: f"__cs.{sql_ident(c)}" for c in cols if c not in HOUSEKEEPING} | {
+        "effectiveDate": "__cs_eff",
+        "expirationDate": str(open_end),
+        "currentVersion": "CAST(1 AS TINYINT)",
+    }
 
-    # inserts: incoming rows that are new keys or changed rows
-    t_hashes = current.select(
-        *[F.col(k).alias(f"__k_{k}") for k in natural_key],
-        row_change_hash(compare_cols).alias("__t_hash"),
-    )
-    cs_full = changeset.join(
-        t_hashes,
-        [F.col(k) == F.col(f"__k_{k}") for k in natural_key],
-        "left",
-    )
-    inserts = (
-        cs_full.filter(
-            F.col("__t_hash").isNull()
-            | (row_change_hash(compare_cols) != F.col("__t_hash"))
-        )
-        .select(*changeset.columns)
-        .withColumn("effectiveDate", date_key(change_ts))
-        .withColumn("expirationDate", F.lit(open_end))
-        .withColumn("currentVersion", F.lit(1).cast("tinyint"))
-    )
+    def row(values: dict) -> str:
+        return "struct(" + ", ".join(f"{values[c]} AS {sql_ident(c)}" for c in cols) + ")"
 
-    cols = updated_current.columns
-    return (
-        history.select(*cols)
-        .unionByName(updated_current.select(*cols))
-        .unionByName(inserts.select(*cols), allowMissingColumns=True)
+    merged = joined.selectExpr(
+        f"inline(filter(array(IF(__t_hash IS NOT NULL, {row(kept)}, NULL), "
+        f"IF(__cs_hash IS NOT NULL AND (__t_hash IS NULL OR {changed}), "
+        f"{row(inserted)}, NULL)), r -> r IS NOT NULL))"
     )
+    return history.select(*cols).unionByName(merged)
 
 
 def apply_changeset_path(

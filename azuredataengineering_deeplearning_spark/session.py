@@ -65,12 +65,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or get) a SparkSession with the engine profile applied.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    so tests and bench share one entry point; on a real cluster pass
-    ``master=None`` with a pre-configured spark-submit and only the SQL
-    conf entries apply.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env; unset means
+    the CPUs this process may run on) so tests and bench share one entry
+    point; on a real cluster pass ``master=None`` with a pre-configured
+    spark-submit and only the SQL conf entries apply.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     builder = SparkSession.builder.appName(app_name)
     builder = builder.master(master or f"local[{cpus}]")
     conf = dict(LOCAL_PROFILE)

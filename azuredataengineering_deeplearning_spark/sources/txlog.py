@@ -22,7 +22,16 @@ of the same *semantics* over plain parquet:
   they never clobber a concurrent change (serializable for
   single-table read-modify-write);
 - time travel = replay to a version; VACUUM deletes files no live
-  version references, with a dry-run safety default.
+  version references, with a dry-run safety default;
+- every commit (and checkpoint) records the TABLE SCHEMA, as Delta
+  keeps it in its log: reads hand Spark that schema instead of paying
+  a footer-inference job per call, and the columns a read returns are
+  the log's, never whatever a data file happens to hold. Tables whose
+  commits predate the field still read (inferred, as before);
+- MERGE is one plan: a full-outer join of snapshot and changeset whose
+  rows expand into the new data row plus its change-data-feed images,
+  written by ONE staging write that routes data and ``_cdf/`` files by
+  a partition column (see :func:`merge`).
 
 This is deliberately a TEST-GRADE single-table log: no checkpoint
 parquet of the log, no multi-table transactions, no column-mapping.
@@ -35,10 +44,16 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructField, StructType
+
+# partition column of the MERGE staging write: "data" rows land in the
+# table root, "cdf" rows under _cdf/ (Spark drops it from the files)
+_ROUTE = "__txlog_route"
 
 
 class CommitConflict(Exception):
@@ -92,16 +107,17 @@ def _latest_checkpoint(path: str, version: int | None = None) -> dict | None:
         return json.load(f)
 
 
-def snapshot_files(path: str, version: int | None = None) -> tuple[list[str], int]:
-    """Replay the log → (live data files, resolved version). Version
-    ``None`` = latest; -1 (empty table) when no commits exist.
-
-    Replay starts from the newest checkpoint at-or-before ``version``
-    (see :func:`checkpoint_log`) and walks only the commits after it —
-    O(commits since checkpoint), not O(table history)."""
+def _snapshot(
+    path: str, version: int | None = None
+) -> tuple[list[str], int, dict | None]:
+    """Replay the log → (live data files, resolved version, recorded
+    schema). The schema is the JSON form the newest replayed commit
+    recorded (a commit written without the field keeps the one before
+    it), or None for a log that predates the field."""
     ck = _latest_checkpoint(path, version)
     live: set[str] = set(ck["live"]) if ck else set()
     resolved = ck["version"] if ck else -1
+    schema = ck.get("schema") if ck else None
     vs = _versions(path)
     for v in vs:
         if v <= resolved:
@@ -111,6 +127,7 @@ def snapshot_files(path: str, version: int | None = None) -> tuple[list[str], in
         c = _read_commit(path, v)
         live -= set(c.get("remove", []))
         live |= set(c.get("add", []))
+        schema = c.get("schema", schema)
         resolved = v
     if (
         version is not None
@@ -124,38 +141,119 @@ def snapshot_files(path: str, version: int | None = None) -> tuple[list[str], in
             "below the checkpoint horizon is gone (Delta log-retention "
             "semantics)"
         )
-    return sorted(live), resolved
+    return sorted(live), resolved, schema
+
+
+def snapshot_files(path: str, version: int | None = None) -> tuple[list[str], int]:
+    """Replay the log → (live data files, resolved version). Version
+    ``None`` = latest; -1 (empty table) when no commits exist.
+
+    Replay starts from the newest checkpoint at-or-before ``version``
+    (see :func:`checkpoint_log`) and walks only the commits after it —
+    O(commits since checkpoint), not O(table history)."""
+    files, v, _ = _snapshot(path, version)
+    return files, v
+
+
+def _record(schema: StructType) -> dict:
+    """A table schema in commit form: top-level fields nullable, as a
+    parquet scan reads them."""
+    return StructType(
+        [StructField(f.name, f.dataType, True, f.metadata) for f in schema.fields]
+    ).jsonValue()
+
+
+def _struct(recorded: dict | None) -> StructType | None:
+    return StructType.fromJson(recorded) if recorded else None
+
+
+def _scan(
+    spark: SparkSession,
+    path: str,
+    files: list[str],
+    schema: StructType | None,
+    merge_schema: bool = False,
+) -> DataFrame:
+    """Read table files with ``schema`` (no footer job); ``None`` infers
+    it from the footers (tables without a recorded schema)."""
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(schema)
+    elif merge_schema:
+        reader = reader.option("mergeSchema", "true")
+    return reader.parquet(*[os.path.join(path, f) for f in files])
+
+
+def _table_schema(
+    spark: SparkSession, path: str, files: list[str], recorded: dict | None
+) -> StructType | None:
+    """The snapshot's schema for a WRITE: the recorded one, else the
+    union of the files' footers (one job, old-format tables only)."""
+    if recorded or not files:
+        return _struct(recorded)
+    return _scan(spark, path, files, None, merge_schema=True).schema
+
+
+def _widen(base: StructType | None, new: StructType) -> StructType:
+    """``base`` plus the fields of ``new`` it lacks (append evolution)."""
+    if base is None:
+        return new
+    have = set(base.fieldNames())
+    return StructType(base.fields + [f for f in new.fields if f.name not in have])
+
+
+def _discard(path: str, names: list[str]) -> None:
+    """Delete staged files a failed or rejected commit never published."""
+    for n in names:
+        try:
+            os.remove(os.path.join(path, n))
+        except FileNotFoundError:
+            pass
 
 
 def _stage(
     df: DataFrame,
     path: str,
     target_files: int | None,
-    subdir: str | None = None,
+    routed: bool = False,
+    verify=None,
 ) -> list[str]:
     """Write data files under unique names; return table-relative paths.
     Staged files are invisible until a commit references them.
-    ``subdir`` routes the files into a table subdirectory (the CDF files
-    live under ``_cdf/`` so Structured Streaming can tail them as a
-    native file stream)."""
+
+    ``routed=True`` partitions the write by the ``_ROUTE`` column:
+    "data" files land in the table root, "cdf" files under ``_cdf/`` (so
+    Structured Streaming can tail them as a native file stream); the
+    route column itself is not stored. ``verify`` runs after the write
+    and before anything is moved into the table — raising there leaves
+    no file behind."""
     stage_id = uuid.uuid4().hex[:12]
     stage_dir = os.path.join(path, f"_stage_{stage_id}")
     out = df.coalesce(target_files) if target_files else df
-    out.write.mode("overwrite").parquet(stage_dir)
-    dest_dir = os.path.join(path, subdir) if subdir else path
-    os.makedirs(dest_dir, exist_ok=True)
-    names = []
-    for f in sorted(os.listdir(stage_dir)):
-        if not f.endswith(".parquet"):
-            continue
-        final = f"data_{stage_id}_{f}"
-        rel = f"{subdir}/{final}" if subdir else final
-        os.rename(os.path.join(stage_dir, f), os.path.join(path, rel))
-        names.append(rel)
-    for f in os.listdir(stage_dir):  # _SUCCESS, .crc
-        os.remove(os.path.join(stage_dir, f))
-    os.rmdir(stage_dir)
-    return names
+    writer = out.write.mode("overwrite")
+    if routed:
+        writer = writer.partitionBy(_ROUTE)
+    names: list[str] = []
+    try:
+        writer.parquet(stage_dir)
+        if verify is not None:
+            verify()
+        for d, _, files in os.walk(stage_dir):
+            sub = "_cdf/" if os.path.basename(d) == f"{_ROUTE}=cdf" else ""
+            if sub:
+                os.makedirs(os.path.join(path, sub), exist_ok=True)
+            for f in files:
+                if not f.endswith(".parquet"):
+                    continue  # _SUCCESS, .crc
+                rel = f"{sub}data_{stage_id}_{f}"
+                os.rename(os.path.join(d, f), os.path.join(path, rel))
+                names.append(rel)
+    except BaseException:
+        _discard(path, names)
+        raise
+    finally:
+        shutil.rmtree(stage_dir, ignore_errors=True)
+    return sorted(names)
 
 
 def _try_commit(path: str, version: int, actions: dict) -> None:
@@ -179,24 +277,65 @@ def _try_commit(path: str, version: int, actions: dict) -> None:
         os.unlink(tmp)
 
 
+def _blind_commit(
+    df: DataFrame,
+    path: str,
+    names: list[str],
+    op: str,
+    *,
+    replace: bool,
+    stats_cols: list[str] | None = None,
+    max_retries: int = 10,
+    meta: dict | None = None,
+) -> int:
+    """Commit ``names``, staged from ``df``, as the next version,
+    claiming again against the fresh snapshot after a lost race: blind
+    writes do not depend on the snapshot, so a retry never restages.
+    ``replace`` removes the snapshot's files and takes ``df``'s schema
+    (overwrite); otherwise the table schema widens by ``df``'s new
+    columns (append). ``stats_cols`` records per-file min/max. If every
+    claim is lost, or anything raises, the staged files are deleted
+    before the error propagates."""
+    try:
+        extra = dict(meta or {})
+        if stats_cols:
+            extra["stats"] = _collect_stats(
+                df.sparkSession, path, names, stats_cols, df.schema
+            )
+        for _ in range(max_retries):
+            live, v, recorded = _snapshot(path)
+            actions = {"op": op, "add": names}
+            if replace:
+                schema = df.schema
+                actions["remove"] = live
+            else:
+                base = _table_schema(df.sparkSession, path, live, recorded)
+                schema = _widen(base, df.schema)
+            try:
+                _try_commit(
+                    path, v + 1, {**actions, "schema": _record(schema), **extra}
+                )
+                return v + 1
+            except CommitConflict:
+                continue
+        raise CommitConflict(f"{op.lower()} lost {max_retries} races on {path}")
+    except BaseException:
+        _discard(path, names)
+        raise
+
+
 def append(df: DataFrame, path: str, target_files: int | None = None,
            max_retries: int = 10, meta: dict | None = None) -> int:
     """Blind append: stage once, retry only the (cheap) version claim —
     appends commute, so a lost race never restages data. ``meta`` lands
     in the commit record (e.g. ``{"batch_id": n}`` for streaming
-    replay detection, mirroring :func:`merge`)."""
+    replay detection, mirroring :func:`merge`). Columns the table lacks
+    are added to its schema (older files read them as NULL)."""
     os.makedirs(path, exist_ok=True)
     names = _stage(df, path, target_files)
-    for _ in range(max_retries):
-        _, v = snapshot_files(path)
-        try:
-            _try_commit(
-                path, v + 1, {"op": "APPEND", "add": names, **(meta or {})}
-            )
-            return v + 1
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"append lost {max_retries} races on {path}")
+    return _blind_commit(
+        df, path, names, "APPEND", replace=False, max_retries=max_retries, meta=meta
+    )
 
 
 def overwrite(
@@ -207,16 +346,13 @@ def overwrite(
 ) -> int:
     """Replace the whole table in one commit (readers of older versions
     are untouched — their files stay until VACUUM). ``stats_cols``
-    records per-file min/max for :func:`read_skipping`."""
+    records per-file min/max for :func:`read_skipping`. A lost version
+    race claims again against the fresh snapshot, like :func:`append`."""
     os.makedirs(path, exist_ok=True)
     names = _stage(df, path, target_files)
-    actions = {"op": "OVERWRITE", "add": names}
-    if stats_cols:
-        actions["stats"] = _collect_stats(df.sparkSession, path, names, stats_cols)
-    prev, v = snapshot_files(path)
-    actions["remove"] = prev
-    _try_commit(path, v + 1, actions)
-    return v + 1
+    return _blind_commit(
+        df, path, names, "OVERWRITE", replace=True, stats_cols=stats_cols
+    )
 
 
 def read(
@@ -225,23 +361,24 @@ def read(
     version: int | None = None,
     merge_schema: bool = False,
 ) -> DataFrame:
-    """Snapshot read (optionally time travel to ``version``).
-    ``merge_schema=True`` unions column sets across the snapshot's
-    files (Delta mergeSchema read semantics) — pair with an
-    ``append`` that widened the schema; columns absent from older
-    files come back NULL."""
-    files, v = snapshot_files(path, version)
-    if not files:
+    """Snapshot read (optionally time travel to ``version``) with the
+    schema that version recorded — no Spark job until an action.
+    ``merge_schema=True`` is the Delta mergeSchema read of tables
+    without a recorded schema: it unions column sets across the
+    snapshot's files (columns absent from older files come back NULL).
+    A recorded schema already is that union, since appends and merges
+    widen it."""
+    files, v, recorded = _snapshot(path, version)
+    if not files and recorded is None:
         raise FileNotFoundError(f"no committed data in {path} at version {version}")
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*[os.path.join(path, f) for f in files])
+    return _scan(spark, path, files, _struct(recorded), merge_schema)
 
 
 def history(path: str) -> list[dict]:
     """The commit log, oldest first (op, version, counts) — the DESCRIBE
-    HISTORY analog."""
+    HISTORY analog. ``metrics`` carries the operation metrics the
+    commit recorded (MERGE: rows updated/inserted, files and bytes
+    added/removed), like Delta's ``operationMetrics``."""
     out = []
     for v in _versions(path):
         c = _read_commit(path, v)
@@ -251,6 +388,7 @@ def history(path: str) -> list[dict]:
                 "op": c.get("op"),
                 "n_added": len(c.get("add", [])),
                 "n_removed": len(c.get("remove", [])),
+                "metrics": c.get("metrics", {}),
                 "ts": c.get("ts"),
             }
         )
@@ -283,9 +421,10 @@ def checkpoint_log(path: str) -> int:
 
     Concurrent writers are unaffected (the checkpoint claims no
     version); two racers checkpointing the same version dedupe via the
-    same exclusive-link claim commits use. Returns the checkpointed
-    version."""
-    live, v = snapshot_files(path)
+    same exclusive-link claim commits use. The checkpoint carries the
+    table schema, so reads after :func:`clean_log` still need no footer
+    job. Returns the checkpointed version."""
+    live, v, schema = _snapshot(path)
     if v < 0:
         raise FileNotFoundError(f"nothing to checkpoint in {path}")
     live_set = set(live)
@@ -297,7 +436,9 @@ def checkpoint_log(path: str) -> int:
     tmp = os.path.join(_ckpt_dir(path), f".{uuid.uuid4().hex[:12]}.tmp")
     with open(tmp, "w") as f:
         json.dump(
-            {"version": v, "ts": time.time(), "live": live, "stats": stats}, f
+            {"version": v, "ts": time.time(), "live": live, "stats": stats,
+             "schema": schema},
+            f,
         )
         f.flush()
         os.fsync(f.fileno())
@@ -350,83 +491,163 @@ def merge(
     max_retries: int = 3,
     meta: dict | None = None,
 ) -> int:
-    """MERGE (upsert, WHEN MATCHED UPDATE / WHEN NOT MATCHED INSERT):
-    read the snapshot, anti-join out matched keys, union the changeset,
-    stage, commit as remove-snapshot + add-result. A concurrent commit
-    between read and claim raises :class:`CommitConflict`; the whole
-    read-modify-write re-runs against the new snapshot — the Delta
-    conflict-retry loop. (SCD2 merges: run
+    """MERGE (upsert, WHEN MATCHED UPDATE / WHEN NOT MATCHED INSERT) as
+    ONE Spark plan and one staging write, committed as remove-snapshot +
+    add-result. A concurrent commit between read and claim raises
+    :class:`CommitConflict`; the whole read-modify-write re-runs against
+    the new snapshot — the Delta conflict-retry loop. (SCD2 merges: run
     ``operators.merge.apply_changeset`` on :func:`read` output and
     commit via :func:`overwrite` — same log semantics.)
 
+    The plan full-outer joins the snapshot (read with its recorded
+    schema) with the changeset on ``keys``. Each joined row expands
+    into the table's new row — the changeset's where it has one, else
+    the snapshot's — plus its CHANGE DATA FEED images (``_change_type``
+    ∈ insert / update_preimage / update_postimage, stamped with
+    ``_commit_version``). One write partitioned by a route column puts
+    the data files in the table root and the change files under
+    ``_cdf/`` (readable with :func:`read_changes`, tailable with
+    :func:`stream_changes`). The data files therefore also hold the two
+    change columns as NULLs; reads never show them, because they scan
+    with the recorded table schema.
+
     Schema evolution: changeset columns absent from the table are ADDED
     (existing rows read null), the Delta ``mergeSchema`` behavior — the
-    drift-ALTER path of ``merge_generator.py``. Every merge commit also
-    writes a CHANGE DATA FEED file (``_change_type`` ∈ insert /
-    update_preimage / update_postimage), readable with
-    :func:`read_changes` for incremental downstream consumption.
+    drift-ALTER path of ``merge_generator.py``.
 
     Like Delta MERGE, a changeset with multiple rows per key is
     rejected (silently unioning both rows in would duplicate the key
-    and mis-pair CDF pre/postimages). Pre-aggregate the changeset to
-    one row per key before merging."""
+    and mis-pair CDF pre/postimages): a per-key count rides the join's
+    own shuffle, a ``DataFrame.observe`` on the write reports its
+    maximum, and a duplicate raises ``ValueError`` before any staged
+    file reaches the table. Pre-aggregate the changeset to one row per
+    key before merging. The same observation counts the rows updated
+    and inserted; the commit records them under ``metrics`` with the
+    files and bytes added and removed."""
+    for _ in range(max_retries):
+        base_files, base_v, recorded = _snapshot(path)
+        if base_v < 0:
+            raise FileNotFoundError(f"merge target {path} has no commits")
+        base = _scan(
+            spark, path, base_files, _table_schema(spark, path, base_files, recorded)
+        )
+        plan, obs, schema = _merge_plan(base, changeset, keys, base_v + 1)
+        names = _stage(
+            plan, path, target_files, routed=True,
+            verify=lambda: _reject_duplicate_keys(obs.get["dup"], keys),
+        )
+        adds = [n for n in names if not n.startswith("_cdf/")]
+        cdf = [n for n in names if n.startswith("_cdf/")]
+        observed = obs.get
+        metrics = {
+            "rows_updated": observed["updated"],
+            "rows_inserted": observed["inserted"],
+            "files_added": len(adds),
+            "bytes_added": _bytes(path, adds),
+            "files_removed": len(base_files),
+            "bytes_removed": _bytes(path, base_files),
+            "cdf_files_added": len(cdf),
+            "cdf_bytes_added": _bytes(path, cdf),
+        }
+        try:
+            _try_commit(
+                path, base_v + 1,
+                {"op": "MERGE", "add": adds, "remove": base_files, "cdf": cdf,
+                 "schema": _record(schema),
+                 "metrics": metrics, **(meta or {})},
+            )
+            return base_v + 1
+        except CommitConflict:
+            _discard(path, names)  # lost attempt's files are garbage
+            continue
+    raise CommitConflict(f"merge lost {max_retries} races on {path}")
+
+
+def _merge_plan(base: DataFrame, changeset: DataFrame, keys: list[str], version: int):
+    """The one-join MERGE plan → (rows to stage, observation, merged
+    table schema).
+
+    Staged row layout: route, ``_change_type``, ``_commit_version``,
+    then the merged table's columns (snapshot columns, then the
+    changeset's new ones, types as ``unionByName`` widens them). The
+    changeset's per-key row count is a window on the join key, so it
+    shares the join's exchange. The row images are one SQL expression:
+    built column by column they cost ~2k Py4J calls per merge."""
+    from pyspark.sql import Observation, Window
     from pyspark.sql import functions as F
 
-    dupes = (
-        changeset.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > 1)
-        .limit(1)
-        .collect()
+    from azuredataengineering_deeplearning_spark.functions.strings import sql_ident
+
+    table = base.unionByName(changeset, allowMissingColumns=True).schema
+    # each side's columns renamed positionally: name → (column, type)
+    sides = {
+        side: {f.name: (f"__{side}{i}", f.dataType) for i, f in enumerate(df.schema)}
+        for side, df in (("b", base), ("c", changeset))
+    }
+    b = base.toDF(*[n for n, _ in sides["b"].values()]).withColumn(
+        "__in_b", F.lit(True)
     )
-    if dupes:
-        key_vals = {k: dupes[0][k] for k in keys}
+    c_keys = [F.col(sides["c"][k][0]) for k in keys]
+    c = changeset.toDF(*[n for n, _ in sides["c"].values()]).withColumn(
+        "__n", F.count(F.lit(1)).over(Window.partitionBy(*c_keys))
+    )
+    joined = b.join(
+        c, [F.col(sides["b"][k][0]) == ck for k, ck in zip(keys, c_keys)], "full_outer"
+    )
+    obs = Observation()
+    joined = joined.observe(
+        obs,
+        F.count_if(F.col("__in_b").isNotNull() & F.col("__n").isNotNull()).alias("updated"),
+        F.count_if(F.col("__in_b").isNull() & F.col("__n").isNotNull()).alias("inserted"),
+        F.max(
+            F.when(
+                F.col("__n").isNotNull(),
+                F.struct(F.col("__n"), *[ck.alias(k) for k, ck in zip(keys, c_keys)]),
+            )
+        ).alias("dup"),
+    )
+
+    def image(side: str, change: str | None = None) -> str:
+        """One staged row of ``side``: a data row, or with ``change`` (a
+        SQL expression) a change row."""
+        values = []
+        for f in table.fields:
+            col, typ = sides[side].get(f.name, ("NULL", None))
+            if typ != f.dataType:
+                col = f"CAST({col} AS {f.dataType.simpleString()})"
+            values.append(f"{col} AS {sql_ident(f.name)}")
+        route, cv = ("data", "NULL") if change is None else ("cdf", version)
+        return (
+            f"struct('{route}' AS {_ROUTE}, CAST({change or 'NULL'} AS STRING) AS "
+            f"_change_type, CAST({cv} AS INT) AS _commit_version, {', '.join(values)})"
+        )
+
+    in_b, in_c = "__in_b IS NOT NULL", "__n IS NOT NULL"
+    pre, post = "'update_preimage'", f"IF({in_b}, 'update_postimage', 'insert')"
+    rows = [
+        f"IF({in_c}, {image('c')}, {image('b')})",
+        f"IF({in_b} AND {in_c}, {image('b', pre)}, NULL)",
+        f"IF({in_c}, {image('c', post)}, NULL)",
+    ]
+    staged = joined.selectExpr(
+        f"inline(filter(array({', '.join(rows)}), r -> r IS NOT NULL))"
+    )
+    return staged, obs, table
+
+
+def _reject_duplicate_keys(dup, keys: list[str]) -> None:
+    """``dup`` is the observed max (count, key...) over changeset rows."""
+    if dup is not None and dup["__n"] > 1:
+        key_vals = {k: dup[k] for k in keys}
         raise ValueError(
             f"merge changeset has multiple rows for key {key_vals}; "
             "MERGE requires at most one source row per key "
             "(deduplicate/pre-aggregate the changeset first)"
         )
-    for _ in range(max_retries):
-        base_files, base_v = snapshot_files(path)
-        if base_v < 0:
-            raise FileNotFoundError(f"merge target {path} has no commits")
-        base = spark.read.parquet(*[os.path.join(path, f) for f in base_files])
-        merged = base.join(changeset, keys, "left_anti").unionByName(
-            changeset, allowMissingColumns=True
-        )
-        names = _stage(merged, path, target_files)
-        # CDF: preimages = matched base rows; post/insert = changeset rows
-        pre = base.join(changeset.select(*keys).distinct(), keys, "left_semi")
-        matched_keys = pre.select(*keys).distinct()
-        post = changeset.join(matched_keys, keys, "left_semi").withColumn(
-            "_change_type", F.lit("update_postimage")
-        )
-        ins = changeset.join(matched_keys, keys, "left_anti").withColumn(
-            "_change_type", F.lit("insert")
-        )
-        cdf = (
-            pre.withColumn("_change_type", F.lit("update_preimage"))
-            .unionByName(post, allowMissingColumns=True)
-            .unionByName(ins, allowMissingColumns=True)
-            # stamped into the FILE so streaming CDF consumers can keep
-            # each key's newest image when a micro-batch spans commits
-            # (a lost commit race deletes and restages with the new
-            # version, so the stamp always matches the claimed commit)
-            .withColumn("_commit_version", F.lit(base_v + 1))
-        )
-        cdf_names = _stage(cdf, path, None, subdir="_cdf")
-        try:
-            _try_commit(
-                path, base_v + 1,
-                {"op": "MERGE", "add": names, "remove": base_files,
-                 "cdf": cdf_names, **(meta or {})},
-            )
-            return base_v + 1
-        except CommitConflict:
-            for n in names + cdf_names:  # lost attempt's files are garbage
-                os.remove(os.path.join(path, n))
-            continue
-    raise CommitConflict(f"merge lost {max_retries} races on {path}")
+
+
+def _bytes(path: str, names: list[str]) -> int:
+    return sum(os.path.getsize(os.path.join(path, n)) for n in names)
 
 
 def read_changes(
@@ -438,7 +659,9 @@ def read_changes(
     """Change-data-feed read: the per-row changes recorded by MERGE
     commits in [from_version, to_version], each tagged with
     ``_change_type`` and ``_commit_version`` — the incremental feed a
-    downstream table consumes instead of re-diffing snapshots."""
+    downstream table consumes instead of re-diffing snapshots. Change
+    files are read with their commit's recorded schema (no Spark job
+    before an action)."""
     from functools import reduce
 
     from pyspark.sql import functions as F
@@ -448,8 +671,12 @@ def read_changes(
         if v < from_version or (to_version is not None and v > to_version):
             continue
         c = _read_commit(path, v)
-        if c.get("cdf"):
-            part = spark.read.parquet(*[os.path.join(path, f) for f in c["cdf"]])
+        schema = _struct(c.get("schema"))
+        # a MERGE that changed no row writes no change file: empty part
+        if c.get("cdf") or ("cdf" in c and schema is not None):
+            if schema is not None:
+                schema = schema.add("_change_type", "string")
+            part = _scan(spark, path, c["cdf"], schema)
             # older CDF files predate the embedded stamp; either way the
             # authoritative version is the commit being replayed
             parts.append(part.withColumn("_commit_version", F.lit(v)))
@@ -475,20 +702,27 @@ def compact(
     :func:`read_skipping` reads them conservatively. ``zorder_by``
     range-partitions + sorts the rewrite on those columns (OPTIMIZE
     ZORDER BY: narrows per-file min/max so ``stats_cols`` skipping
-    prunes aggressively — pass both)."""
-    files, v = snapshot_files(path)
+    prunes aggressively — pass both). A lost version race deletes the
+    rewritten files and raises :class:`CommitConflict`."""
+    files, v, recorded = _snapshot(path)
     if not files:
         raise FileNotFoundError(f"nothing to compact in {path}")
-    df = spark.read.parquet(*[os.path.join(path, f) for f in files])
+    schema = _table_schema(spark, path, files, recorded)
+    df = _scan(spark, path, files, schema)
     if zorder_by:
         df = df.repartitionByRange(target_files, *zorder_by).sortWithinPartitions(
             *zorder_by
         )
     names = _stage(df, path, target_files)
-    actions = {"op": "COMPACT", "add": names, "remove": files}
-    if stats_cols:
-        actions["stats"] = _collect_stats(spark, path, names, stats_cols)
-    _try_commit(path, v + 1, actions)
+    try:
+        actions = {"op": "COMPACT", "add": names, "remove": files,
+                   "schema": _record(schema)}
+        if stats_cols:
+            actions["stats"] = _collect_stats(spark, path, names, stats_cols, schema)
+        _try_commit(path, v + 1, actions)
+    except BaseException:
+        _discard(path, names)  # e.g. a lost race: the rewrite is garbage
+        raise
     return v + 1
 
 
@@ -567,16 +801,21 @@ def _stat_encode(v, side: str | None = None):
 
 
 def _collect_stats(
-    spark: SparkSession, path: str, names: list[str], stats_cols: list[str]
+    spark: SparkSession,
+    path: str,
+    names: list[str],
+    stats_cols: list[str],
+    schema: StructType,
 ) -> dict:
     """Per-file min/max for ``stats_cols`` — ONE job over the staged
     files grouped by ``input_file_name`` (no per-file driver loop).
     Values are encoded JSON-safe (date/timestamp/decimal columns would
     otherwise make ``json.dump`` raise AFTER staging, leaking orphaned
-    data files with no commit)."""
+    data files with no commit). ``schema`` is the staged frame's, so the
+    scan needs no footer job."""
     from pyspark.sql import functions as F
 
-    df = spark.read.parquet(*[os.path.join(path, n) for n in names])
+    df = _scan(spark, path, names, schema)
     agg = (
         df.withColumn("__f", F.input_file_name())
         .groupBy("__f")
@@ -610,17 +849,7 @@ def append_with_stats(
     :func:`read_skipping`. Stage once, stat in one job, commit."""
     os.makedirs(path, exist_ok=True)
     names = _stage(df, path, target_files)
-    stats = _collect_stats(df.sparkSession, path, names, stats_cols)
-    for _ in range(10):
-        _, v = snapshot_files(path)
-        try:
-            _try_commit(
-                path, v + 1, {"op": "APPEND", "add": names, "stats": stats}
-            )
-            return v + 1
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"append lost 10 races on {path}")
+    return _blind_commit(df, path, names, "APPEND", replace=False, stats_cols=stats_cols)
 
 
 def read_skipping(
@@ -639,7 +868,7 @@ def read_skipping(
     newest stats entry."""
     from pyspark.sql import functions as F
 
-    live, _ = snapshot_files(path, version)
+    live, _, recorded = _snapshot(path, version)
     stats = _replay_stats(path, version)
     q_lo, q_hi = _stat_encode(lo), _stat_encode(hi)
     keep, skipped = [], 0
@@ -656,7 +885,7 @@ def read_skipping(
     if not keep:
         empty = read(spark, path, version).filter(F.lit(False))
         return empty, {"scanned": 0, "skipped": skipped}
-    df = spark.read.parquet(*[os.path.join(path, f) for f in keep]).filter(
+    df = _scan(spark, path, keep, _struct(recorded)).filter(
         F.col(column).between(lo, hi)
     )
     return df, {"scanned": len(keep), "skipped": skipped}
@@ -688,7 +917,7 @@ def read_skipping_multi(
     all ranges. Same contract as :func:`read_skipping`, conjunctive."""
     from pyspark.sql import functions as F
 
-    live, _ = snapshot_files(path, version)
+    live, _, recorded = _snapshot(path, version)
     stats = _replay_stats(path, version)
     enc_ranges = {
         col: (_stat_encode(lo), _stat_encode(hi))
@@ -712,7 +941,7 @@ def read_skipping_multi(
     if not keep:
         empty = read(spark, path, version).filter(F.lit(False))
         return empty, {"scanned": 0, "skipped": skipped}
-    df = spark.read.parquet(*[os.path.join(path, f) for f in keep])
+    df = _scan(spark, path, keep, _struct(recorded))
     for col, (lo, hi) in ranges.items():
         df = df.filter(F.col(col).between(lo, hi))
     return df, {"scanned": len(keep), "skipped": skipped}
@@ -738,7 +967,7 @@ def clone(
     from the moment it exists. Returns the committed version (0)."""
     import shutil
 
-    files, v = snapshot_files(src, version)
+    files, v, schema = _snapshot(src, version)
     if not files:
         raise FileNotFoundError(f"no committed data in {src} at {version}")
     if os.path.isdir(_log_dir(dst)) and _versions(dst):
@@ -754,7 +983,7 @@ def clone(
         names = [os.path.abspath(os.path.join(src, f)) for f in files]
     _try_commit(
         dst, 0,
-        {"op": "CLONE", "add": names,
+        {"op": "CLONE", "add": names, "schema": schema,
          "source": os.path.abspath(src), "source_version": v,
          "deep": deep},
     )
@@ -768,13 +997,13 @@ def restore(path: str, version: int) -> int:
     itself is time-travelable, and nothing is deleted (the rolled-back
     files remain reachable for readers of intermediate versions until
     VACUUM). Returns the new version."""
-    target_files, tv = snapshot_files(path, version)
+    target_files, tv, schema = _snapshot(path, version)
     if tv != version:
         raise FileNotFoundError(f"version {version} not found in {path}")
     current, cv = snapshot_files(path)
     _try_commit(
         path, cv + 1,
         {"op": "RESTORE", "add": target_files, "remove": current,
-         "restored_version": version},
+         "schema": schema, "restored_version": version},
     )
     return cv + 1

@@ -105,6 +105,60 @@ def test_schema_drift_reconcile(spark, batches):
     assert old_r1.NewAttr is None
 
 
+def test_two_column_key_row_fates(spark):
+    """Every SCD2 row fate on a two-column natural key, against the
+    exact expected table: history passes through, an unchanged row and
+    an absent key stay current, a changed row and a NULL→value change
+    expire and insert, a brand-new key (sharing one key part with an
+    existing row) inserts."""
+    schema = "region string, id long, status string, ts timestamp"
+    t = M.initial_load(
+        spark.createDataFrame(
+            [
+                ("eu", 1, "ok", _ts("2024-01-01")),
+                ("eu", 2, None, _ts("2024-01-01")),
+                ("us", 1, "ok", _ts("2024-01-01")),
+                ("us", 2, "ok", _ts("2024-01-01")),
+            ],
+            schema,
+        ),
+        ["region", "id"],
+        "ts",
+    )
+    old = t.filter("region = 'us' AND id = 2").withColumn(
+        "status", F.lit("old")
+    ).withColumn("expirationDate", F.lit(20231231)).withColumn(
+        "currentVersion", F.lit(0).cast("tinyint")
+    )
+    t = t.unionByName(old)  # a history row
+    cs = spark.createDataFrame(
+        [
+            ("eu", 1, "ok", _ts("2024-02-10")),      # unchanged
+            ("eu", 2, "set", _ts("2024-02-10")),     # NULL -> value
+            ("us", 1, "moved", _ts("2024-02-10")),   # changed
+            ("eu", 3, "ok", _ts("2024-02-10")),      # brand-new key
+        ],
+        schema,
+    )
+    out = M.apply_changeset(t, cs, ["region", "id"], "ts")
+    assert out.columns == t.columns
+    validate_scd2(out, ["region", "id"])
+    got = {
+        (r.region, r.id, r.status, r.effectiveDate, r.expirationDate, r.currentVersion)
+        for r in out.collect()
+    }
+    assert got == {
+        ("eu", 1, "ok", 20240101, 20991231, 1),
+        ("eu", 2, None, 20240101, 20240209, 0),
+        ("eu", 2, "set", 20240210, 20991231, 1),
+        ("us", 1, "ok", 20240101, 20240209, 0),
+        ("us", 1, "moved", 20240210, 20991231, 1),
+        ("us", 2, "ok", 20240101, 20991231, 1),
+        ("us", 2, "old", 20240101, 20231231, 0),
+        ("eu", 3, "ok", 20240210, 20991231, 1),
+    }
+
+
 def test_shrink_types_plan(spark):
     df = spark.createDataFrame(
         [(1, 100, 40000, 3_000_000_000)], "a long, b long, c long, d long"

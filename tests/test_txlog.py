@@ -12,6 +12,36 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, "k long, v string")
 
 
+def _assert_no_orphans(p):
+    """Every data and change file on disk is referenced by a commit, and
+    no staging directory is left."""
+    referenced = set()
+    for v in TX._versions(p):
+        c = TX._read_commit(p, v)
+        referenced |= set(c.get("add", [])) | set(c.get("cdf", []))
+    on_disk = {f for f in os.listdir(p) if f.startswith("data_")}
+    cdf_dir = os.path.join(p, "_cdf")
+    if os.path.isdir(cdf_dir):
+        on_disk |= {f"_cdf/{f}" for f in os.listdir(cdf_dir)}
+    assert on_disk <= referenced, on_disk - referenced
+    assert not [f for f in os.listdir(p) if f.startswith("_stage_")]
+
+
+def _jobs(spark, fn):
+    """(fn's result, number of Spark jobs fn launched)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"txlog-guard-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_append_and_snapshot_read(spark, tmp_path):
     p = str(tmp_path / "t")
     v0 = TX.append(_df(spark, [(1, "a")]), p)
@@ -231,11 +261,13 @@ def test_merge_rejects_duplicate_key_changeset(spark, tmp_path):
     silently insert duplicates with mis-paired CDF images."""
     p = str(tmp_path / "t")
     TX.append(_df(spark, [(1, "a")]), p)
-    with pytest.raises(ValueError, match="multiple rows"):
-        TX.merge(spark, p, _df(spark, [(1, "x"), (1, "y")]), ["k"])
-    # table unchanged, no extra commit
+    with pytest.raises(ValueError, match=r"multiple rows for key \{'k': 1\}"):
+        TX.merge(spark, p, _df(spark, [(1, "x"), (1, "y"), (2, "z")]), ["k"])
+    # table unchanged, no extra commit, nothing staged left behind
     assert {(r.k, r.v) for r in TX.read(spark, p).collect()} == {(1, "a")}
     assert len(TX.history(p)) == 1
+    _assert_no_orphans(p)
+    assert not os.path.exists(os.path.join(p, "_cdf"))
 
 
 def test_vacuum_spares_young_unreferenced_files(spark, tmp_path):
@@ -473,3 +505,202 @@ def test_compact_zorder_tightens_skipping(spark, tmp_path):
     assert plain_stats["skipped"] == 0      # every file spans the range
     assert zz_stats["skipped"] >= 2         # range layout prunes files
     assert zz_stats["scanned"] == 1
+
+
+def test_reads_launch_no_job_and_merge_at_most_four(spark, tmp_path):
+    """The recorded schema spares every read its footer-inference job,
+    and MERGE with its change feed is one plan: the snapshot and the
+    changeset shuffle once each, then one write."""
+    p = str(tmp_path / "t")
+    TX.overwrite(_df(spark, [(i, "a") for i in range(50)]), p)
+    v, merge_jobs = _jobs(
+        spark, lambda: TX.merge(spark, p, _df(spark, [(3, "b"), (70, "c")]), ["k"])
+    )
+    assert merge_jobs <= 4
+    snap, read_jobs = _jobs(spark, lambda: TX.read(spark, p))
+    changes, cdf_jobs = _jobs(spark, lambda: TX.read_changes(spark, p, v, v))
+    assert (read_jobs, cdf_jobs) == (0, 0)
+    assert snap.count() == 51
+    assert {(r.k, r._change_type) for r in changes.collect()} == {
+        (3, "update_preimage"), (3, "update_postimage"), (70, "insert")
+    }
+
+
+def test_merge_commit_records_operation_metrics(spark, tmp_path):
+    p = str(tmp_path / "t")
+    TX.overwrite(_df(spark, [(1, "a"), (2, "b"), (3, "c")]), p)
+    TX.merge(spark, p, _df(spark, [(2, "b2"), (3, "c2"), (4, "d")]), ["k"])
+    h = TX.history(p)[-1]
+    c = TX._read_commit(p, h["version"])
+    m = h["metrics"]
+    assert (m["rows_updated"], m["rows_inserted"]) == (2, 1)
+    assert (h["n_added"], h["n_removed"]) == (m["files_added"], m["files_removed"])
+    size = lambda names: sum(os.path.getsize(os.path.join(p, n)) for n in names)
+    assert m["bytes_added"] == size(c["add"]) > 0
+    assert m["cdf_bytes_added"] == size(c["cdf"]) > 0
+    assert m["bytes_removed"] == size(TX._read_commit(p, 0)["add"]) > 0
+    assert TX.history(p)[0]["metrics"] == {}  # only MERGE records them
+
+
+def test_merge_matches_replay_over_many_merges(spark, tmp_path):
+    """Snapshot and change feed of a run of random merges (updates,
+    inserts, a NULL key) equal a dict replay."""
+    import random
+
+    rng = random.Random(7)
+    p = str(tmp_path / "t")
+    table = {k: f"v{k}" for k in range(40)}
+    TX.overwrite(_df(spark, list(table.items())), p)
+    for step in range(6):
+        keys = rng.sample(range(60), 12)
+        rows = [(k, f"s{step}_{k}") for k in keys] + [(None, f"null{step}")]
+        v = TX.merge(spark, p, _df(spark, rows), ["k"])
+        want = set()
+        for k, val in rows:
+            if k is not None and k in table:
+                want |= {(k, table[k], "update_preimage"), (k, val, "update_postimage")}
+            else:
+                want.add((k, val, "insert"))
+            if k is not None:
+                table[k] = val
+        got = {(r.k, r.v, r._change_type) for r in TX.read_changes(spark, p, v, v).collect()}
+        assert got == want
+        snap = {(r.k, r.v) for r in TX.read(spark, p).collect()}
+        assert snap == set(table.items()) | {(None, f"null{i}") for i in range(step + 1)}
+
+
+def test_lost_race_leaves_no_staged_files(spark, tmp_path, monkeypatch):
+    """overwrite and compact whose next version another writer already
+    claimed: compact deletes its rewrite and raises, overwrite claims
+    again against the fresh snapshot and deletes its files only once it
+    runs out of retries."""
+    p = str(tmp_path / "t")
+    TX.overwrite(_df(spark, [(1, "a")]), p)
+    TX.append(_df(spark, [(2, "b")]), p)
+    real = TX._try_commit
+
+    def claimed_first(path, version, actions):
+        real(path, version, {"op": "APPEND", "add": []})  # the other writer
+        return real(path, version, actions)
+
+    monkeypatch.setattr(TX, "_try_commit", claimed_first)
+    with pytest.raises(TX.CommitConflict):
+        TX.compact(spark, p, target_files=1)
+    with pytest.raises(TX.CommitConflict):
+        TX.overwrite(_df(spark, [(9, "z")]), p)
+    _assert_no_orphans(p)
+    assert {r.k for r in TX.read(spark, p).collect()} == {1, 2}
+
+    lost = []
+
+    def claimed_once(path, version, actions):
+        if not lost:
+            lost.append(version)
+            real(path, version, {"op": "APPEND", "add": []})
+        return real(path, version, actions)
+
+    monkeypatch.setattr(TX, "_try_commit", claimed_once)
+    v = TX.overwrite(_df(spark, [(3, "c")]), p)
+    assert v == lost[0] + 1
+    assert {r.k for r in TX.read(spark, p).collect()} == {3}
+    _assert_no_orphans(p)
+
+
+def test_time_travel_across_column_adding_merge(spark, tmp_path):
+    p = str(tmp_path / "t")
+    TX.overwrite(_df(spark, [(1, "a")]), p)
+    TX.merge(
+        spark, p,
+        spark.createDataFrame([(2, "b", 0.5)], "k long, v string, score double"),
+        ["k"],
+    )
+    assert TX.read(spark, p, version=0).columns == ["k", "v"]
+    assert TX.read(spark, p, version=1).columns == ["k", "v", "score"]
+    assert {tuple(r) for r in TX.read(spark, p, version=1).collect()} == {
+        (1, "a", None), (2, "b", 0.5)
+    }
+
+
+def test_engine_columns_never_surface(spark, tmp_path):
+    """MERGE data files also hold the change columns (one write routes
+    data and change rows); no read shows them, nor the route column."""
+    p = str(tmp_path / "t")
+    TX.overwrite(_df(spark, [(1, "a"), (2, "b")]), p)
+    TX.merge(spark, p, _df(spark, [(2, "b2"), (3, "c")]), ["k"])
+    data_file = os.path.join(p, TX._read_commit(p, 1)["add"][0])
+    assert "_change_type" in spark.read.parquet(data_file).columns
+    assert TX.read(spark, p).columns == ["k", "v"]
+    assert TX.read(spark, p, merge_schema=True).columns == ["k", "v"]
+    assert TX.read_changes(spark, p).columns == ["k", "v", "_change_type", "_commit_version"]
+    TX.compact(spark, p, target_files=1)
+    assert TX.read(spark, p).columns == ["k", "v"]
+    assert "_change_type" not in spark.read.parquet(
+        os.path.join(p, TX._read_commit(p, 2)["add"][0])
+    ).columns
+
+
+def test_schema_survives_checkpoint_clean_restore_and_clone(spark, tmp_path):
+    p = str(tmp_path / "t")
+    TX.overwrite(_df(spark, [(1, "a")]), p)                           # v0
+    TX.merge(
+        spark, p,
+        spark.createDataFrame([(2, "b", 7)], "k long, v string, n int"),
+        ["k"],
+    )                                                                 # v1
+    TX.checkpoint_log(p)
+    TX.clean_log(p, dry_run=False)
+    df, jobs = _jobs(spark, lambda: TX.read(spark, p))
+    assert jobs == 0 and df.columns == ["k", "v", "n"]
+    assert df.count() == 2
+
+    TX.overwrite(_df(spark, [(5, "e")]), p)                           # v2
+    TX.restore(p, 1)                                                  # v3
+    assert TX.read(spark, p).columns == ["k", "v", "n"]
+    assert TX.history(p)[-1]["op"] == "RESTORE"
+
+    for deep in (True, False):
+        dst = str(tmp_path / f"clone_{deep}")
+        TX.clone(spark, p, dst, version=2, deep=deep)
+        df, jobs = _jobs(spark, lambda: TX.read(spark, dst))
+        assert jobs == 0 and df.columns == ["k", "v"]
+        assert [tuple(r) for r in df.collect()] == [(5, "e")]
+
+
+def test_old_format_commits_still_read(spark, tmp_path):
+    """A table whose commits predate the schema field (hand-written
+    old-format log) reads by inference, and merges into it record the
+    schema from then on."""
+    import json
+    import shutil
+
+    p = str(tmp_path / "t")
+    raw = str(tmp_path / "raw")
+    _df(spark, [(1, "a"), (2, "b")]).coalesce(1).write.parquet(raw)
+    os.makedirs(os.path.join(p, "_txlog"))
+    part = [f for f in os.listdir(raw) if f.endswith(".parquet")][0]
+    shutil.copyfile(os.path.join(raw, part), os.path.join(p, "data_old_0.parquet"))
+    with open(os.path.join(p, "_txlog", "00000000.json"), "w") as f:
+        json.dump({"version": 0, "ts": 0.0, "op": "APPEND", "add": ["data_old_0.parquet"]}, f)
+    assert {(r.k, r.v) for r in TX.read(spark, p).collect()} == {(1, "a"), (2, "b")}
+    TX.merge(spark, p, _df(spark, [(2, "b2")]), ["k"])
+    assert "schema" in TX._read_commit(p, 1)
+    assert {(r.k, r.v) for r in TX.read(spark, p).collect()} == {(1, "a"), (2, "b2")}
+    assert {r._change_type for r in TX.read_changes(spark, p).collect()} == {
+        "update_preimage", "update_postimage"
+    }
+
+
+def test_merge_of_empty_changeset_has_empty_change_feed(spark, tmp_path):
+    p = str(tmp_path / "t")
+    TX.overwrite(_df(spark, [(1, "a")]), p)
+    v = TX.merge(spark, p, _df(spark, []), ["k"])
+    assert {(r.k, r.v) for r in TX.read(spark, p).collect()} == {(1, "a")}
+    ch = TX.read_changes(spark, p, v, v)
+    assert ch.columns == ["k", "v", "_change_type", "_commit_version"]
+    assert ch.count() == 0
+    # nothing into nothing leaves a snapshot without files: still a table
+    q = str(tmp_path / "empty")
+    TX.overwrite(_df(spark, []), q)
+    TX.merge(spark, q, _df(spark, []), ["k"])
+    assert TX.read(spark, q).columns == ["k", "v"]
+    assert TX.read(spark, q).count() == 0
