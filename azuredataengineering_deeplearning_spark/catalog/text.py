@@ -306,8 +306,10 @@ _CLUSTER_SQL = f"""
 def dedup_clusters(spark, sf_dir):
     """Near-dup pairs resolved to connected components: (node,
     cluster_id = min reachable doc_id). The oracle walks the same pair
-    set with a recursive CTE; the engine uses distributed min-label
-    propagation (O(diameter) shuffles — see dedup.resolve_clusters)."""
+    set with a recursive CTE; the engine collects a pair list this small
+    in one bounded collect and finishes with a driver union-find
+    (distributed label rounds run only above the driver bound — see
+    dedup.resolve_clusters)."""
     d = read_parquet(spark, f"{sf_dir}/documents.parquet")
     pairs = DD.minhash_near_duplicates(d, "doc_id", "text", threshold=0.8)
     return DD.resolve_clusters(pairs)

@@ -25,6 +25,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from azuredataengineering_deeplearning_spark.sources.readers import local_rows_df
 from azuredataengineering_deeplearning_spark.operators.text import (
@@ -601,257 +602,180 @@ def simhash_near_duplicates(
     )
 
 
+# Largest cluster graph (in edges) the driver union-find finishes; a
+# bigger one first runs distributed label rounds. ~50k (id, id) rows is
+# ~1 MB on the driver. Tests monkeypatch it to force the rounds.
+_DRIVER_EDGES = 50_000
+
+
+def _union_find(edges) -> dict:
+    """Driver union-find over (a, b) rows → {node: root}; the root of a
+    set is its smallest member (unions hang the larger root under the
+    smaller one)."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]  # path halving
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
+def _label_round(edges: DataFrame, labels: DataFrame | None) -> DataFrame:
+    """One distributed min-label round, checkpointed. First a hook: every
+    label p takes H(p), the smallest of its own label and the labels
+    adjacent to its class (the nodes labelled p). Then every node jumps
+    twice, ``label <- H(H(label))``. Hooking moves a whole class in one
+    round once any member touches a smaller label; plain neighbour-min
+    propagation moves a label one edge per round, which on a chain whose
+    ids are shuffled is O(diameter) rounds. The first round (``labels``
+    None: every label is its node) is the neighbour min alone, one
+    aggregation."""
+    if labels is None:
+        return (
+            edges.groupBy(F.col("__src").alias("node"))
+            .agg(F.min(F.least("__src", "__dst")).alias("label"))
+            .localCheckpoint(eager=True)
+        )
+    nbr = (
+        edges.join(
+            labels.select(F.col("node").alias("__dst"), F.col("label").alias("__nl")),
+            "__dst",
+        )
+        .groupBy(F.col("__src").alias("node"))
+        .agg(F.min("__nl").alias("__nbr"))
+    )
+    hook = (
+        labels.join(nbr, "node")
+        .select(F.col("label"), F.col("__nbr").alias("__h"))
+        .union(labels.select(F.col("node").alias("label"), F.col("label").alias("__h")))
+        .groupBy("label")
+        .agg(F.min("__h").alias("__h"))
+    )
+
+    def jump(df: DataFrame) -> DataFrame:
+        return df.join(hook, "label").select("node", F.col("__h").alias("label"))
+
+    return jump(jump(labels)).localCheckpoint(eager=True)
+
+
+def _class_surplus(labels: DataFrame) -> int:
+    """Distinct labels minus fixed points (label == node): a lower bound
+    on the cluster graph's edge count. A component split into j classes
+    has at least j - 1 cluster edges, and its minimum is a fixed point,
+    so components number at most the fixed points. One aggregation over
+    the label table, where the cluster graph costs two joins over the
+    edges: on a chain with sorted ids every label stays distinct until
+    it reaches the chain's minimum, so only the last rounds build the
+    graph."""
+    fixed = F.count(F.when(F.col("label") == F.col("node"), 1))
+    return labels.agg(F.countDistinct("label") - fixed).first()[0]
+
+
+def _cluster_graph(edges: DataFrame, labels: DataFrame) -> DataFrame:
+    """Distinct (label(src), label(dst)) pairs with label(src) <
+    label(dst): the edges between label classes. The edge list is
+    symmetric, so one direction (``src < dst``) finds them all."""
+    la, lb = F.col("__a"), F.col("__b")
+    return (
+        edges.filter(F.col("__src") < F.col("__dst"))
+        .join(
+            labels.select(F.col("node").alias("__src"), F.col("label").alias("__a")),
+            "__src",
+        )
+        .join(
+            labels.select(F.col("node").alias("__dst"), F.col("label").alias("__b")),
+            "__dst",
+        )
+        .filter(la != lb)
+        .select(F.least(la, lb).alias("__a"), F.greatest(la, lb).alias("__b"))
+        .distinct()
+    )
+
+
 def resolve_clusters(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 20,
-    jump_from: int = 2,
-    frontier_threshold: int = 50_000,
-    debug_events: list | None = None,
+    pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
 ) -> DataFrame:
     """Connected components over a near-dup pair list → (node,
-    cluster_id), cluster_id = smallest reachable id.
+    cluster_id), cluster_id = smallest id in the node's component.
 
-    ``debug_events`` (tests/probes only): pass a list to receive gear
-    transitions — ``"tail_engage"`` / ``"tail_bail"`` /
-    ``"tail_converged"`` / ``"converged"`` — so the bail path can be
-    pinned by a test instead of inferred from timings.
+    Every node carries a label, at first itself. The *cluster graph* is
+    the set of edges between label classes: before any round, the edges
+    themselves (``src <= dst``, so self-loop nodes are kept); after a
+    round, the distinct (label(src), label(dst)) pairs with label(src) <
+    label(dst). Each pass collects the cluster graph with
+    ``limit(_DRIVER_EDGES + 1)``. If it fits, a driver union-find with
+    min roots finishes the job; if not, one distributed round (hook plus
+    pointer jumps, :func:`_label_round`) runs and the pass repeats. After a round whose labels already prove the cluster
+    graph too big (:func:`_class_surplus`, a lower bound on its size,
+    over ``_DRIVER_EDGES``), the next round runs without building it.
 
-    ADAPTIVE min-label propagation in three gears:
+    Correctness. A round only lowers a label, and only to the label of
+    a node in the same component (a neighbour's, a neighbour of its
+    class, or a label's label), so every label is a node of its own
+    component, and the component's minimum m keeps label m. A component with no
+    cross-class edge is therefore one class labelled m. In any other
+    component every class has a cross edge (the component is connected),
+    so each class label is a union-find node, and the union-find root of
+    the component is its smallest label, m.
 
-    1. PLAIN rounds (first ``jump_from``): one edge join + aggregate
-       per round — near-dup graphs are unions of small cliques and
-       converge here, so the common case never pays more.
-    2. POINTER-JUMPING rounds (path halving, ``label <- label[label]``)
-       if labels still change: label information travels ~2x farther
-       per round — O(log diameter) total instead of O(diameter), so a
-       1000-node chain converges in ~13 rounds where plain propagation
-       needed 1000 and silently returned UNCONVERGED labels at the
-       ``max_iter`` backstop.
-    3. DRIVER-TAIL rounds once the changed set fits under
-       ``frontier_threshold``: after the clique mass converges, only a
-       tiny frontier (chain/tail structures) is still moving, yet a
-       full round re-shuffles EVERY label. Instead the frontier is
-       collected and each tail round is two broadcast-hash scans (edge
-       neighbors of the frontier + pointer-parents of the frontier) —
-       no label-table shuffle, no per-round checkpoint; improvements
-       accumulate in a driver-side overlay applied once at the end.
-       Candidate generation is complete w.r.t. the frontier (graph
-       neighbors via the edge join; pointer-parents via the label join
-       plus a driver pass over the overlay), and min-label propagation
-       is monotone, so the overlay converges to the same fixpoint. If
-       a round's candidate set outgrows the threshold (hub node), it
-       bails back to distributed rounds — FLUSHING the overlay into
-       the label table first (a kept-but-unapplied override goes stale
-       the moment distributed rounds resume, and could overwrite a
-       smaller label at the final merge, splitting a component); the
-       final merge likewise takes ``least(override, label)``, never
-       coalesce, because min-label propagation only moves labels down.
+    Termination. A cross edge (u, v) with label(u) < label(v) lowers
+    label(v) in the next round. So while the cluster graph is non-empty
+    (a skipped collect means it is), some label strictly drops, and
+    labels are node ids bounded below: the loop ends without an
+    iteration cap. Hooking keeps the round count near O(log diameter)
+    on chains, whatever the order of their ids (a 300-node chain takes
+    7 rounds to a single class); near-dup graphs (unions of small
+    cliques) fit the driver bound after at most one round.
 
-    Distributed rounds cut lineage with ``localCheckpoint`` so plans
-    don't snowball. ``resolve_clusters_star`` remains the alternative
-    with the same contract (alternating large-star / small-star
-    contraction)."""
+    Driver bound. No collect holds more than ``_DRIVER_EDGES + 1`` rows
+    (~1 MB), whatever the hub degree or component size.
+
+    Pairs with a NULL id are ignored. The symmetric edge list is
+    checkpointed first, so the result never reads ``pairs`` again:
+    caches the pair plan depends on (the MinHash sketches under
+    :func:`cache_scope`) may be released as soon as this returns. If no
+    round ran, the result is a driver-local frame; otherwise the label
+    → root map is broadcast onto the checkpointed label table."""
     edges = pairs.select(F.col(id_a).alias("__src"), F.col(id_b).alias("__dst"))
     edges = (
         edges.union(
             edges.select(F.col("__dst").alias("__src"), F.col("__src").alias("__dst"))
         )
+        .dropna()
         .distinct()
         .localCheckpoint(eager=True)
     )
-    labels = (
-        edges.select(F.col("__src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-    )
     spark = pairs.sparkSession
-    lab_schema = labels.schema
-    overrides: dict = {}
-    frontier: list | None = None
-    for it in range(max_iter):
-        if frontier is not None:
-            # ---- driver-tail round: broadcast the frontier ----------
-            fr_df = local_rows_df(spark, frontier, lab_schema)
-            nbrs = (
-                edges.join(
-                    F.broadcast(
-                        fr_df.select(
-                            F.col("node").alias("__dst"),
-                            F.col("label").alias("__cand"),
-                        )
-                    ),
-                    "__dst",
-                )
-                .groupBy(F.col("__src").alias("node"))
-                .agg(F.min("__cand").alias("__cand"))
-            )
-            jumps = labels.join(
-                F.broadcast(
-                    fr_df.select(
-                        F.col("node").alias("__k"),
-                        F.col("label").alias("__cand"),
-                    )
-                ),
-                F.col("label") == F.col("__k"),
-            ).select("node", "__cand")
-            cand = (
-                nbrs.unionByName(jumps)
-                .groupBy("node")
-                .agg(F.min("__cand").alias("__cand"))
-            )
-            rows = (
-                cand.join(labels, "node")
-                .select("node", "__cand", "label")
-                .limit(frontier_threshold + 1)
-                .collect()
-            )
-            if len(rows) > frontier_threshold:
-                if debug_events is not None:
-                    debug_events.append("tail_bail")
-                # Hub blow-up: back to distributed rounds. The overlay
-                # MUST be flushed into `labels` first — distributed
-                # rounds only see base labels, so a kept-but-unapplied
-                # override would go stale, and the final merge could
-                # resurrect it over a smaller label found later
-                # (silently splitting a component). Flush with
-                # ``least`` (labels only ever decrease) and clear.
-                if overrides:
-                    ov = local_rows_df(spark, list(overrides.items()), lab_schema)
-                    labels = (
-                        labels.join(
-                            F.broadcast(ov.withColumnRenamed("label", "__ov")),
-                            "node",
-                            "left",
-                        )
-                        .select(
-                            "node",
-                            F.least(
-                                F.col("label"),
-                                F.coalesce(F.col("__ov"), F.col("label")),
-                            ).alias("label"),
-                        )
-                        .localCheckpoint(eager=True)
-                    )
-                    overrides = {}
-                frontier = None
-                continue
-            fmap = {n: l for n, l in frontier}
-            best: dict = {}
-            for r in rows:
-                cur = min(overrides.get(r["node"], r["label"]), r["label"])
-                if r["__cand"] < cur:
-                    best[r["node"]] = min(r["__cand"], best.get(r["node"], cur))
-            # pointer-parents hidden behind the overlay (their base
-            # label is stale in `labels`)
-            for u, cur in overrides.items():
-                tgt = fmap.get(cur)
-                if tgt is not None and tgt < cur and tgt < best.get(u, cur):
-                    best[u] = tgt
-            if not best:
-                if debug_events is not None:
-                    debug_events.append("tail_converged")
+    id_type = edges.schema["__src"].dataType
+    schema = StructType(
+        [StructField("node", id_type), StructField("cluster_id", id_type)]
+    )
+    labels = None
+    graph = edges.filter(F.col("__src") <= F.col("__dst"))
+    while True:
+        if graph is not None:
+            rows = graph.limit(_DRIVER_EDGES + 1).collect()
+            if len(rows) <= _DRIVER_EDGES:
                 break
-            # driver-side path compression: chase every candidate label
-            # through all mappings known so far (labels strictly
-            # decrease along a chase, so it terminates) — once the
-            # moving tail is inside the overlay this collapses it to
-            # the component min in a single round
-            merged = {**overrides, **best}
-
-            def _chase(l):
-                while True:
-                    nxt = merged.get(l)
-                    if nxt is None or nxt >= l:
-                        return l
-                    l = nxt
-
-            best = {u: _chase(l) for u, l in best.items()}
-            for u, cur in list(overrides.items()):
-                t = _chase(cur)
-                if t < cur:
-                    best[u] = min(t, best.get(u, t))
-            overrides.update(best)
-            frontier = list(best.items())
-            continue
-        # ---- distributed round --------------------------------------
-        nbr_min = (
-            edges.join(
-                labels.select(
-                    F.col("node").alias("__dst"), F.col("label").alias("__nl")
-                ),
-                "__dst",
-            )
-            .groupBy(F.col("__src").alias("node"))
-            .agg(F.min("__nl").alias("__nbr"))
-        )
-        stepped = labels.join(nbr_min, "node", "left").select(
-            "node",
-            F.least(
-                F.col("label"), F.coalesce(F.col("__nbr"), F.col("label"))
-            ).alias("label"),
-            F.col("label").alias("__old"),
-        )
-        if it < jump_from:
-            # plain round: clique-shaped graphs converge here without
-            # ever paying the jump join
-            new_labels = stepped.localCheckpoint(eager=True)
-        else:
-            # pointer jump (path halving): label <- label[label]; every
-            # label is itself a node id of the same component, so this
-            # only moves labels downward within the component. The jump
-            # table is the PREVIOUS round's checkpointed labels (already
-            # materialized) — self-joining `stepped` would recompute the
-            # neighbor-min subplan twice per round. The carried __old
-            # makes convergence detection a filter on the checkpointed
-            # frame — no extra join job per round.
-            new_labels = (
-                stepped.join(
-                    labels.select(
-                        F.col("node").alias("label"), F.col("label").alias("__ll")
-                    ),
-                    "label",
-                    "left",
-                )
-                .select(
-                    "node",
-                    F.least(
-                        F.col("label"), F.coalesce(F.col("__ll"), F.col("label"))
-                    ).alias("label"),
-                    "__old",
-                )
-                .localCheckpoint(eager=True)
-            )
-        changed_rows = (
-            new_labels.filter(F.col("label") < F.col("__old"))
-            .select("node", "label")
-            .limit(frontier_threshold + 1)
-            .collect()
-        )
-        labels = new_labels.select("node", "label")
-        if not changed_rows:
-            if debug_events is not None:
-                debug_events.append("converged")
-            break
-        if len(changed_rows) <= frontier_threshold:
-            if debug_events is not None:
-                debug_events.append("tail_engage")
-            frontier = [(r["node"], r["label"]) for r in changed_rows]
-    if overrides:
-        # ``least`` (not coalesce): min-label propagation is monotone
-        # decreasing, so an override can never legitimately be LARGER
-        # than the base label — taking the min is always safe, and it
-        # is the backstop against any stale overlay entry overwriting
-        # a smaller label found by distributed rounds.
-        ov = local_rows_df(spark, list(overrides.items()), lab_schema)
-        labels = labels.join(
-            F.broadcast(ov.withColumnRenamed("label", "__ov")), "node", "left"
-        ).select(
-            "node",
-            F.least(
-                F.col("label"), F.coalesce(F.col("__ov"), F.col("label"))
-            ).alias("label"),
+        labels = _label_round(edges, labels)
+        graph = None
+        if _class_surplus(labels) <= _DRIVER_EDGES:
+            graph = _cluster_graph(edges, labels)
+    roots = _union_find(rows)
+    if labels is None:
+        return local_rows_df(spark, roots.items(), schema)
+    if roots:
+        root_map = local_rows_df(spark, roots.items(), schema).toDF("label", "__root")
+        labels = labels.join(F.broadcast(root_map), "label", "left").select(
+            "node", F.coalesce("__root", "label").alias("label")
         )
     return labels.select(F.col("node"), F.col("label").alias("cluster_id"))
 
@@ -993,95 +917,6 @@ def incremental_dedup(
         .distinct()
     )
     return survivors, updated_store
-
-
-def _star_round(edges: DataFrame, large: bool) -> DataFrame:
-    """One large-star / small-star contraction round over a symmetric
-    (``__src``, ``__dst``) edge frame; returns the new symmetric frame."""
-    mins = edges.groupBy("__src").agg(
-        F.least(F.min("__dst"), F.first("__src")).alias("__m")
-    )
-    nbrs = edges.join(mins, "__src")
-    if large:
-        # connect every strictly-larger neighbor to the center's min
-        out = nbrs.filter(F.col("__dst") > F.col("__src")).select(
-            F.col("__dst").alias("__a"), F.col("__m").alias("__b")
-        )
-    else:
-        # connect every not-larger neighbor (and the center) to the min
-        out = nbrs.filter(F.col("__dst") <= F.col("__src")).select(
-            F.col("__dst").alias("__a"), F.col("__m").alias("__b")
-        ).union(nbrs.select(F.col("__src").alias("__a"), F.col("__m").alias("__b")))
-    out = out.filter(F.col("__a") != F.col("__b")).distinct()
-    return (
-        out.select(F.col("__a").alias("__src"), F.col("__b").alias("__dst"))
-        .union(out.select(F.col("__b").alias("__src"), F.col("__a").alias("__dst")))
-        .distinct()
-    )
-
-
-def _resolve_clusters_star(
-    pairs: DataFrame, id_a: str, id_b: str, max_iter: int
-) -> tuple[DataFrame, int]:
-    edges = pairs.select(F.col(id_a).alias("__src"), F.col(id_b).alias("__dst"))
-    nodes = (
-        edges.select(F.col("__src").alias("node"))
-        .union(edges.select(F.col("__dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    edges = (
-        edges.filter(F.col("__src") != F.col("__dst"))
-        .union(edges.select(F.col("__dst").alias("__src"), F.col("__src").alias("__dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    rounds = 0
-    for _ in range(max_iter):
-        nxt = _star_round(_star_round(edges, large=True), large=False)
-        nxt = nxt.localCheckpoint(eager=True)
-        rounds += 1
-        delta = (
-            nxt.exceptAll(edges).limit(1).count()
-            + edges.exceptAll(nxt).limit(1).count()
-        )
-        edges = nxt
-        if delta == 0:
-            break
-    # fixed point is a union of stars: every remaining edge points at the
-    # component min; isolated nodes (deduped into their center) label self
-    centers = edges.groupBy(F.col("__src").alias("node")).agg(
-        F.min("__dst").alias("cluster_id")
-    )
-    labels = nodes.join(centers, "node", "left").select(
-        "node",
-        F.least(F.coalesce(F.col("cluster_id"), F.col("node")), F.col("node")).alias(
-            "cluster_id"
-        ),
-    )
-    return labels, rounds
-
-
-def resolve_clusters_star(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 30,
-) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond") → (node, cluster_id = component min), the same contract as
-    :func:`resolve_clusters`.
-
-    Where min-label propagation needs O(diameter) rounds — fine for
-    near-dup cliques, pathological on chain graphs (template families,
-    boilerplate gradients) — star contraction halves path lengths every
-    round pair: O(log n) rounds on ANY graph shape. Each round is two
-    node-keyed shuffles; lineage is checkpoint-cut per round. Use this
-    body when component diameter is unknown; both are equivalence-tested
-    against the same oracle."""
-    labels, _ = _resolve_clusters_star(pairs, id_a, id_b, max_iter)
-    return labels
 
 
 def leakage_safe_split(

@@ -2,8 +2,9 @@
 
 Each test pins a concrete failure mode found by the round-6 advisor:
 
-1. ``resolve_clusters`` tail-gear bail kept a stale overlay that the
-   final merge could resurrect over a smaller label (component split).
+1. ``resolve_clusters`` once split the component of a two-wave
+   lollipop graph (a stale driver-side label overlay); the graph stays
+   as a regression input for both the driver and distributed paths.
 2. KQL ``prev``/``next`` self-join evaluated the row numbering in two
    plan branches; with tied sort keys the branches could disagree.
 3. ``quantile_transform`` global path dropped NULL values at the rank
@@ -24,64 +25,31 @@ from azuredataengineering_deeplearning_spark.operators import similarity as SIM
 from azuredataengineering_deeplearning_spark.sources.kql import kql_to_df
 
 
-def _union_find(edges):
-    nodes = sorted({x for e in edges for x in e})
-    parent = {n: n for n in nodes}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    return {n: find(n) for n in nodes}
-
-
 # ---------------------------------------------------------------------------
-# 1. resolve_clusters: tail-gear bail must not strand the overlay
+# 1. resolve_clusters: the two-wave lollipop on both paths
 # ---------------------------------------------------------------------------
 
-# Two-wave lollipop that drove the pre-fix kernel wrong (hub nodes kept
-# the stale override 1 instead of the true component min 0): a fast
-# seed (1) crawls a tail chain into the tail gear and writes overrides,
-# the hub (12-50/51/52) blows the candidate set -> bail, and the slow
-# seed (0) only reaches the hub via the distributed rounds AFTER the
-# bail. Pre-fix, the final coalesce resurrected the stale override.
+# Two-wave lollipop that drove an older kernel wrong (hub nodes kept a
+# stale label 1 instead of the true component min 0): a fast seed (1)
+# crawls a tail chain, the hub (12-50/51/52) widens the graph, and the
+# slow seed (0) reaches the hub only through later rounds.
 BAIL_LOLLIPOP = [
     (1, 10), (10, 11), (11, 12), (12, 50), (12, 51), (12, 52),
     (0, 100), (100, 101), (101, 102), (102, 103), (103, 1),
 ]
 
 
-@pytest.mark.slow
-def test_resolve_clusters_bail_flushes_overlay(spark):
-    pairs = spark.createDataFrame(BAIL_LOLLIPOP, "id_a long, id_b long")
-    got = {
-        r.node: r.cluster_id
-        for r in DD.resolve_clusters(
-            pairs, max_iter=60, jump_from=100, frontier_threshold=2
-        ).collect()
-    }
-    assert got == _union_find(BAIL_LOLLIPOP)
-
-
-@pytest.mark.parametrize("threshold", [1, 2, 3])
-@pytest.mark.parametrize("jump_from", [1, 100])
-def test_resolve_clusters_tiny_frontier_thresholds(spark, threshold, jump_from):
-    # sweep the gear boundaries: every (engage, bail, re-engage)
-    # interleaving over the lollipop must still match union-find
-    pairs = spark.createDataFrame(BAIL_LOLLIPOP, "id_a long, id_b long")
-    got = {
-        r.node: r.cluster_id
-        for r in DD.resolve_clusters(
-            pairs, max_iter=60, jump_from=jump_from, frontier_threshold=threshold
-        ).collect()
-    }
-    assert got == _union_find(BAIL_LOLLIPOP)
+@pytest.mark.parametrize("bound", [1, 2, 3, None])
+@pytest.mark.parametrize("shift", [1, 100])
+def test_resolve_clusters_tiny_frontier_thresholds(resolve, components, bound, shift):
+    # sweep the driver bound (the frontier threshold the driver
+    # union-find takes over at) across the lollipop's edge counts: every
+    # split between distributed rounds and the driver union-find (None:
+    # the default bound, driver only) must match the reference. The
+    # lollipop is shifted by 1 and by 100 so that the hub and seed ids
+    # interleave differently with the tail chain's ids.
+    edges = [(a + shift, b + shift) for a, b in BAIL_LOLLIPOP]
+    assert resolve(edges, bound) == components(edges)
 
 
 # ---------------------------------------------------------------------------
@@ -194,55 +162,34 @@ def test_numpy_topk_query_cap_guard(spark):
         SIM.numpy_topk(df, df, max_collect=2)
 
 
-def test_resolve_clusters_bail_trigger_observed(spark):
-    # whitebox: the hub graph must actually take the engage -> bail ->
-    # re-resolve path (not just produce right answers by luck), and the
-    # collected candidate set is bounded by frontier_threshold + 1 rows
-    # regardless of hub degree (the limit() caps the driver collect).
-    events: list = []
-    pairs = spark.createDataFrame(BAIL_LOLLIPOP, "id_a long, id_b long")
-    got = {
-        r.node: r.cluster_id
-        for r in DD.resolve_clusters(
-            pairs,
-            max_iter=60,
-            jump_from=100,
-            frontier_threshold=2,
-            debug_events=events,
-        ).collect()
-    }
-    assert "tail_engage" in events and "tail_bail" in events
-    assert got == _union_find(BAIL_LOLLIPOP)
+def test_resolve_clusters_bail_trigger_observed(resolve, components, spy_rounds):
+    # whitebox: an edge list over the driver bound must actually bail
+    # to distributed rounds (not just produce right answers by luck),
+    # and the driver only ever receives a graph within the bound
+    got = resolve(BAIL_LOLLIPOP, 2)
+    assert got == components(BAIL_LOLLIPOP)
+    assert spy_rounds["rounds"] >= 1
+    assert spy_rounds["driver_rows"] and max(spy_rounds["driver_rows"]) <= 2
 
 
-def test_resolve_clusters_hub_star_bails_and_resolves(spark):
-    # a 200-spoke hub star fed by a chain: the tail gear engages on the
-    # chain crawl, converges it driver-side, then the hub's spokes blow
-    # the candidate set (spokes all carry the hub's id as label) -> bail
-    # -> distributed rounds finish. Exactly the adversarial-hub shape
-    # SCALING.md's driver-tail bound is about.
+def test_resolve_clusters_hub_star_bails_and_resolves(resolve, components, spy_rounds):
+    # a 200-spoke hub star fed by a chain: the 232 edges overflow a
+    # 50-edge driver bound, so distributed rounds run until the cluster
+    # graph fits; the hub's spokes then carry one label and the driver
+    # finishes the chain. The adversarial-hub shape SCALING.md's driver
+    # bound is about, swept across both paths as well.
     hub = 100
     spokes = [(hub, 200_000 + i) for i in range(200)]
     chain = [(0, 300_000)] + [
         (300_000 + i, 300_001 + i) for i in range(30)
     ] + [(300_030, hub)]
     edges = spokes + chain
-    events: list = []
-    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {
-        r.node: r.cluster_id
-        for r in DD.resolve_clusters(
-            pairs,
-            max_iter=80,
-            jump_from=2,
-            frontier_threshold=50,
-            debug_events=events,
-        ).collect()
-    }
-    assert got == _union_find(edges)
-    assert all(v == 0 for v in got.values())  # one component, min id 0
-    assert "tail_engage" in events
-    assert "tail_bail" in events
+    want = components(edges)
+    assert set(want.values()) == {0}  # one component, min id 0
+    assert resolve(edges, 50) == want
+    assert spy_rounds["rounds"] >= 1 and max(spy_rounds["driver_rows"]) <= 50
+    for bound in (1, 2, 3, None):
+        assert resolve(edges, bound) == want, bound
 
 
 def test_numpy_topk_string_ids(spark):

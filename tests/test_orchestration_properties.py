@@ -149,25 +149,8 @@ def test_shrink_types_preserves_values(spark, vals):
 
 
 # ---------------------------------------------------------------------------
-# connected components vs union-find reference
+# connected components vs the reference (tests/conftest.py)
 # ---------------------------------------------------------------------------
-
-
-def _union_find_components(edges):
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    return {n: find(n) for n in parent}
 
 
 @settings(
@@ -182,19 +165,14 @@ def _union_find_components(edges):
         max_size=40,
     )
 )
-def test_resolve_clusters_matches_union_find(spark, edges):
-    from azuredataengineering_deeplearning_spark.operators import dedup as DD
-
-    pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
-    got = {
-        r.node: r.cluster_id for r in DD.resolve_clusters(pairs).collect()
-    }
-    # min-label propagation finds the same components as union-find,
-    # with min-id canonical labels (the property the canonical-survivor
-    # dedup depends on)
-    want = _union_find_components(edges)
-    # union-find roots ARE min ids: path compression keeps min(ra, rb)
-    assert got == want
+def test_resolve_clusters_matches_union_find(resolve, components, edges):
+    # both paths find the same components as the reference, with min-id
+    # canonical labels (the property the canonical-survivor dedup
+    # depends on): bound 1 forces distributed rounds first, the default
+    # bound resolves on the driver
+    want = components(edges)
+    for bound in (1, None):
+        assert resolve(edges, bound) == want, bound
 
 
 @given(
@@ -244,41 +222,6 @@ def test_hash_group_split_total_and_stable(spark, keys, fracs):
     b = {r.k: r.split for r in U.hash_group_split(df, "k", fracs).collect()}
     assert a == b  # deterministic
     assert all(0 <= s < len(fracs) for s in a.values())  # total function
-
-
-@settings(
-    max_examples=6,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 30), st.integers(0, 30)),
-        min_size=1,
-        max_size=40,
-    )
-)
-def test_star_contraction_matches_union_find(spark, edges):
-    from azuredataengineering_deeplearning_spark.operators import dedup as DD
-
-    pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
-    got = {r.node: r.cluster_id for r in DD.resolve_clusters_star(pairs).collect()}
-    assert got == _union_find_components(edges)
-
-
-def test_star_contraction_logarithmic_on_chain(spark):
-    # a 64-node path is the adversarial case for min-label propagation
-    # (O(diameter) = 63 rounds); star contraction must finish in O(log n)
-    from azuredataengineering_deeplearning_spark.operators import dedup as DD
-
-    n = 64
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], ["id_a", "id_b"]
-    )
-    labels, rounds = DD._resolve_clusters_star(pairs, "id_a", "id_b", max_iter=30)
-    got = {r.node: r.cluster_id for r in labels.collect()}
-    assert got == {i: 0 for i in range(n)}
-    assert rounds <= 8  # ~log2(64) + fixed-point confirmation
 
 
 @given(

@@ -645,20 +645,100 @@ def test_leakage_safe_split_keeps_clusters_together(spark):
     assert again == {k: v[1] for k, v in by_id.items()}
 
 
-def test_resolve_clusters_converges_on_long_chain(spark):
-    """Pointer jumping: a 60-node chain (diameter >> default rounds for
-    plain propagation) must fully converge to the single component min."""
-    from azuredataengineering_deeplearning_spark.operators.dedup import (
-        resolve_clusters,
-    )
+def test_resolve_clusters_converges_on_long_chain(resolve, spy_rounds):
+    """A 60-node chain converges to the single component min on both
+    paths: distributed label rounds (driver bounds 1, 2, 3) and the
+    driver union-find (default bound). Hooking and jumping keep the
+    round count logarithmic in the diameter: 5 rounds here, where plain
+    min-label propagation would need ~59."""
+    edges = [(i, i + 1) for i in range(100, 160)]
+    for bound in (1, 2, 3):
+        spy_rounds["rounds"] = 0
+        labels = resolve(edges, bound)
+        assert set(labels.values()) == {100} and len(labels) == 61, bound
+        assert 1 <= spy_rounds["rounds"] <= 10, (bound, spy_rounds["rounds"])
+    spy_rounds["rounds"] = 0
+    labels = resolve(edges, None)
+    assert set(labels.values()) == {100} and len(labels) == 61
+    assert spy_rounds["rounds"] == 0
 
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(100, 160)], "id_a long, id_b long"
-    )
-    out = resolve_clusters(pairs, max_iter=10)  # 10 rounds < 60 diameter
-    labels = {r.node: r.cluster_id for r in out.collect()}
-    assert set(labels.values()) == {100}
-    assert len(labels) == 61
+
+def test_resolve_clusters_terminates_on_300_node_chain(resolve, spy_rounds):
+    """No iteration cap: with a driver bound of 1 a 300-node chain needs
+    several distributed rounds, and the loop runs until the cluster
+    graph fits, so the labels come back converged, never cut short.
+    Hooking and jumping finish it in 7 rounds (~298 without)."""
+    labels = resolve([(i, i + 1) for i in range(299)], 1)
+    assert len(labels) == 300 and set(labels.values()) == {0}
+    assert 1 <= spy_rounds["rounds"] <= 12, spy_rounds["rounds"]
+
+
+def test_resolve_clusters_scrambled_chains(resolve, components, spy_rounds):
+    """Chains whose ids are a permutation (i * 7919 mod 1009) split into
+    many label classes whose label nodes lie far from the class edges.
+    Min-label propagation with pointer jumping moves a smaller label one
+    edge per round there (29 rounds at driver bound 5); the hook moves
+    a whole class at once (5 rounds). An earlier resolver stopped at
+    its iteration cap on this shape (100 such 2000-node chains) and
+    returned unconverged labels."""
+    perm = lambda i: i * 7919 % 1009  # noqa: E731 - a bijection on 0..1008
+    edges = [(perm(i), perm(i + 1)) for i in range(300) if i % 100 != 99]
+    want = components(edges)
+    assert len(set(want.values())) == 3
+    assert resolve(edges, 5) == want
+    assert 1 <= spy_rounds["rounds"] <= 10, spy_rounds["rounds"]
+    assert resolve(edges, None) == want
+
+
+def test_resolve_clusters_ignores_null_ids(resolve):
+    """A pair with a NULL id joins nothing, on either path: node 3,
+    paired only with NULL, is absent, and no NULL node comes back."""
+    edges = [(1, 2), (3, None), (None, None), (2, 4), (None, 4)]
+    for bound in (1, None):
+        assert resolve(edges, bound) == {1: 1, 2: 1, 4: 1}, bound
+
+
+def test_resolve_clusters_small_graph_job_guard(spark, count_jobs, components):
+    """A pair list under the driver bound resolves in at most 3 Spark
+    jobs (the edge checkpoint and one bounded collect), and the result
+    is a driver-local frame: collecting it launches none."""
+    edges = [(4 * c + k, 4 * c) for c in range(10) for k in (1, 2, 3)] + [
+        (4 * c + 1, 4 * c + 2) for c in range(10)
+    ]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    out, call_jobs = count_jobs(lambda: DD.resolve_clusters(pairs))
+    rows, collect_jobs = count_jobs(out.collect)
+    assert call_jobs <= 3 and collect_jobs == 0, (call_jobs, collect_jobs)
+    assert {r.node: r.cluster_id for r in rows} == components(edges)
+
+
+@pytest.mark.parametrize("bound", [1, None])
+def test_resolve_clusters_result_outlives_cache_scope(spark, monkeypatch, components, bound):
+    """resolve_clusters checkpoints its edge list, so the MinHash sketch
+    caches released when cache_scope exits are no longer needed: none
+    is left tracked, and the result still collects correctly on both
+    paths."""
+    monkeypatch.setattr(DD, "_DRIVER_EDGES", bound or DD._DRIVER_EDGES)
+    stories = [
+        "the quick brown fox jumps over the lazy dog near the river bank",
+        "a stitch in time saves nine but only when the needle is threaded",
+        "rain in the valley kept every farmer indoors for most of the week",
+        "old maps of the harbour show three lighthouses and one sunken pier",
+    ]
+    texts = [t for t in stories for _ in range(3)] + [
+        f"unrelated words {i} about nothing in particular at all" for i in range(3)
+    ]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    mark = DD.tracked_cache_count()
+    with DD.cache_scope():
+        pairs = DD.minhash_near_duplicates(docs, "doc_id", "text", threshold=0.8)
+        out = DD.resolve_clusters(pairs)
+        edges = [(r.id_a, r.id_b) for r in pairs.collect()]
+        assert DD.tracked_cache_count() > mark
+    assert DD.tracked_cache_count() == mark
+    assert {r.node: r.cluster_id for r in out.collect()} == components(edges)
+    # the 12 story docs form 4 triples of exact copies
+    assert sorted(set(components(edges).values())) == [0, 3, 6, 9]
 
 
 def test_contamination_hash_grams_matches_string_grams(spark):
@@ -686,28 +766,21 @@ def test_contamination_hash_grams_matches_string_grams(spark):
 
 
 @pytest.mark.slow
-def test_resolve_clusters_tiny_frontier_threshold_bails_and_converges(spark):
-    """A frontier threshold smaller than any changed set forces the
-    driver-tail gear to bail (or never engage) — convergence must then
-    come from the distributed pointer-jumping rounds alone, and a
-    threshold between the two regimes must still converge through the
-    bail-and-return path."""
-    from azuredataengineering_deeplearning_spark.operators.dedup import (
-        resolve_clusters,
-    )
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(0, 80)]      # 81-node chain
-        + [(1000 + 4 * j + k, 1000 + 4 * j) for j in range(30) for k in (1, 2, 3)],
-        "id_a long, id_b long",
-    )
-    for thresh in (1, 10):
-        out = resolve_clusters(pairs, max_iter=20, frontier_threshold=thresh)
-        labels = {r.node: r.cluster_id for r in out.collect()}
-        assert all(labels[i] == 0 for i in range(81)), thresh
+def test_resolve_clusters_tiny_driver_bound_converges(resolve):
+    """Driver bounds smaller than the graph force distributed rounds
+    (bound 1: until a single cross edge is left; bound 10: until the
+    chain's cross edges fit); the default resolves it on the driver at
+    once. An 81-node chain beside 30 four-node stars stays exact on
+    every path."""
+    edges = [(i, i + 1) for i in range(0, 80)] + [
+        (1000 + 4 * j + k, 1000 + 4 * j) for j in range(30) for k in (1, 2, 3)
+    ]
+    for bound in (1, 10, None):
+        labels = resolve(edges, bound)
+        assert all(labels[i] == 0 for i in range(81)), bound
         for j in range(30):
             root = 1000 + 4 * j
-            assert all(labels[root + k] == root for k in (0, 1, 2, 3)), thresh
+            assert all(labels[root + k] == root for k in (0, 1, 2, 3)), bound
 
 
 def test_hof_builders_tokenize_exactly_once(spark):

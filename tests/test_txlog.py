@@ -27,21 +27,6 @@ def _assert_no_orphans(p):
     assert not [f for f in os.listdir(p) if f.startswith("_stage_")]
 
 
-def _jobs(spark, fn):
-    """(fn's result, number of Spark jobs fn launched)."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"txlog-guard-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_append_and_snapshot_read(spark, tmp_path):
     p = str(tmp_path / "t")
     v0 = TX.append(_df(spark, [(1, "a")]), p)
@@ -507,18 +492,18 @@ def test_compact_zorder_tightens_skipping(spark, tmp_path):
     assert zz_stats["scanned"] == 1
 
 
-def test_reads_launch_no_job_and_merge_at_most_four(spark, tmp_path):
+def test_reads_launch_no_job_and_merge_at_most_four(spark, tmp_path, count_jobs):
     """The recorded schema spares every read its footer-inference job,
     and MERGE with its change feed is one plan: the snapshot and the
     changeset shuffle once each, then one write."""
     p = str(tmp_path / "t")
     TX.overwrite(_df(spark, [(i, "a") for i in range(50)]), p)
-    v, merge_jobs = _jobs(
-        spark, lambda: TX.merge(spark, p, _df(spark, [(3, "b"), (70, "c")]), ["k"])
+    v, merge_jobs = count_jobs(
+        lambda: TX.merge(spark, p, _df(spark, [(3, "b"), (70, "c")]), ["k"])
     )
     assert merge_jobs <= 4
-    snap, read_jobs = _jobs(spark, lambda: TX.read(spark, p))
-    changes, cdf_jobs = _jobs(spark, lambda: TX.read_changes(spark, p, v, v))
+    snap, read_jobs = count_jobs(lambda: TX.read(spark, p))
+    changes, cdf_jobs = count_jobs(lambda: TX.read_changes(spark, p, v, v))
     assert (read_jobs, cdf_jobs) == (0, 0)
     assert snap.count() == 51
     assert {(r.k, r._change_type) for r in changes.collect()} == {
@@ -639,7 +624,7 @@ def test_engine_columns_never_surface(spark, tmp_path):
     ).columns
 
 
-def test_schema_survives_checkpoint_clean_restore_and_clone(spark, tmp_path):
+def test_schema_survives_checkpoint_clean_restore_and_clone(spark, tmp_path, count_jobs):
     p = str(tmp_path / "t")
     TX.overwrite(_df(spark, [(1, "a")]), p)                           # v0
     TX.merge(
@@ -649,7 +634,7 @@ def test_schema_survives_checkpoint_clean_restore_and_clone(spark, tmp_path):
     )                                                                 # v1
     TX.checkpoint_log(p)
     TX.clean_log(p, dry_run=False)
-    df, jobs = _jobs(spark, lambda: TX.read(spark, p))
+    df, jobs = count_jobs(lambda: TX.read(spark, p))
     assert jobs == 0 and df.columns == ["k", "v", "n"]
     assert df.count() == 2
 
@@ -661,7 +646,7 @@ def test_schema_survives_checkpoint_clean_restore_and_clone(spark, tmp_path):
     for deep in (True, False):
         dst = str(tmp_path / f"clone_{deep}")
         TX.clone(spark, p, dst, version=2, deep=deep)
-        df, jobs = _jobs(spark, lambda: TX.read(spark, dst))
+        df, jobs = count_jobs(lambda: TX.read(spark, dst))
         assert jobs == 0 and df.columns == ["k", "v"]
         assert [tuple(r) for r in df.collect()] == [(5, "e")]
 

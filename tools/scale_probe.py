@@ -209,23 +209,43 @@ def main() -> None:
                 )
             )
         )
-        t, out = timed(lambda: DD.resolve_clusters(pairs, max_iter=15).count())
+
+        def _components(df):
+            return (
+                df.agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.countDistinct("cluster_id").alias("comps"),
+                    F.max("cluster_id").alias("mx"),
+                )
+                .collect()[0]
+            )
+
+        t, out = timed(lambda: _components(DD.resolve_clusters(pairs)))
         results["cluster_resolution"] = t
+        # one component per four-id clique plus the chain's, whose
+        # label (its min, n_edges) is the largest
+        assert (out["n"], out["comps"], out["mx"]) == (
+            n_edges + 1001, (n_edges + 3) // 4 + 1, n_edges
+        ), out
         print(
             json.dumps(
-                {"probe": "cluster_resolution", "edges": n_edges + 1000, "nodes": out, "sec": t}
+                {
+                    "probe": "cluster_resolution",
+                    "edges": n_edges + 1000,
+                    "nodes": out["n"],
+                    "components": out["comps"],
+                    "sec": t,
+                }
             )
         )
 
-        # ---- adversarial hub: driver-tail bail path -------------------
-        # A 100k-degree hub fed by a slow chain: the tail gear engages
-        # on the chain crawl, then the hub's spokes (all labeled with
-        # the hub's id) blow the candidate set -> bail -> overlay flush
-        # -> distributed finish. Measures the bail path end-to-end and
-        # pins its driver-memory bound: every tail collect is
-        # limit(frontier_threshold+1), so the worst case is ~50k rows
-        # (~1 MB) REGARDLESS of hub degree — the hub never lands on the
-        # driver as 100k candidate rows.
+        # ---- adversarial hub: driver bound ----------------------------
+        # A 100k-degree hub fed by a 2000-node chain: the 102k edges
+        # overflow the driver bound (_DRIVER_EDGES, 50k), so distributed
+        # rounds run until the cluster graph fits; the hub's spokes then
+        # share one label and the driver finishes the chain. Every
+        # collect is limit(_DRIVER_EDGES+1), so the driver never holds
+        # more than ~50k rows (~1 MB) whatever the hub degree.
         hub_deg = 100_000
         hub_id = 10_000_000
         spokes = spark.range(hub_deg).select(
@@ -242,15 +262,9 @@ def main() -> None:
             .alias("id_b"),
         )
         hub_pairs = spokes.union(chain)
-        events: list = []
-        t, labels = timed(
-            lambda: DD.resolve_clusters(
-                hub_pairs, max_iter=60, debug_events=events
-            )
-            .agg(F.max("cluster_id").alias("mx"), F.count(F.lit(1)).alias("n"))
-            .collect()[0]
-        )
+        t, labels = timed(lambda: _components(DD.resolve_clusters(hub_pairs)))
         results["cluster_hub_bail"] = t
+        assert labels["comps"] == 1, f"hub component split: {labels['comps']}"
         assert labels["mx"] == 0, f"hub component mislabeled: max={labels['mx']}"
         print(
             json.dumps(
@@ -259,8 +273,49 @@ def main() -> None:
                     "hub_degree": hub_deg,
                     "chain": chain_len,
                     "nodes": labels["n"],
-                    "gear_events": events,
+                    "components": labels["comps"],
                     "sec": t,
+                }
+            )
+        )
+
+        # ---- multi-round: cluster graphs over the bound for rounds ----
+        # A 200k-node chain with sorted ids keeps every label distinct
+        # until it reaches 0 (12 rounds before the cluster graph fits);
+        # 100 chains of 2000 with ids permuted by i * 7919 mod 1000003
+        # put class labels far from class edges, which only the hook
+        # step of a round crosses at once (6 rounds).
+        n_chain, n_runs, run_len, prime = 200_000, 100, 2_000, 1_000_003
+        sorted_chain = spark.range(n_chain - 1).select(
+            F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+        )
+        t, labels = timed(lambda: _components(DD.resolve_clusters(sorted_chain)))
+        assert (labels["n"], labels["comps"], labels["mx"]) == (n_chain, 1, 0), labels
+        results["cluster_sorted_chain"] = t
+        perm = lambda c: (c * 7919) % prime  # noqa: E731 - a bijection below prime
+        permuted = (
+            spark.range(n_runs * run_len)
+            .filter(F.col("id") % run_len != run_len - 1)
+            .select(perm(F.col("id")).alias("id_a"), perm(F.col("id") + 1).alias("id_b"))
+        )
+        t2, plabels = timed(lambda: _components(DD.resolve_clusters(permuted)))
+        want_mx = max(
+            min(perm(i) for i in range(r * run_len, (r + 1) * run_len))
+            for r in range(n_runs)
+        )
+        assert (plabels["n"], plabels["comps"], plabels["mx"]) == (
+            n_runs * run_len, n_runs, want_mx
+        ), plabels
+        results["cluster_permuted_chains"] = t2
+        print(
+            json.dumps(
+                {
+                    "probe": "cluster_multi_round",
+                    "sorted_chain_nodes": n_chain,
+                    "sorted_chain_sec": t,
+                    "permuted_chains": n_runs,
+                    "permuted_chain_nodes": run_len,
+                    "permuted_sec": t2,
                 }
             )
         )
