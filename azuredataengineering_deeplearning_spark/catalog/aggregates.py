@@ -5,7 +5,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from azuredataengineering_deeplearning_spark.catalog import query
-from azuredataengineering_deeplearning_spark.functions.exact import exact_avg, sql_avg
+from azuredataengineering_deeplearning_spark.functions.exact import (
+    exact_avg,
+    sql_avg,
+    sql_dec,
+    sql_sum,
+    sql_wide,
+)
 from azuredataengineering_deeplearning_spark.operators import aggregates as A
 from azuredataengineering_deeplearning_spark.sources.readers import (
     load_tables,
@@ -141,10 +147,10 @@ def a11_profile_aggregates(spark, sf_dir):
 
 @query(
     "a12_weighted_mean",
-    """
+    f"""
     SELECT l_returnflag,
-           CAST(SUM(CAST(l_extendedprice * l_quantity AS DECIMAL(28,6))) AS DOUBLE)
-           / CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS wavg_price
+           CAST(SUM({sql_wide("l_extendedprice * l_quantity")}) AS DOUBLE)
+           / CAST(SUM({sql_dec("l_quantity")}) AS DOUBLE) AS wavg_price
     FROM lineitem GROUP BY l_returnflag
     """,
 )
@@ -285,12 +291,12 @@ def a_histogram(spark, sf_dir):
 
 @query(
     "a_rfm_segments",
-    """
+    f"""
     WITH per AS (
       SELECT o_custkey,
              MAX(o_orderdate) AS last_d,
              CAST(COUNT(*) AS BIGINT) AS frequency,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS monetary
+             {sql_sum("o_totalprice", "monetary")}
       FROM orders GROUP BY o_custkey
     ), mxd AS (SELECT MAX(last_d) AS mx FROM per)
     SELECT o_custkey,
@@ -406,18 +412,18 @@ def a_grouped_histogram_quantiles(spark, sf_dir):
 
 @query(
     "a_ab_welch",
-    """
+    f"""
     WITH base AS (
       SELECT CAST(SUM(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
              CAST(SUM(CASE WHEN o_orderstatus = 'O'
-                           THEN CAST(o_totalprice AS DECIMAL(18,6)) END) AS DOUBLE) AS sa,
+                           THEN {sql_dec("o_totalprice")} END) AS DOUBLE) AS sa,
              CAST(SUM(CASE WHEN o_orderstatus = 'O'
-                           THEN CAST(o_totalprice * o_totalprice AS DECIMAL(18,6)) END) AS DOUBLE) AS ssa,
+                           THEN {sql_dec("o_totalprice * o_totalprice")} END) AS DOUBLE) AS ssa,
              CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
              CAST(SUM(CASE WHEN o_orderstatus = 'F'
-                           THEN CAST(o_totalprice AS DECIMAL(18,6)) END) AS DOUBLE) AS sb,
+                           THEN {sql_dec("o_totalprice")} END) AS DOUBLE) AS sb,
              CAST(SUM(CASE WHEN o_orderstatus = 'F'
-                           THEN CAST(o_totalprice * o_totalprice AS DECIMAL(18,6)) END) AS DOUBLE) AS ssb
+                           THEN {sql_dec("o_totalprice * o_totalprice")} END) AS DOUBLE) AS ssb
       FROM orders
     ),
     m AS (
@@ -448,10 +454,10 @@ def a_ab_welch(spark, sf_dir):
 
 @query(
     "a_concentration",
-    """
+    f"""
     WITH units AS (
       SELECT o_orderstatus, o_custkey,
-             SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS x
+             SUM({sql_dec("o_totalprice")}) AS x
       FROM orders GROUP BY o_orderstatus, o_custkey
     ),
     ranked AS (
@@ -481,10 +487,10 @@ def a_concentration(spark, sf_dir):
 
 @query(
     "a_abc_classification",
-    """
+    f"""
     WITH units AS (
       SELECT o_orderstatus, o_custkey,
-             SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS x
+             SUM({sql_dec("o_totalprice")}) AS x
       FROM orders GROUP BY o_orderstatus, o_custkey
     ),
     shares AS (
@@ -664,12 +670,12 @@ def a_cramers_v(spark, sf_dir):
 
 @query(
     "a_eta_squared",
-    """
+    f"""
     WITH g AS (
       SELECT o_orderstatus,
              COUNT(*) AS n_g,
-             SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS s_g,
-             SUM(CAST(o_totalprice * o_totalprice AS DECIMAL(18,6))) AS ss_g
+             SUM({sql_dec("o_totalprice")}) AS s_g,
+             SUM({sql_dec("o_totalprice * o_totalprice")}) AS ss_g
       FROM orders
       WHERE o_totalprice IS NOT NULL AND o_orderstatus IS NOT NULL
       GROUP BY o_orderstatus

@@ -17,6 +17,7 @@ from azuredataengineering_deeplearning_spark.functions.exact import (
     exact_avg,
     exact_sum,
     sql_avg,
+    sql_dec,
     sql_sum,
 )
 from azuredataengineering_deeplearning_spark.operators import aggregates as A
@@ -111,15 +112,22 @@ def p9_clip_clamp(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+# Exact TPC-H revenue per row, shared by every TPC-H shape, and its DuckDB
+# twin. A function: Column construction needs an active SparkSession.
+def _revenue():
+    return dec("l_extendedprice") * (dec(F.lit(1)) - dec("l_discount"))
+
+
+_SQL_REV = f"{sql_dec('l_extendedprice')} * ({sql_dec('1')} - {sql_dec('l_discount')})"
+
+
 @query(
     "q1_pricing_summary",
     f"""
     SELECT l_returnflag, l_linestatus,
            {sql_sum('l_quantity', 'sum_qty')},
            {sql_sum('l_extendedprice', 'sum_base_price')},
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))
-                    * (CAST(1 AS DECIMAL(18,6)) - CAST(l_discount AS DECIMAL(18,6))))
-                AS DOUBLE) AS sum_disc_price,
+           CAST(SUM({_SQL_REV}) AS DOUBLE) AS sum_disc_price,
            {sql_avg('l_quantity', 'avg_qty')},
            {sql_avg('l_extendedprice', 'avg_price')},
            {sql_avg('l_discount', 'avg_disc')},
@@ -136,14 +144,13 @@ def q1_pricing_summary(spark, sf_dir):
         f"{sf_dir}/lineitem.parquet",
         predicate=F.col("l_shipdate") <= F.lit("1998-09-01").cast("timestamp"),
     )
-    disc_price = dec("l_extendedprice") * (F.lit(1).cast("decimal(18,6)") - dec("l_discount"))
     return A.grouped_agg(
         li,
         ["l_returnflag", "l_linestatus"],
         [
             exact_sum("l_quantity", "sum_qty"),
             exact_sum("l_extendedprice", "sum_base_price"),
-            F.sum(disc_price).cast("double").alias("sum_disc_price"),
+            F.sum(_revenue()).cast("double").alias("sum_disc_price"),
             exact_avg("l_quantity", "avg_qty"),
             exact_avg("l_extendedprice", "avg_price"),
             exact_avg("l_discount", "avg_disc"),
@@ -156,11 +163,9 @@ def q1_pricing_summary(spark, sf_dir):
 # Q5 — flagship: revenue by nation (J1/J2/J7 + A1 + O1/O2)
 # ---------------------------------------------------------------------------
 
-_Q5_SQL = """
+_Q5_SQL = f"""
     SELECT n_name,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))
-                    * (CAST(1 AS DECIMAL(18,6)) - CAST(l_discount AS DECIMAL(18,6))))
-                AS DOUBLE) AS revenue,
+           CAST(SUM({_SQL_REV}) AS DOUBLE) AS revenue,
            COUNT(*) AS n_items
     FROM lineitem
     JOIN orders   ON l_orderkey = o_orderkey
@@ -191,12 +196,11 @@ def q5_revenue_by_nation(spark, sf_dir):
             (F.broadcast(t["region"]), F.col("n_regionkey") == F.col("r_regionkey"), "inner"),
         ],
     )
-    revenue = dec("l_extendedprice") * (F.lit(1).cast("decimal(18,6)") - dec("l_discount"))
     return A.grouped_agg(
         joined,
         ["n_name"],
         [
-            F.sum(revenue).cast("double").alias("revenue"),
+            F.sum(_revenue()).cast("double").alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
         ],
     )

@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from azuredataengineering_deeplearning_spark.catalog import query
+from azuredataengineering_deeplearning_spark.functions.exact import exact_sum, sql_sum
 from azuredataengineering_deeplearning_spark.operators import joins as J
 from azuredataengineering_deeplearning_spark.operators import profile as P
 from azuredataengineering_deeplearning_spark.operators.relational import (
@@ -269,10 +270,10 @@ def ml_binary_auc(spark, sf_dir):
 
 @query(
     "ml_regression_metrics",
-    """
+    f"""
     WITH daily AS (
       SELECT user_id, date_trunc('day', CAST(ts AS TIMESTAMP)) AS d,
-             CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS y
+             {sql_sum("value", "y")}
       FROM events GROUP BY user_id, d
     ),
     p AS (
@@ -308,7 +309,7 @@ def ml_regression_metrics(spark, sf_dir):
     ev = load_tables(spark, sf_dir, ["events"])["events"]
     daily = ev.groupBy(
         "user_id", F.date_trunc("day", F.col("ts")).alias("d")
-    ).agg(F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("y"))
+    ).agg(exact_sum("value", "y"))
     w = Window.partitionBy("user_id").orderBy("d")
     scored = daily.select(
         "y", F.lag("y", 7).over(w).alias("yhat")

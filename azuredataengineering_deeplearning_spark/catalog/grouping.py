@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from azuredataengineering_deeplearning_spark.catalog import query
-from azuredataengineering_deeplearning_spark.functions.exact import exact_sum, sql_sum
+from azuredataengineering_deeplearning_spark.functions.exact import exact_sum, sql_dec, sql_sum
 from azuredataengineering_deeplearning_spark.operators import grouping as G
 from azuredataengineering_deeplearning_spark.operators import windows as W
 from azuredataengineering_deeplearning_spark.sources.readers import load_tables, read_parquet
@@ -109,14 +109,14 @@ def g_intersect(spark, sf_dir):
 
 @query(
     "w_rolling_7d",
-    """
+    f"""
     WITH daily AS (
       SELECT user_id, CAST(epoch(date_trunc('day', CAST(ts AS TIMESTAMP))) / 86400 AS BIGINT) AS day,
-             CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS y
+             {sql_sum("value", "y")}
       FROM events GROUP BY 1, 2
     )
     SELECT user_id, day,
-           CAST(SUM(CAST(y AS DECIMAL(18,6))) OVER (
+           CAST(SUM({sql_dec("y")}) OVER (
                 PARTITION BY user_id ORDER BY day
                 RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS DOUBLE) AS rolling
     FROM daily
@@ -131,15 +131,15 @@ def w_rolling_7d(spark, sf_dir):
         (F.unix_timestamp(F.date_trunc("day", F.col("ts"))) / 86400)
         .cast("bigint")
         .alias("day"),
-    ).agg(F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("y"))
+    ).agg(exact_sum("value", "y"))
     return W.rolling_time_agg(daily, ["user_id"], "day", "y", preceding=6).select(
         "user_id", "day", "rolling"
     )
 
 
-_HOTKEY_CUMSUM_SQL = """
+_HOTKEY_CUMSUM_SQL = f"""
     SELECT event_id,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) OVER (
+           CAST(SUM({sql_dec("value")}) OVER (
                 ORDER BY epoch_ns(ts), event_id
                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS cumsum
     FROM events

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from azuredataengineering_deeplearning_spark.catalog import query
+from azuredataengineering_deeplearning_spark.functions.exact import dec, sql_sum
 from azuredataengineering_deeplearning_spark.operators import incremental as I
 from azuredataengineering_deeplearning_spark.operators.profile import key_skew_profile
 from azuredataengineering_deeplearning_spark.sources.readers import load_tables, read_parquet
@@ -24,10 +25,10 @@ _SPEC = {
 
 @query(
     "inc_agg_maintenance",
-    """
+    f"""
     SELECT o_custkey,
            CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS total_price,
+           {sql_sum("o_totalprice", "total_price")},
            CAST(MAX(o_orderdate) AS TIMESTAMP) AS last_order
     FROM orders GROUP BY o_custkey
     """,
@@ -192,7 +193,7 @@ def cdc_partition_sync_plan(spark, sf_dir):
 
 @query(
     "inc_cdf_gold",
-    """
+    f"""
     WITH changed AS (
       SELECT o_orderkey, o_custkey,
              CASE WHEN o_orderkey % 97 = 0 THEN o_totalprice * 2
@@ -200,7 +201,7 @@ def cdc_partition_sync_plan(spark, sf_dir):
       FROM orders
     )
     SELECT o_custkey,
-           CAST(SUM(CAST(price AS DECIMAL(18,6))) AS DOUBLE) AS total_price
+           {sql_sum("price", "total_price")}
     FROM changed GROUP BY o_custkey
     """,
 )
@@ -235,7 +236,7 @@ def inc_cdf_gold(spark, sf_dir):
         TX.read(spark, table, version=0)
         .groupBy("o_custkey")
         .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,6)")).alias("__t")
+            F.sum(dec("o_totalprice")).alias("__t")
         )
     )
     # ...maintained forward with ONLY the change feed
@@ -244,8 +245,8 @@ def inc_cdf_gold(spark, sf_dir):
         "__d",
         F.when(
             F.col("_change_type") == "update_preimage",
-            -F.col("o_totalprice").cast("decimal(18,6)"),
-        ).otherwise(F.col("o_totalprice").cast("decimal(18,6)")),
+            -dec("o_totalprice"),
+        ).otherwise(dec("o_totalprice")),
     )
     delta = signed.groupBy("o_custkey").agg(F.sum("__d").alias("__d"))
     return (
@@ -253,7 +254,7 @@ def inc_cdf_gold(spark, sf_dir):
         .select(
             "o_custkey",
             (
-                F.col("__t") + F.coalesce(F.col("__d"), F.lit(0).cast("decimal(18,6)"))
+                F.col("__t") + F.coalesce(F.col("__d"), dec(F.lit(0)))
             )
             .cast("double")
             .alias("total_price"),

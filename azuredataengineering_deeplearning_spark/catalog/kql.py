@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from azuredataengineering_deeplearning_spark.catalog import query
+from azuredataengineering_deeplearning_spark.functions.exact import dec, exact_sum, sql_dec, sql_sum
 from azuredataengineering_deeplearning_spark.sources.kql import kql_fork, kql_to_df
 from azuredataengineering_deeplearning_spark.sources.readers import load_tables, local_rows_df
 
@@ -70,10 +71,10 @@ def kql_arg_max(spark, sf_dir):
 
 @query(
     "kql_bin_ago",
-    """
+    f"""
     SELECT CAST(to_timestamp(FLOOR(epoch(ts) / 86400) * 86400) AS TIMESTAMP) AS day,
            COUNT(*) AS n,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
+           {sql_sum("value", "total")}
     FROM events
     WHERE ts >= TIMESTAMP '2024-01-31 00:00:00' - INTERVAL 14 DAY
     GROUP BY day
@@ -96,7 +97,7 @@ def kql_bin_ago(spark, sf_dir):
     )
     return filtered.groupBy("day").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("total"),
+        exact_sum("value", "total"),
     )
 
 
@@ -199,7 +200,7 @@ def kql_countif_percentile(spark, sf_dir):
 
 @query(
     "kql_make_series",
-    """
+    f"""
     WITH f AS (
       SELECT event_type, value,
              CAST(FLOOR((epoch_us(ts) - epoch_us(TIMESTAMP '2024-01-01'))
@@ -208,7 +209,7 @@ def kql_countif_percentile(spark, sf_dir):
       WHERE ts >= TIMESTAMP '2024-01-01' AND ts < TIMESTAMP '2024-02-01'
     ),
     a AS (SELECT event_type, idx,
-                 CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
+                 {sql_sum("value", "v")}
           FROM f GROUP BY 1, 2),
     k AS (SELECT DISTINCT event_type FROM f),
     spine AS (SELECT k.event_type, r.idx FROM k CROSS JOIN range(0, 31) r(idx)),
@@ -277,7 +278,7 @@ def kql_scalar_functions(spark, sf_dir):
 
 @query(
     "kql_top_nested",
-    """
+    f"""
     WITH l1 AS (
       SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events
       FROM events GROUP BY 1
@@ -285,7 +286,7 @@ def kql_scalar_functions(spark, sf_dir):
     ),
     l2 AS (
       SELECT e.event_type, e.user_id,
-             CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
+             {sql_sum("value", "total")}
       FROM events e JOIN l1 USING (event_type)
       GROUP BY 1, 2
     ),
@@ -430,9 +431,9 @@ def kql_conditional_aggs(spark, sf_dir):
 
 @query(
     "kql_top_hitters",
-    """
+    f"""
     SELECT user_id,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS approximate_sum_value
+           {sql_sum("value", "approximate_sum_value")}
     FROM events GROUP BY user_id
     ORDER BY approximate_sum_value DESC, user_id LIMIT 10
     """,
@@ -442,7 +443,7 @@ def kql_top_hitters(spark, sf_dir):
     operator (exact here; KQL column naming preserved)."""
     t = load_tables(spark, sf_dir, ["events"])
     ev = t["events"].withColumn(
-        "value", F.col("value").cast("decimal(18,6)")
+        "value", dec("value")
     )
     out = kql_to_df({"events": ev}, "events | top-hitters 10 of user_id by value")
     return out.select(
@@ -721,7 +722,7 @@ def kql_series_stats(spark, sf_dir):
 
 @query(
     "kql_series_fill_linear",
-    """
+    f"""
     WITH w AS (
       SELECT event_type,
              CAST(FLOOR((epoch(ts) - epoch(TIMESTAMP '2024-01-01')) / 86400)
@@ -732,7 +733,7 @@ def kql_series_stats(spark, sf_dir):
         AND value >= 300
     ),
     b AS (SELECT event_type, i,
-                 CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
+                 {sql_sum("value", "v")}
           FROM w GROUP BY 1, 2),
     spine AS (SELECT event_type, r.i
               FROM (SELECT DISTINCT event_type FROM b) t CROSS JOIN range(31) r(i)),
@@ -817,7 +818,7 @@ def kql_bag_unpack(spark, sf_dir):
 
 @query(
     "kql_row_cumsum",
-    """
+    f"""
     WITH p AS (
       SELECT event_id, value,
              SUM(CASE WHEN value > 95 THEN 1 ELSE 0 END)
@@ -825,9 +826,9 @@ def kql_bag_unpack(spark, sf_dir):
       FROM events WHERE event_type = 'purchase'
     )
     SELECT event_id,
-           CAST(SUM(CAST(value AS DECIMAL(18,6)))
+           CAST(SUM({sql_dec("value")})
                 OVER (ORDER BY event_id) AS DOUBLE) AS cum,
-           CAST(SUM(CAST(value AS DECIMAL(18,6)))
+           CAST(SUM({sql_dec("value")})
                 OVER (PARTITION BY seg ORDER BY event_id) AS DOUBLE) AS cum_r
     FROM p
     """,
@@ -857,11 +858,11 @@ def kql_row_cumsum(spark, sf_dir):
 @query(
     "kql_series_pearson",
     _SERIES_COUNT_CTE
-    + """,
+    + f""",
     b2 AS (SELECT event_type,
                   CAST(FLOOR((epoch(ts) - epoch(TIMESTAMP '2024-01-01')) / 86400)
                        AS BIGINT) AS i,
-                  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
+                  {sql_sum("value", "v")}
            FROM events
            WHERE ts >= TIMESTAMP '2024-01-01' AND ts < TIMESTAMP '2024-02-01'
            GROUP BY 1, 2),
@@ -1047,10 +1048,10 @@ def kql_top_nested_others(spark, sf_dir):
 
 @query(
     "kql_join_hint_broadcast",
-    """
+    f"""
     SELECT e.event_type, c.c_mktsegment,
            CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(e.value AS DECIMAL(18,6))) AS DOUBLE) AS total
+           {sql_sum("e.value", "total")}
     FROM events e JOIN customer c ON e.user_id = c.c_custkey
     GROUP BY 1, 2
     """,
@@ -1320,7 +1321,7 @@ def kql_scalar_extras3(spark, sf_dir):
 
 @query(
     "kql_series_arith",
-    """
+    f"""
     WITH w AS (
       SELECT event_type,
              CAST(FLOOR((epoch(ts) - epoch(TIMESTAMP '2024-01-01')) / 86400)
@@ -1330,7 +1331,7 @@ def kql_scalar_extras3(spark, sf_dir):
       WHERE ts >= TIMESTAMP '2024-01-01' AND ts < TIMESTAMP '2024-02-01'
     ),
     b AS (SELECT event_type, i, COUNT(*) AS n,
-                 SUM(CAST(value AS DECIMAL(18,6))) AS sv
+                 SUM({sql_dec("value")}) AS sv
           FROM w GROUP BY 1, 2),
     spine AS (SELECT event_type, r.i
               FROM (SELECT DISTINCT event_type FROM b) t
@@ -3750,11 +3751,11 @@ def kql_series_trig_pow(spark, sf_dir):
 @query(
     "kql_series_vector_ops",
     _SERIES_COUNT_CTE
-    + """,
+    + f""",
     b2 AS (SELECT event_type,
                   CAST(FLOOR((epoch(ts) - epoch(TIMESTAMP '2024-01-01')) / 86400)
                        AS BIGINT) AS i,
-                  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
+                  {sql_sum("value", "v")}
            FROM events
            WHERE ts >= TIMESTAMP '2024-01-01' AND ts < TIMESTAMP '2024-02-01'
            GROUP BY 1, 2),
@@ -3801,7 +3802,7 @@ def kql_series_vector_ops(spark, sf_dir):
 
 @query(
     "kql_series_fill_fwd_bwd",
-    """
+    f"""
     WITH w AS (
       SELECT event_type,
              CAST(FLOOR((epoch(ts) - epoch(TIMESTAMP '2024-01-01')) / 86400)
@@ -3812,7 +3813,7 @@ def kql_series_vector_ops(spark, sf_dir):
         AND value >= 300
     ),
     b AS (SELECT event_type, i,
-                 CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
+                 {sql_sum("value", "v")}
           FROM w GROUP BY 1, 2),
     spine AS (SELECT event_type, r.i
               FROM (SELECT DISTINCT event_type FROM b) t CROSS JOIN range(31) r(i)),

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from azuredataengineering_deeplearning_spark.catalog import query
+from azuredataengineering_deeplearning_spark.functions.exact import exact_sum, sql_sum
 from azuredataengineering_deeplearning_spark.functions.strings import collapse_whitespace
 from azuredataengineering_deeplearning_spark.operators import dedup as DD
 from azuredataengineering_deeplearning_spark.operators import relational as R
@@ -24,7 +25,7 @@ from azuredataengineering_deeplearning_spark.sources.readers import load_tables,
 
 @query(
     "pipeline_sessions",
-    """
+    f"""
     WITH g AS (
       SELECT user_id, event_id, value, epoch_ns(ts) AS tns,
              CAST(json_extract_string(props, '$.k') AS INT) AS k,
@@ -39,7 +40,7 @@ from azuredataengineering_deeplearning_spark.sources.readers import load_tables,
     )
     SELECT user_id, session_id,
            COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value,
+           {sql_sum("value", "total_value")},
            array_to_string(list(CAST(k AS VARCHAR) ORDER BY k, event_id), ',') AS ks_csv
     FROM s GROUP BY user_id, session_id
     """,
@@ -55,7 +56,7 @@ def pipeline_sessions(spark, sf_dir):
     )
     return parsed.groupBy("user_id", "session_id").agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("total_value"),
+        exact_sum("value", "total_value"),
         F.array_join(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("k", "event_id"))),

@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from azuredataengineering_deeplearning_spark.catalog import query
+from azuredataengineering_deeplearning_spark.functions.exact import sql_avg, sql_dec
 from azuredataengineering_deeplearning_spark.operators import encoders as E
 from azuredataengineering_deeplearning_spark.operators import profile as P
 from azuredataengineering_deeplearning_spark.sources.readers import load_tables, read_parquet
@@ -76,19 +77,19 @@ def enc_count(spark, sf_dir):
 
 @query(
     "enc_target_oof",
-    """
+    f"""
     WITH base AS (
       SELECT o_orderkey, o_orderpriority, o_totalprice, o_custkey % 5 AS fold FROM orders
     ), g AS (
-      SELECT o_orderpriority, SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS gs,
+      SELECT o_orderpriority, SUM({sql_dec("o_totalprice")}) AS gs,
              COUNT(o_totalprice) AS gc
       FROM base GROUP BY o_orderpriority
     ), f AS (
-      SELECT o_orderpriority, fold, SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS fs,
+      SELECT o_orderpriority, fold, SUM({sql_dec("o_totalprice")}) AS fs,
              COUNT(o_totalprice) AS fc
       FROM base GROUP BY o_orderpriority, fold
     ), prior AS (
-      SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) / COUNT(o_totalprice) AS p
+      SELECT {sql_avg("o_totalprice", "p")}
       FROM base
     )
     SELECT b.o_orderkey,
@@ -212,13 +213,13 @@ def prof_expectations(spark, sf_dir):
 
 @query(
     "prof_table_profile",
-    """
+    f"""
     SELECT 'o_orderkey' AS column, CAST(COUNT(*) AS BIGINT) AS n,
            CAST(SUM(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
            CAST(COUNT(DISTINCT o_orderkey) AS BIGINT) AS n_distinct,
            CAST(MIN(o_orderkey) AS DOUBLE) AS min_num,
            CAST(MAX(o_orderkey) AS DOUBLE) AS max_num,
-           CAST(SUM(CAST(CAST(o_orderkey AS DOUBLE) AS DECIMAL(18,6))) AS DOUBLE)
+           CAST(SUM({sql_dec("CAST(o_orderkey AS DOUBLE)")}) AS DOUBLE)
              / COUNT(o_orderkey) AS mean,
            CAST(NULL AS VARCHAR) AS min_str, CAST(NULL AS VARCHAR) AS max_str
     FROM orders
@@ -227,7 +228,7 @@ def prof_expectations(spark, sf_dir):
            CAST(SUM(CASE WHEN o_totalprice IS NULL THEN 1 ELSE 0 END) AS BIGINT),
            CAST(COUNT(DISTINCT o_totalprice) AS BIGINT),
            CAST(MIN(o_totalprice) AS DOUBLE), CAST(MAX(o_totalprice) AS DOUBLE),
-           CAST(SUM(CAST(CAST(o_totalprice AS DOUBLE) AS DECIMAL(18,6))) AS DOUBLE)
+           CAST(SUM({sql_dec("CAST(o_totalprice AS DOUBLE)")}) AS DOUBLE)
              / COUNT(o_totalprice),
            NULL, NULL
     FROM orders

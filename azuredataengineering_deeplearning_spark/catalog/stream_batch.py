@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from azuredataengineering_deeplearning_spark.catalog import query
-from azuredataengineering_deeplearning_spark.functions.exact import exact_sum
+from azuredataengineering_deeplearning_spark.functions.exact import exact_sum, sql_sum
 from azuredataengineering_deeplearning_spark.sources.readers import load_tables
 from azuredataengineering_deeplearning_spark.streaming import windows as SW
 
@@ -22,11 +22,11 @@ def _events(spark, sf_dir):
 
 @query(
     "st_tumbling_agg",
-    """
+    f"""
     SELECT time_bucket(INTERVAL 1 HOUR, CAST(ts AS TIMESTAMP)) AS window_start,
            time_bucket(INTERVAL 1 HOUR, CAST(ts AS TIMESTAMP)) + INTERVAL 1 HOUR AS window_end,
            event_type, COUNT(*) AS n,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
+           {sql_sum("value", "total")}
     FROM events GROUP BY 1, 2, 3
     """,
 )
@@ -65,7 +65,7 @@ def st_sliding_agg(spark, sf_dir):
 
 @query(
     "st_session_agg",
-    """
+    f"""
     WITH e AS (
       SELECT user_id, CAST(ts AS TIMESTAMP) AS t, value,
              epoch_us(CAST(ts AS TIMESTAMP)) AS tu FROM events
@@ -80,7 +80,7 @@ def st_sliding_agg(spark, sf_dir):
     )
     SELECT MIN(t) AS session_start, MAX(t) + INTERVAL 1 HOUR AS session_end,
            user_id, COUNT(*) AS n,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
+           {sql_sum("value", "total")}
     FROM sess GROUP BY user_id, sid
     """,
 )

@@ -5,13 +5,22 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from azuredataengineering_deeplearning_spark.catalog import query
-from azuredataengineering_deeplearning_spark.functions.exact import sql_sum
+from azuredataengineering_deeplearning_spark.functions.exact import (
+    dec,
+    exact_sum,
+    sql_dec,
+    sql_sum,
+    sql_wide,
+)
 from azuredataengineering_deeplearning_spark.operators import timeseries as TS
 from azuredataengineering_deeplearning_spark.sources.readers import load_tables
 
-_DAILY_SQL = """
+# the per-element square of the series_stats fold, in the widened accumulator
+_V_SQ = sql_wide(f"{sql_dec('v')} * {sql_dec('v')}")
+
+_DAILY_SQL = f"""
       SELECT user_id, date_trunc('day', CAST(ts AS TIMESTAMP)) AS d,
-             CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS y
+             {sql_sum("value", "y")}
       FROM events GROUP BY user_id, d
 """
 
@@ -21,7 +30,7 @@ def _daily(spark, sf_dir):
     ev = load_tables(spark, sf_dir, ["events"])["events"]
     return ev.groupBy(
         "user_id", F.date_trunc("day", F.col("ts")).alias("d")
-    ).agg(F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("y"))
+    ).agg(exact_sum("value", "y"))
 
 
 @query(
@@ -198,7 +207,7 @@ def ts_make_series(spark, sf_dir):
 
 @query(
     "ts_series_stats",
-    """
+    f"""
     WITH f AS (
       SELECT event_type,
              CAST(FLOOR((epoch_us(ts) - epoch_us(TIMESTAMP '2024-01-01'))
@@ -216,9 +225,8 @@ def ts_make_series(spark, sf_dir):
     agg AS (
       SELECT event_type,
              MIN(v) AS s_min, MAX(v) AS s_max,
-             CAST(SUM(CAST(v AS DECIMAL(18,6))) AS DOUBLE) AS sx,
-             CAST(SUM(CAST(CAST(v AS DECIMAL(18,6)) * CAST(v AS DECIMAL(18,6))
-                           AS DECIMAL(28,6))) AS DOUBLE) AS sx2,
+             {sql_sum("v", "sx")},
+             CAST(SUM({_V_SQ}) AS DOUBLE) AS sx2,
              CAST(COUNT(*) AS DOUBLE) AS n
       FROM s GROUP BY event_type
     )
@@ -245,7 +253,7 @@ def ts_series_stats(spark, sf_dir):
 
 @query(
     "ts_series_outliers",
-    """
+    f"""
     WITH f AS (
       SELECT event_type,
              CAST(FLOOR((epoch_us(ts) - epoch_us(TIMESTAMP '2024-01-01'))
@@ -262,9 +270,8 @@ def ts_series_stats(spark, sf_dir):
             ON spine.event_type = a.event_type AND spine.idx = a.idx),
     agg AS (
       SELECT event_type,
-             CAST(SUM(CAST(v AS DECIMAL(18,6))) AS DOUBLE) AS sx,
-             CAST(SUM(CAST(CAST(v AS DECIMAL(18,6)) * CAST(v AS DECIMAL(18,6))
-                           AS DECIMAL(28,6))) AS DOUBLE) AS sx2,
+             {sql_sum("v", "sx")},
+             CAST(SUM({_V_SQ}) AS DOUBLE) AS sx2,
              CAST(COUNT(*) AS DOUBLE) AS n
       FROM s GROUP BY event_type
     ),
@@ -302,7 +309,7 @@ def ts_series_outliers(spark, sf_dir):
 
 @query(
     "ts_linear_forecast",
-    """
+    f"""
     WITH f AS (
       SELECT event_type,
              CAST(FLOOR((epoch_us(ts) - epoch_us(TIMESTAMP '2024-01-01'))
@@ -314,10 +321,10 @@ def ts_series_outliers(spark, sf_dir):
           FROM f GROUP BY 1, 2),
     m AS (SELECT event_type,
                  CAST(COUNT(*) AS DOUBLE) AS n,
-                 CAST(SUM(CAST(x AS DECIMAL(18,6))) AS DOUBLE) AS sx,
-                 CAST(SUM(CAST(y AS DECIMAL(18,6))) AS DOUBLE) AS sy,
-                 CAST(SUM(CAST(x * y AS DECIMAL(18,6))) AS DOUBLE) AS sxy,
-                 CAST(SUM(CAST(x * x AS DECIMAL(18,6))) AS DOUBLE) AS sxx
+                 {sql_sum("x", "sx")},
+                 {sql_sum("y", "sy")},
+                 {sql_sum("x * y", "sxy")},
+                 {sql_sum("x * x", "sxx")}
           FROM a GROUP BY event_type),
     t0 AS (SELECT event_type, n, sx, sy,
                   CASE WHEN n * sxx - sx * sx <> 0
@@ -450,7 +457,7 @@ def ts_seasonal_naive(spark, sf_dir):
     ),
     mu AS (
       SELECT user_id,
-             CAST(SUM(CAST(y AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS yhat
+             CAST(SUM({sql_dec("y")}) AS DOUBLE) / COUNT(*) AS yhat
       FROM split WHERE NOT is_pred GROUP BY user_id
     ),
     q AS (
@@ -484,7 +491,7 @@ def ts_conformal_intervals(spark, sf_dir):
         .withColumn(
             "yhat",
             F.sum(
-                F.when(~F.col("is_pred"), F.col("y").cast("decimal(18,6)"))
+                F.when(~F.col("is_pred"), dec("y"))
             )
             .over(w)
             .cast("double")
@@ -598,7 +605,7 @@ def ts_cusum_changepoints(spark, sf_dir):
     f"""
     WITH daily AS ({_DAILY_SQL}),
     g AS (
-      SELECT d, CAST(SUM(CAST(y AS DECIMAL(18,6))) AS DOUBLE) AS gy
+      SELECT d, {sql_sum("y", "gy")}
       FROM daily GROUP BY d
     ),
     j AS (SELECT daily.user_id, daily.d, daily.y, g.gy
@@ -616,7 +623,7 @@ def ts_rolling_corr(spark, sf_dir):
     the corpus-wide daily total — the co-movement ('beta') monitor."""
     daily = _daily(spark, sf_dir)
     g = daily.groupBy("d").agg(
-        F.sum(F.col("y").cast("decimal(18,6)")).cast("double").alias("gy")
+        exact_sum("y", "gy")
     )
     j = daily.join(g, "d")
     out = TS.rolling_corr(j, ["user_id"], "d", "y", "gy", window=14)
@@ -650,10 +657,10 @@ def ts_new_vs_returning(spark, sf_dir):
 
 @query(
     "ts_period_growth",
-    """
+    f"""
     WITH tot AS (
       SELECT date_trunc('week', CAST(ts AS TIMESTAMP)) AS period,
-             CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
+             {sql_sum("value", "total")}
       FROM events GROUP BY period
     )
     SELECT period, total,
@@ -699,7 +706,7 @@ def ts_tenure_survival(spark, sf_dir):
 
 @query(
     "ts_interarrival_stats",
-    """
+    f"""
     WITH g AS (
       SELECT user_id,
              epoch(CAST(ts AS TIMESTAMP))
@@ -710,7 +717,7 @@ def ts_tenure_survival(spark, sf_dir):
     )
     SELECT user_id,
            CAST(COUNT(*) AS BIGINT) AS n_gaps,
-           CAST(SUM(CAST(gap AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS mean_gap_s,
+           CAST(SUM({sql_dec("gap")}) AS DOUBLE) / COUNT(*) AS mean_gap_s,
            quantile_cont(gap, 0.5) AS median_gap_s,
            quantile_cont(gap, 0.9) AS p90_gap_s,
            MAX(gap) AS max_gap_s
@@ -726,12 +733,12 @@ def ts_interarrival_stats(spark, sf_dir):
 
 @query(
     "ts_activity_heatmap",
-    """
+    f"""
     WITH cells AS (
       SELECT isodow(CAST(ts AS TIMESTAMP)) AS dow,
              hour(CAST(ts AS TIMESTAMP)) AS hour,
              COUNT(*) AS n,
-             CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS value_sum
+             {sql_sum("value", "value_sum")}
       FROM events GROUP BY 1, 2
     ),
     t AS (SELECT SUM(n) AS tt FROM cells)
@@ -859,10 +866,10 @@ def ts_model_selection(spark, sf_dir):
     m AS (
       SELECT user_id,
              CAST(COUNT(*) AS DOUBLE) AS n,
-             CAST(SUM(CAST(rn AS DECIMAL(18,6))) AS DOUBLE) AS sx,
-             CAST(SUM(CAST(y AS DECIMAL(18,6))) AS DOUBLE) AS sy,
-             CAST(SUM(CAST(rn * y AS DECIMAL(18,6))) AS DOUBLE) AS sxy,
-             CAST(SUM(CAST(CAST(rn AS DOUBLE) * rn AS DECIMAL(18,6))) AS DOUBLE) AS sxx,
+             {sql_sum("rn", "sx")},
+             {sql_sum("y", "sy")},
+             {sql_sum("rn * y", "sxy")},
+             {sql_sum("CAST(rn AS DOUBLE) * rn", "sxx")},
              MAX(d) AS last_d
       FROM b GROUP BY user_id
     ),

@@ -24,19 +24,9 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from azuredataengineering_deeplearning_spark.catalog import query
-from azuredataengineering_deeplearning_spark.functions.exact import dec
+from azuredataengineering_deeplearning_spark.catalog.core import _SQL_REV, _revenue
+from azuredataengineering_deeplearning_spark.functions.exact import dec, sql_dec
 from azuredataengineering_deeplearning_spark.sources.readers import load_tables
-
-
-def _revenue():
-    one = F.lit(1).cast("decimal(18,6)")
-    return dec("l_extendedprice") * (one - dec("l_discount"))
-
-
-_SQL_REV = (
-    "CAST(l_extendedprice AS DECIMAL(18,6))"
-    " * (CAST(1 AS DECIMAL(18,6)) - CAST(l_discount AS DECIMAL(18,6)))"
-)
 
 
 @query(
@@ -123,8 +113,8 @@ def q2_min_cost_supplier(spark, sf_dir):
     f"""
     SELECT n_name AS nation, year(o_orderdate) AS o_year,
            CAST(SUM({_SQL_REV}) AS DOUBLE)
-           - 0.1 * CAST(SUM(CAST(p_retailprice AS DECIMAL(18,6))
-                            * CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE)
+           - 0.1 * CAST(SUM({sql_dec("p_retailprice")}
+                            * {sql_dec("l_quantity")}) AS DOUBLE)
              AS sum_profit
     FROM lineitem
     JOIN part ON p_partkey = l_partkey
@@ -173,10 +163,10 @@ def q9_product_type_profit(spark, sf_dir):
 
 @query(
     "q11_important_stock",
-    """
+    f"""
     WITH value_by_part AS (
         SELECT l_partkey AS pk,
-               SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS part_value
+               SUM({sql_dec("l_extendedprice")}) AS part_value
         FROM lineitem
         JOIN supplier ON s_suppkey = l_suppkey
         JOIN nation ON n_nationkey = s_nationkey
@@ -319,10 +309,10 @@ def q15_top_supplier(spark, sf_dir):
 
 @query(
     "q20_part_promotion_suppliers",
-    """
+    f"""
     WITH shipped AS (
         SELECT l_partkey AS pk, l_suppkey AS sk,
-               SUM(CAST(l_quantity AS DECIMAL(18,6))) AS qty
+               SUM({sql_dec("l_quantity")}) AS qty
         FROM lineitem
         WHERE l_shipdate >= TIMESTAMP '1997-01-01'
           AND l_shipdate < TIMESTAMP '1998-01-01'

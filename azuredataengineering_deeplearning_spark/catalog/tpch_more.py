@@ -17,30 +17,15 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from azuredataengineering_deeplearning_spark.catalog import query
-from azuredataengineering_deeplearning_spark.functions.exact import dec
+from azuredataengineering_deeplearning_spark.catalog.core import _SQL_REV, _revenue
+from azuredataengineering_deeplearning_spark.functions.exact import dec, exact_sum, sql_dec, sql_sum
 from azuredataengineering_deeplearning_spark.sources.readers import load_tables
-
-# Exact revenue expression shared by the shapes below (order-independent
-# decimal accumulation; see functions.exact). Built lazily — Column
-# construction needs an active SparkSession.
-
-
-def _revenue():
-    one = F.lit(1).cast("decimal(18,6)")
-    return dec("l_extendedprice") * (one - dec("l_discount"))
-
-
-_SQL_REV = (
-    "CAST(l_extendedprice AS DECIMAL(18,6))"
-    " * (CAST(1 AS DECIMAL(18,6)) - CAST(l_discount AS DECIMAL(18,6)))"
-)
-
 
 @query(
     "q6_forecast_revenue",
     f"""
-    SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))
-                    * CAST(l_discount AS DECIMAL(18,6))) AS DOUBLE) AS revenue,
+    SELECT CAST(SUM({sql_dec("l_extendedprice")}
+                    * {sql_dec("l_discount")}) AS DOUBLE) AS revenue,
            COUNT(*) AS n_rows
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1997-01-01'
@@ -141,7 +126,7 @@ def q7_volume_shipping(spark, sf_dir):
     )
     SELECT o_year,
            CAST(SUM(CASE WHEN nation = 'NATION_3' THEN volume
-                         ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE)
+                         ELSE {sql_dec("0")} END) AS DOUBLE)
            / CAST(SUM(volume) AS DOUBLE) AS mkt_share
     FROM all_nations GROUP BY o_year
     """,
@@ -167,7 +152,7 @@ def q8_market_share(spark, sf_dir):
         F.col("o_orderdate").between("1996-01-01", "1997-12-31")
     )
     vol = _revenue()
-    zero = F.lit(0).cast("decimal(18,6)")
+    zero = dec(F.lit(0))
     joined = (
         t["lineitem"]
         .join(F.broadcast(part), F.col("p_partkey") == F.col("l_partkey"))
@@ -233,7 +218,7 @@ def q10_returned_items(spark, sf_dir):
     f"""
     SELECT CAST(100.0 AS DOUBLE)
            * CAST(SUM(CASE WHEN p_type = 'PROMO' THEN {_SQL_REV}
-                           ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE)
+                           ELSE {sql_dec("0")} END) AS DOUBLE)
            / CAST(SUM({_SQL_REV}) AS DOUBLE) AS promo_revenue
     FROM lineitem JOIN part ON l_partkey = p_partkey
     WHERE l_shipdate >= TIMESTAMP '1997-03-01'
@@ -248,7 +233,7 @@ def q14_promo_revenue(spark, sf_dir):
         (F.col("l_shipdate") >= "1997-03-01") & (F.col("l_shipdate") < "1997-06-01")
     )
     vol = _revenue()
-    zero = F.lit(0).cast("decimal(18,6)")
+    zero = dec(F.lit(0))
     return (
         li.join(F.broadcast(t["part"]), F.col("p_partkey") == F.col("l_partkey"))
         .agg(
@@ -297,8 +282,8 @@ def q16_supplier_count(spark, sf_dir):
 
 @query(
     "q17_small_quantity_revenue",
-    """
-    SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE)
+    f"""
+    SELECT CAST(SUM({sql_dec("l_extendedprice")}) AS DOUBLE)
            / CAST(7.0 AS DOUBLE) AS avg_yearly
     FROM lineitem JOIN part ON p_partkey = l_partkey
     WHERE p_brand = 'Brand#5'
@@ -332,9 +317,9 @@ def q17_small_quantity_revenue(spark, sf_dir):
 
 @query(
     "q18_large_volume_customers",
-    """
+    f"""
     SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS total_qty
+           {sql_sum("l_quantity", "total_qty")}
     FROM customer
     JOIN orders ON o_custkey = c_custkey
     JOIN lineitem ON l_orderkey = o_orderkey
@@ -363,7 +348,7 @@ def q18_large_volume_customers(spark, sf_dir):
         .join(t["lineitem"], F.col("l_orderkey") == F.col("o_orderkey"))
         .join(t["customer"], F.col("c_custkey") == F.col("o_custkey"))
         .groupBy("c_name", "c_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
-        .agg(F.sum(dec("l_quantity")).cast("double").alias("total_qty"))
+        .agg(exact_sum("l_quantity", "total_qty"))
         .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
         .limit(100)
     )
@@ -418,10 +403,10 @@ def q19_disjunctive_predicates(spark, sf_dir):
 
 @query(
     "q22_inactive_customers",
-    """
+    f"""
     SELECT SUBSTRING(c_name, 10, 4) AS cust_group,
            COUNT(*) AS numcust,
-           CAST(SUM(CAST(c_acctbal AS DECIMAL(18,6))) AS DOUBLE) AS totacctbal
+           {sql_sum("c_acctbal", "totacctbal")}
     FROM customer
     WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM customer WHERE c_acctbal > 0.0)
       AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
@@ -450,6 +435,6 @@ def q22_inactive_customers(spark, sf_dir):
         .groupBy(F.substring("c_name", 10, 4).alias("cust_group"))
         .agg(
             F.count(F.lit(1)).alias("numcust"),
-            F.sum(dec("c_acctbal")).cast("double").alias("totacctbal"),
+            exact_sum("c_acctbal", "totacctbal"),
         )
     )

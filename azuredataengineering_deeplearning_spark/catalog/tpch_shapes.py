@@ -7,18 +7,16 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from azuredataengineering_deeplearning_spark.catalog import query
-from azuredataengineering_deeplearning_spark.functions.exact import dec
+from azuredataengineering_deeplearning_spark.catalog.core import _SQL_REV, _revenue
 from azuredataengineering_deeplearning_spark.operators import joins as J
 from azuredataengineering_deeplearning_spark.sources.readers import load_tables
 
 
 @query(
     "q3_shipping_priority",
-    """
+    f"""
     SELECT l_orderkey,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))
-                    * (CAST(1 AS DECIMAL(18,6)) - CAST(l_discount AS DECIMAL(18,6))))
-                AS DOUBLE) AS revenue,
+           CAST(SUM({_SQL_REV}) AS DOUBLE) AS revenue,
            o_orderdate
     FROM customer JOIN orders ON c_custkey = o_custkey
     JOIN lineitem ON l_orderkey = o_orderkey
@@ -37,14 +35,11 @@ def q3_shipping_priority(spark, sf_dir):
     cust = t["customer"].filter(F.col("c_mktsegment") == "BUILDING")
     orders = t["orders"].filter(F.col("o_orderdate") < "1998-03-15")
     li = t["lineitem"].filter(F.col("l_shipdate") > "1998-03-15")
-    revenue = dec("l_extendedprice") * (
-        F.lit(1).cast("decimal(18,6)") - dec("l_discount")
-    )
     return (
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(cust, F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("l_orderkey", "o_orderdate")
-        .agg(F.sum(revenue).cast("double").alias("revenue"))
+        .agg(F.sum(_revenue()).cast("double").alias("revenue"))
         .select("l_orderkey", "revenue", "o_orderdate")
         .orderBy(F.col("revenue").desc(), F.col("l_orderkey").asc())
         .limit(10)

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from azuredataengineering_deeplearning_spark.catalog import query
+from azuredataengineering_deeplearning_spark.functions.exact import sql_dec
 from azuredataengineering_deeplearning_spark.operators import scd as SCD
 from azuredataengineering_deeplearning_spark.operators import windows as W
 from azuredataengineering_deeplearning_spark.sources.readers import load_tables, read_parquet
@@ -35,9 +36,9 @@ def w1_flag_partition_max(spark, sf_dir):
     )
 
 
-_CUMSUM_SQL = """
+_CUMSUM_SQL = f"""
     SELECT event_id,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) OVER (
+           CAST(SUM({sql_dec("value")}) OVER (
                 PARTITION BY user_id ORDER BY epoch_ns(ts)
                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS cumsum
     FROM events
@@ -118,9 +119,9 @@ def w6_cumcount(spark, sf_dir):
 
 @query(
     "w7_expanding_mean",
-    """
+    f"""
     SELECT event_id,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) OVER w AS DOUBLE)
+           CAST(SUM({sql_dec("value")}) OVER w AS DOUBLE)
              / COUNT(value) OVER w AS expanding_mean
     FROM events
     WINDOW w AS (PARTITION BY user_id ORDER BY epoch_ns(ts)

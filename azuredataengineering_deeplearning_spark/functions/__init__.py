@@ -1,11 +1,1 @@
 """Scalar expression helpers (SURVEY §2.8) — all JVM-side Column exprs."""
-
-from azuredataengineering_deeplearning_spark.functions.exact import (
-    dec,
-    exact_sum,
-    exact_avg,
-    sql_sum,
-    sql_avg,
-)
-
-__all__ = ["dec", "exact_sum", "exact_avg", "sql_sum", "sql_avg"]

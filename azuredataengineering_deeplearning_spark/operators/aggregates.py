@@ -13,7 +13,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from azuredataengineering_deeplearning_spark.functions.exact import dec
+from azuredataengineering_deeplearning_spark.functions.exact import dec, exact_sum, wide
 from azuredataengineering_deeplearning_spark.sources.readers import local_rows_df
 
 
@@ -160,7 +160,7 @@ def weighted_mean(
     is IEEE-identical everywhere; accumulation is exact decimal."""
     return df.groupBy(*keys).agg(
         (
-            F.sum((F.col(value) * F.col(weight)).cast("decimal(28,6)")).cast("double")
+            F.sum(wide(F.col(value) * F.col(weight))).cast("double")
             / F.sum(dec(F.col(weight))).cast("double")
         ).alias(alias)
     )
@@ -399,7 +399,7 @@ def rfm_segments(
     per = df.groupBy(id_col).agg(
         F.max(F.col(ts_col).cast("date")).alias("__last"),
         F.count("*").alias("frequency"),
-        F.sum(dec(amount_col)).cast("double").alias("monetary"),
+        exact_sum(amount_col, "monetary"),
     )
     if asof is not None:
         per = per.withColumn(
@@ -683,7 +683,7 @@ def abc_classification(
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     tot_w = Window.partitionBy(*keys)
-    before = F.coalesce(F.sum("__x").over(w), F.lit(0).cast("decimal(28,6)"))
+    before = F.coalesce(F.sum("__x").over(w), wide(F.lit(0)))
     # divide as doubles-of-exact-sums (not decimal division, whose
     # result scale rounds BEFORE the cast) so shares match any engine
     # computing double division of the same exact numerators

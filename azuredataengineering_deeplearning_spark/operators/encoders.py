@@ -13,7 +13,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from azuredataengineering_deeplearning_spark.functions.exact import dec
+from azuredataengineering_deeplearning_spark.functions.exact import dec, exact_avg
 
 
 def count_encode(
@@ -47,7 +47,7 @@ def target_encode_oof(
         F.sum(dec(target)).alias("__fs"), F.count(target).alias("__fc")
     )
     prior = df.agg(
-        (F.sum(dec(target)).cast("double") / F.count(target)).alias("p")
+        exact_avg(target, "p")
     ).collect()[0].p
     joined = df.join(F.broadcast(g), [column], "left").join(
         F.broadcast(f_), [column, fold], "left"

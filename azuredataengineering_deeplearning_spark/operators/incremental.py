@@ -14,7 +14,7 @@ maintained from each changeset in O(changeset):
    MIN/MAX). One shuffle sized by the *state* table (distinct keys), not
    the fact table.
 
-Sums accumulate in DECIMAL(18,6) (see ``functions.exact``) so the
+Sums accumulate in exact decimal (see ``functions.exact``) so the
 incremental result is bit-identical to a full recompute regardless of
 merge order. min/max states assume insert-only changesets (a delete can
 retract a current extremum — that needs a per-key recompute, out of

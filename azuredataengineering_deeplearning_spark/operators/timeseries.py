@@ -14,7 +14,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from azuredataengineering_deeplearning_spark.functions.exact import dec
+from azuredataengineering_deeplearning_spark.functions.exact import (
+    dec,
+    exact_avg,
+    exact_sum,
+    sql_dec,
+    sql_wide,
+)
 from azuredataengineering_deeplearning_spark.sources.readers import local_rows_df
 
 
@@ -69,7 +75,7 @@ def regrain(
     weeks)."""
     return (
         df.groupBy(id_col, F.date_trunc(grain, F.col(date_col)).alias(out_date))
-        .agg(F.sum(dec(value_col)).cast("double").alias(out_value))
+        .agg(exact_sum(value_col, out_value))
     )
 
 
@@ -1184,20 +1190,6 @@ def make_series(
     step_us = step_seconds * 1_000_000
     n_bins = -(-(stop_us - start_us) // step_us)  # ceil
 
-    def _agg_col(a: str, vc: str | None):
-        fns = {
-            "count": lambda: F.count(F.lit(1)).cast("double"),
-            "sum": lambda: F.sum(dec(vc)).cast("double"),
-            "avg": lambda: (F.sum(dec(vc)).cast("double") / F.count(vc)),
-            "min": lambda: F.min(vc).cast("double"),
-            "max": lambda: F.max(vc).cast("double"),
-        }
-        if a not in fns:
-            raise ValueError(f"unsupported make_series aggregate {a!r}")
-        if a != "count" and vc is None:
-            raise ValueError(f"make_series agg {a!r} needs value_col")
-        return fns[a]()
-
     if specs is None:
         specs = [
             {"agg": agg, "value_col": value_col, "default": default, "out": out}
@@ -1211,7 +1203,7 @@ def make_series(
         lambda i: F.timestamp_micros(F.lit(start_us) + i.cast("long") * F.lit(step_us)),
     )
     return _make_series_core(
-        df, keys, idx, n_bins, specs, _agg_col, bins_expr, out_bins
+        df, keys, idx, n_bins, specs, bins_expr, out_bins
     )
 
 
@@ -1238,20 +1230,6 @@ def make_series_numeric(
         )
     n_bins = int(-(-(stop - start) // step))
 
-    def _agg_col(a: str, vc: str | None):
-        fns = {
-            "count": lambda: F.count(F.lit(1)).cast("double"),
-            "sum": lambda: F.sum(dec(vc)).cast("double"),
-            "avg": lambda: (F.sum(dec(vc)).cast("double") / F.count(vc)),
-            "min": lambda: F.min(vc).cast("double"),
-            "max": lambda: F.max(vc).cast("double"),
-        }
-        if a not in fns:
-            raise ValueError(f"unsupported make_series aggregate {a!r}")
-        if a != "count" and vc is None:
-            raise ValueError(f"make_series agg {a!r} needs value_col")
-        return fns[a]()
-
     idx = F.floor(
         (F.col(x_col).cast("double") - F.lit(float(start)))
         / F.lit(float(step))
@@ -1261,13 +1239,27 @@ def make_series_numeric(
         lambda i: F.lit(float(start)) + i.cast("double") * F.lit(float(step)),
     )
     return _make_series_core(
-        df, keys, idx, n_bins, specs, _agg_col, bins_expr, out_bins
+        df, keys, idx, n_bins, specs, bins_expr, out_bins
     )
 
 
-def _make_series_core(
-    df, keys, idx, n_bins, specs, agg_col_fn, bins_expr, out_bins
-):
+def _series_agg(a: str, vc: str | None, alias: str) -> Column:
+    """One make-series bin aggregate as DOUBLE (sum/avg exact-decimal)."""
+    fns = {
+        "count": lambda: F.count(F.lit(1)).cast("double").alias(alias),
+        "sum": lambda: exact_sum(vc, alias),
+        "avg": lambda: exact_avg(vc, alias),
+        "min": lambda: F.min(vc).cast("double").alias(alias),
+        "max": lambda: F.max(vc).cast("double").alias(alias),
+    }
+    if a not in fns:
+        raise ValueError(f"unsupported make_series aggregate {a!r}")
+    if a != "count" and vc is None:
+        raise ValueError(f"make_series agg {a!r} needs value_col")
+    return fns[a]()
+
+
+def _make_series_core(df, keys, idx, n_bins, specs, bins_expr, out_bins):
     """Shared make-series tail: (keys, bin) aggregate -> per-key
     bin->value map -> transform(sequence) densify. One pass, no spine
     join, no explode; per-key state is n_bins x len(specs) entries."""
@@ -1277,7 +1269,7 @@ def _make_series_core(
         .groupBy(*keys, "__idx")
         .agg(
             *[
-                agg_col_fn(sp["agg"], sp.get("value_col")).alias(f"__v{i}")
+                _series_agg(sp["agg"], sp.get("value_col"), f"__v{i}")
                 for i, sp in enumerate(specs)
             ]
         )
@@ -1319,6 +1311,22 @@ def _make_series_core(
     )
 
 
+def _dec_moments_sql(arr: str) -> tuple[str, str]:
+    """SQL for the exact sum and sum of squares of a numeric array, as
+    DOUBLE: each element converts through ``functions.exact`` and the
+    fold accumulates in the widened decimal, so the result depends on
+    neither element order nor engine."""
+
+    def fold(term: str) -> str:
+        return (
+            f"CAST(aggregate({arr}, {sql_wide('0')},"
+            f" (acc, x) -> {sql_wide('acc + ' + term)}) AS DOUBLE)"
+        )
+
+    x = sql_dec("x")
+    return fold(x), fold(sql_wide(f"{x} * {x}"))
+
+
 def series_stats(
     df: DataFrame,
     series_col: str,
@@ -1337,15 +1345,7 @@ def series_stats(
     """
     s = series_col
     n = F.size(F.col(s)).cast("double")
-    sum_x = F.expr(
-        f"CAST(aggregate({s}, CAST(0 AS DECIMAL(28,6)),"
-        f" (acc, x) -> CAST(acc + CAST(x AS DECIMAL(18,6)) AS DECIMAL(28,6))) AS DOUBLE)"
-    )
-    sum_x2 = F.expr(
-        f"CAST(aggregate({s}, CAST(0 AS DECIMAL(28,6)),"
-        f" (acc, x) -> CAST(acc + CAST(CAST(x AS DECIMAL(18,6)) * CAST(x AS DECIMAL(18,6))"
-        f" AS DECIMAL(28,6)) AS DECIMAL(28,6))) AS DOUBLE)"
-    )
+    sum_x, sum_x2 = (F.expr(e) for e in _dec_moments_sql(s))
     avg = sum_x / n
     var = sum_x2 / n - avg * avg
     return df.withColumns(
@@ -1495,18 +1495,10 @@ def series_stats_dynamic_sql(y_sql: str) -> str:
     max_idx, avg, stdev, variance, sum, len). Variance/stdev are SAMPLE
     moments (Kusto convention; the :func:`series_stats` operator keeps
     its population form). ``*_idx`` is the FIRST index attaining the
-    extremum. Sums accumulate in DECIMAL(28,6) so the result is
+    extremum. Sums accumulate in the widened exact decimal so the result is
     element-order- and engine-independent at 6 decimals (same caveat as
     :func:`series_stats`). Empty series → null struct."""
-    dec_sum = (
-        "CAST(aggregate(__y, CAST(0 AS DECIMAL(28,6)), (a, v) -> "
-        "CAST(a + CAST(v AS DECIMAL(18,6)) AS DECIMAL(28,6))) AS DOUBLE)"
-    )
-    dec_sum_sq = (
-        "CAST(aggregate(__y, CAST(0 AS DECIMAL(28,6)), (a, v) -> "
-        "CAST(a + CAST(CAST(v AS DECIMAL(18,6)) * CAST(v AS DECIMAL(18,6))"
-        " AS DECIMAL(28,6)) AS DECIMAL(28,6))) AS DOUBLE)"
-    )
+    dec_sum, dec_sum_sq = _dec_moments_sql("__y")
     moments = (
         "named_struct("
         "'n', CAST(size(__y) AS DOUBLE), "
@@ -2740,24 +2732,26 @@ def linear_trend(
     point / zero x-variance) yield slope 0 with the mean as intercept.
     """
     x, y = F.col(x_col).cast("double"), F.col(y_col).cast("double")
-    agg = df.groupBy(*keys).agg(
-        F.count(F.lit(1)).cast("double").alias("__n"),
-        F.sum(dec(x)).cast("double").alias("__sx"),
-        F.sum(dec(y)).cast("double").alias("__sy"),
-        F.sum(dec(x * y)).cast("double").alias("__sxy"),
-        F.sum(dec(x * x)).cast("double").alias("__sxx"),
-    )
-    denom = F.col("__n") * F.col("__sxx") - F.col("__sx") * F.col("__sx")
-    slope = F.when(
-        denom != 0,
-        (F.col("__n") * F.col("__sxy") - F.col("__sx") * F.col("__sy")) / denom,
-    ).otherwise(F.lit(0.0))
-    return agg.select(
+    moments, slope, intercept = _least_squares(x, y)
+    return df.groupBy(*keys).agg(*moments).select(
         *keys,
         F.col("__n").cast("long").alias("n"),
         slope.alias("slope"),
-        ((F.col("__sy") - slope * F.col("__sx")) / F.col("__n")).alias("intercept"),
+        intercept.alias("intercept"),
     )
+
+
+def _least_squares(x: Column, y: Column) -> tuple[list[Column], Column, Column]:
+    """Moment aggregates ``__n, __sx, __sy, __sxy, __sxx`` (exact-decimal
+    sums) and the closed-form slope and intercept over them, in double;
+    slope 0 when x has no variance."""
+    moments = [F.count(F.lit(1)).cast("double").alias("__n")] + [
+        exact_sum(e, a) for e, a in ((x, "__sx"), (y, "__sy"), (x * y, "__sxy"), (x * x, "__sxx"))
+    ]
+    n, sx, sy = F.col("__n"), F.col("__sx"), F.col("__sy")
+    denom = n * F.col("__sxx") - sx * sx
+    slope = F.when(denom != 0, (n * F.col("__sxy") - sx * sy) / denom).otherwise(F.lit(0.0))
+    return moments, slope, (sy - slope * sx) / n
 
 
 def forecast_linear(
@@ -3162,7 +3156,7 @@ def period_growth(
     zero surprises)."""
     p = F.date_trunc(grain, F.col(ts_col)).alias("period")
     tot = df.groupBy(p).agg(
-        F.sum(dec(F.col(value_col).cast("double"))).cast("double").alias("total")
+        exact_sum(F.col(value_col).cast("double"), "total")
     )
     w = Window.orderBy("period")
     prev = F.lag("total").over(w)
@@ -3250,7 +3244,7 @@ def activity_heatmap(
     ).agg(
         F.count("*").cast("long").alias("n"),
         *(
-            [F.sum(dec(F.col(value_col).cast("double"))).cast("double").alias("value_sum")]
+            [exact_sum(F.col(value_col).cast("double"), "value_sum")]
             if value_col
             else []
         ),
@@ -3401,21 +3395,12 @@ def ensemble_forecast(
         F.col("__rn") > F.col("__maxrn") - season,
         F.struct(F.col("__rn").alias("rn"), F.col("__y").alias("y")),
     )
+    moments, slope, intercept = _least_squares(x, F.col("__y"))
     agg = b.groupBy(*keys).agg(
-        F.count(F.lit(1)).cast("double").alias("__n"),
-        F.sum(dec(x)).cast("double").alias("__sx"),
-        F.sum(dec(F.col("__y"))).cast("double").alias("__sy"),
-        F.sum(dec(x * F.col("__y"))).cast("double").alias("__sxy"),
-        F.sum(dec(x * x)).cast("double").alias("__sxx"),
+        *moments,
         F.max(order_col).alias("__last"),
         F.map_from_entries(F.collect_list(tail)).alias("__tail"),
     )
-    denom = F.col("__n") * F.col("__sxx") - F.col("__sx") * F.col("__sx")
-    slope = F.when(
-        denom != 0,
-        (F.col("__n") * F.col("__sxy") - F.col("__sx") * F.col("__sy")) / denom,
-    ).otherwise(F.lit(0.0))
-    intercept = (F.col("__sy") - slope * F.col("__sx")) / F.col("__n")
     e = agg.select(
         *keys,
         "__n",

@@ -16,7 +16,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from azuredataengineering_deeplearning_spark.functions.exact import dec
+from azuredataengineering_deeplearning_spark.functions.exact import dec, wide
 
 
 def _cols(xs: Sequence[str]) -> list[Column]:
@@ -48,18 +48,15 @@ def cumsum(
     order_by: str,
     value: str,
     out: str = "cumsum",
-    exact: bool = True,
 ) -> DataFrame:
-    """Running sum per key (W2 baseline). ``exact`` accumulates in decimal
+    """Running sum per key (W2 baseline). Accumulates in exact decimal
     so results are order-independent and salting-invariant."""
     w = (
         Window.partitionBy(*keys)
         .orderBy(order_by)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    v = dec(value) if exact else F.col(value)
-    expr = F.sum(v).over(w)
-    return df.withColumn(out, expr.cast("double") if exact else expr)
+    return df.withColumn(out, F.sum(dec(value)).over(w).cast("double"))
 
 
 def salted_cumsum(
@@ -69,7 +66,6 @@ def salted_cumsum(
     value: str,
     out: str = "cumsum",
     salt_size: int = 86_400_000_000_000,  # 1 day of nanoseconds
-    exact: bool = True,
 ) -> DataFrame:
     """Skew-proof running sum (W2; ``salt_cumsum.py:1-27`` two-level
     pattern, clean-room).
@@ -86,7 +82,7 @@ def salted_cumsum(
     salt = F.floor(F.col(order_by) / F.lit(salt_size)).alias("__salt")
     df = df.withColumn("__salt", salt)
 
-    v = dec(value) if exact else F.col(value)
+    v = dec(value)
     w_in = (
         Window.partitionBy(*keys, "__salt")
         .orderBy(order_by)
@@ -105,14 +101,14 @@ def salted_cumsum(
     offsets = totals.select(
         *keys,
         "__salt",
-        F.coalesce(F.sum("__bt").over(w_prev), F.lit(0).cast("decimal(18,6)" if exact else "double")).alias("__offset"),
+        F.coalesce(F.sum("__bt").over(w_prev), dec(F.lit(0))).alias("__offset"),
     )
     joined = df.join(offsets, [*keys, "__salt"], "left")
 
     result = F.col("__in_bucket") + F.col("__offset")
-    return joined.withColumn(
-        out, result.cast("double") if exact else result
-    ).drop("__salt", "__in_bucket", "__offset")
+    return joined.withColumn(out, result.cast("double")).drop(
+        "__salt", "__in_bucket", "__offset"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -780,7 +776,7 @@ def global_cumsum(
             acc_s += r["__s"] if r["__s"] is not None else Decimal(0)
             acc_c += r["__c"]
             acc_f += r["__f"] if flag is not None else 0
-    s_arr = F.array(*[F.lit(str(v)).cast("decimal(28,6)") for v in sum_off])
+    s_arr = F.array(*[wide(F.lit(str(v))) for v in sum_off])
     c_arr = F.array(*[F.lit(v) for v in cnt_off])
     w = (
         Window.partitionBy("__rb")
@@ -796,7 +792,7 @@ def global_cumsum(
         wsum.isNull() & (F.element_at(c_arr, F.col("__rb") + 1) == 0),
         F.lit(None).cast("decimal(29,6)"),
     ).otherwise(
-        F.coalesce(wsum, F.lit(0).cast("decimal(28,6)"))
+        F.coalesce(wsum, wide(F.lit(0)))
         + F.element_at(s_arr, F.col("__rb") + 1)
     )
     if flag is None:
@@ -819,7 +815,7 @@ def global_cumsum(
     # any non-null value (cum still NULL = empty prefix) must not
     # poison the segment's prefix into NULL -> coalesce(0) -> unreset
     # global sums downstream.
-    zero = F.lit(0).cast("decimal(28,6)")
+    zero = wide(F.lit(0))
     seg_base = with_seg.filter(F.col(restart_col).cast("boolean")).select(
         "__gcs_seg",
         (
@@ -833,7 +829,7 @@ def global_cumsum(
             out,
             (
                 F.col("__gcs_c")
-                - F.coalesce(F.col("__gcs_p"), F.lit(0).cast("decimal(28,6)"))
+                - F.coalesce(F.col("__gcs_p"), zero)
             ).cast("double"),
         )
         .drop("__gcs_seg", "__gcs_c", "__gcs_p")

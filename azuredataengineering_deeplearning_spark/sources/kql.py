@@ -221,6 +221,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from azuredataengineering_deeplearning_spark.functions.exact import exact_sum
 from azuredataengineering_deeplearning_spark.sources.readers import local_rows_df
 from azuredataengineering_deeplearning_spark.operators.timeseries import (
     series_decompose_anomalies_sql,
@@ -2349,9 +2350,10 @@ _STREAM_UNSUPPORTED = frozenset(
 # encounter order, so a pipe containing one after the elision point
 # keeps the global sort. `summarize` is safe only when no aggregate
 # breaks ties by encounter order (arg_max/arg_min/any/take_any);
-# make_list/make_set are sort_array'd (see _AGGS), plain aggregates are
-# value-deterministic (doubles accumulate in decimal). Allowlist, not
-# blocklist: an unknown op disables the optimization, never corrupts.
+# make_list/make_set are sort_array'd (see _AGGS). Plain sum/avg
+# (_AGG_FNS) add doubles in encounter order, so their last bits can still
+# move with row order; only top-nested's sum is exact-decimal. Allowlist,
+# not blocklist: an unknown op disables the optimization, never corrupts.
 _ORDER_INSENSITIVE_OPS = frozenset(
     {"where", "project", "project-away", "project-rename",
      "project-keep", "project-reorder", "extend", "serialize",
@@ -5094,7 +5096,7 @@ def _top_nested(df: DataFrame, rest: str) -> DataFrame:
         if fn == "count":
             return F.count(F.lit(1)).alias(alias)
         if fn == "sum":
-            return F.sum(F.col(arg).cast("decimal(18,6)")).cast("double").alias(alias)
+            return exact_sum(arg, alias)
         if fn in ("min", "max", "avg"):
             return getattr(F, fn)(arg).alias(alias)
         if fn == "dcount":

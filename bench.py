@@ -1,8 +1,14 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
+Usage:
+    python bench.py                      # every HEADLINE row
+    python bench.py <query> [query ...]  # just the named catalog rows
+
 Prints ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}. Each query is executed to completion
 (count-collected) so the timing covers the full scan→shuffle→agg path.
+Named rows get the same protocol, so their numbers compare with a full
+run on the same box.
 """
 
 from __future__ import annotations
@@ -118,7 +124,7 @@ HEADLINE = [
 ]
 
 
-def main() -> None:
+def main(names: list[str]) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
@@ -126,11 +132,14 @@ def main() -> None:
     from azuredataengineering_deeplearning_spark import get_spark
 
     qs = E.queries()
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        raise SystemExit(f"not in catalog: {', '.join(unknown)}")
     spark = get_spark(app_name="ades-bench")
 
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "4"))
     timings: dict[str, float] = {}
-    for name in HEADLINE:
+    for name in names or HEADLINE:
         fn = qs.get(name)
         if fn is None:
             continue
@@ -170,4 +179,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])
