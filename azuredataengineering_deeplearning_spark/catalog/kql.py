@@ -1526,9 +1526,9 @@ def kql_scan_declare(spark, sf_dir):
 def kql_scan_funnel(spark, sf_dir):
     """Kusto ``scan`` (round-10 dialect subset, operators/scan.py):
     greedy single-active view->purchase sequence detection per user,
-    matched rows out with a per-user 0-based match id. The state
-    machine runs per key group (one hash shuffle, packed Arrow
-    batches); predicates compile JVM-side. The DuckDB oracle exploits
+    matched rows out with a per-user 0-based match id. Predicates
+    compile JVM-side; one hash shuffle, a JVM sort, one matcher loop
+    per partition. The DuckDB oracle exploits
     the K=2 closed form: any step-2 row forces the machine idle, so a
     purchase matches exactly the FIRST view after the previous
     purchase (lag + first-in-gap, decorrelated subquery)."""

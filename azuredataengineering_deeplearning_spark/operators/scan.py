@@ -26,38 +26,39 @@ FIRST step-1 row after the previous step-2 row — which is what the
 catalog row's DuckDB oracle exploits (any step-2 row forces the
 machine idle, matched or not).
 
-Scale shape: predicates are compiled JVM-side into boolean columns
-(whole-stage codegen; arbitrary Spark SQL expressions). The sequential
-pass itself is inherently ordered, so it runs per key group via
-``grouped_apply_packed`` (one hash shuffle on the keys, packed Arrow
-batches, AQE-coalescing-proof explicit fan-out). A scan WITHOUT keys
-is a single sequential task by definition (same as Kusto's serialized
-engine) — supported, but the keyed form is the 100-TB path.
+Scale shape: one sorted pass. (1) The step predicates are JVM boolean
+columns (whole-stage codegen), and rows matching no step — which the
+machine never reacts to or emits — are filtered out before (2) one
+hash exchange on the keys (``defaultParallelism`` partitions, exempt
+from AQE coalescing) and ``sortWithinPartitions(keys, order)``, NULLs
+last. (3) One ``mapInPandas`` loop per partition walks the sorted
+rows once, resetting at each key boundary, and emits the matches
+with one positional take. A scan WITHOUT keys is a single sequential
+task by definition (as in Kusto's serialized engine).
 
-HOT-KEY CEILING (probed, SCALING.md "scan hot key"): one key's entire
-history flows through ONE Python task — that is the semantic floor of
-a serialized state machine, no salting can split it. The per-group
-pass is therefore candidate-jump, not per-row: the machine state only
-ever advances on a row matching the CURRENT step, so the matcher
-walks per-step candidate index lists (``np.flatnonzero`` per step,
-vectorized) with monotonic pointers. Python-level cost is
-O(predicate hits), NOT O(group rows): matcher-only at 10M rows, 2%
-hits: 0.04 s vs 0.61 s for the per-row sweep (15x); dense
-every-row-matches worst case: 1.8 s vs 1.25 s (the one shape the
-jump pass loses, accepted for the 15x on the realistic shape).
-End-to-end (a one-off probe, since deleted; 20M events, 50% on one
-key): selective funnel 15.0 s = ~670k hot-rows/s through the single
-task — Arrow transfer + the group's pandas sort now dominate, not
-the matcher; dense 22.3 s (~450k rows/s). That is the hot-key
-ceiling. For groups beyond what one task should hold, pass
-``max_group_rows`` to fail loudly instead of silently running a
-multi-minute task (and consider pre-filtering the input to candidate
-events — the state machine never looks at rows matching no step).
+HOT-KEY CEILING (``tools/scale_probe.py --only scan_hotkey``,
+SCALING.md "scan hot key"): one key's candidate rows flow through ONE
+Python task — the semantic floor of a serialized state machine. At
+2M events with 1M on one key (4-core VM, warm, median of 5):
+selective (2% step hits) 1.15 s, against 3.01 s for the former
+per-group pandas path; dense (every hot-key row matches) 2.75 s
+against 3.14 s, of which the JVM sort plus the Arrow round trip are
+~1.6 s and the Python loop ~0.15 s. For groups beyond what one task
+should hold, ``max_group_rows`` fails loudly instead.
+
+Rejected: a JVM-only ``aggregate`` array fold over ``array_sort(
+collect_list(...))`` per key. A probe of it tied this pass on the
+funnel, but Spark arrays are immutable, so it rebuilds its output
+array on every match — O(rows × matches) per key; on the 1M-row hot
+key it died with ``OutOfMemoryError`` (1 GB heap, and 8 GB after
+173 s).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
+from operator import or_
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -76,26 +77,23 @@ def scan_steps(
     """Emit rows participating in completed step sequences.
 
     ``order_by``: [(column_name, ascending), ...] — the serialized
-    order within each key group (ties make the row visit order, and
-    therefore matching, nondeterministic — same caveat as KQL
-    ``serialize``). ``steps``: one boolean Column per step (nulls are
-    non-matches). Output = the input columns + ``match_col`` (long,
-    0-based per key group, in match-completion order).
+    order within each key group, NULLs last in both directions (ties
+    make the row visit order, and therefore matching, nondeterministic
+    — same caveat as KQL ``serialize``). ``steps``: one boolean Column
+    per step (nulls are non-matches). Output = the input columns +
+    ``match_col`` (long, 0-based per key group, in match-completion
+    order).
 
-    ``max_group_rows``: optional hot-key guard — a key group larger
-    than this raises loudly inside the task instead of silently
-    running one giant sequential pass (see the module docstring's
-    hot-key ceiling).
+    ``max_group_rows``: optional hot-key guard — a key with more
+    CANDIDATE rows (rows matching at least one step) than this raises
+    loudly inside the task instead of silently running one giant
+    sequential pass (see the module docstring's hot-key ceiling).
 
     ``step_col``: optionally also emit each row's 0-based STEP index
     within its match (row j of a match satisfied step j by
     construction — each step matches exactly one row). The KQL
     ``scan declare`` compilation keys its post-hoc state-variable
     windows on this column."""
-    from azuredataengineering_deeplearning_spark.operators.timeseries import (
-        grouped_apply_packed,
-    )
-
     if not steps:
         raise ValueError("scan_steps needs at least one step predicate")
     if not order_by:
@@ -103,98 +101,89 @@ def scan_steps(
     import numpy as np
 
     k = len(steps)
-    orig = df.columns
-    pred_cols = [f"__scanp{i}" for i in range(k)]
-    work = df.select(
+    keys = list(keys)
+    flags = [p.cast("boolean") for p in steps]
+    # rows matching no step never move the machine and are never
+    # emitted, so they stop here, before the exchange
+    work = df.filter(reduce(or_, flags)).select(
         "*",
-        *[
-            F.coalesce(p.cast("boolean"), F.lit(False)).alias(pc)
-            for p, pc in zip(steps, pred_cols)
-        ],
+        *[F.coalesce(f, F.lit(False)).alias(f"__scanp{j}")
+          for j, f in enumerate(flags)],
     )
-    drop_key = False
-    if not keys:
-        work = work.withColumn("__scank", F.lit(0))
-        keys = ["__scank"]
-        drop_key = True
-    names = [c for c, _ in order_by]
-    ascending = [asc for _, asc in order_by]
+    order = [F.col(c).asc_nulls_last() for c in keys] + [
+        F.col(c).asc_nulls_last() if asc else F.col(c).desc_nulls_last()
+        for c, asc in order_by
+    ]
+    n_parts = df.sparkSession.sparkContext.defaultParallelism if keys else 1
+    extra = [T.StructField(match_col, T.LongType())]
+    if step_col:
+        extra.append(T.StructField(step_col, T.IntegerType()))
+    out_schema = T.StructType(df.schema.fields + extra)
 
-    out_schema = T.StructType(
-        [f for f in work.schema.fields if f.name not in pred_cols]
-        + [T.StructField(match_col, T.LongType(), True)]
-        + (
-            [T.StructField(step_col, T.IntegerType(), True)]
-            if step_col
-            else []
-        )
-    )
-    keep_cols = [f.name for f in work.schema.fields if f.name not in pred_cols]
+    def matcher(batches):
+        import pandas as pd
 
-    def matcher(g):
+        pdfs = [b for b in batches if len(b)]
+        if not pdfs:
+            return
+        g = pd.concat(pdfs, ignore_index=True)
         n = len(g)
-        if max_group_rows is not None and n > max_group_rows:
-            key_desc = {kk: g[kk].iloc[0] for kk in keys}
-            raise ValueError(
-                f"scan_steps: key group {key_desc} has {n} rows, over "
-                f"max_group_rows={max_group_rows}. A scan group is one "
-                "sequential task by semantics — pre-filter to candidate "
-                "events, split the key, or raise the guard."
-            )
-        g = g.sort_values(
-            by=names, ascending=ascending, kind="mergesort"
-        ).reset_index(drop=True)
-        # Candidate-jump pass: the machine in state `nxt` only reacts
-        # to rows matching step `nxt`, so walk per-step candidate index
-        # lists with monotonic pointers (pos only grows, so skipped
-        # candidates are never needed again). Equivalent to the per-row
-        # sweep but costs O(predicate hits), not O(n), python work —
-        # a no-candidate group exits without touching its rows.
-        idx = [
-            np.flatnonzero(
-                g[pc].to_numpy(dtype=bool, na_value=False)
-            ).tolist()
-            for pc in pred_cols
-        ]
-        lens = [len(a) for a in idx]
-        ptr = [0] * k
-        matched: list[int] = []
-        mids: list[int] = []
-        pos, m, nxt, cur = -1, 0, 0, []
-        while True:
-            a, p, ln = idx[nxt], ptr[nxt], lens[nxt]
-            while p < ln and a[p] <= pos:
-                p += 1
-            if p >= ln:
-                ptr[nxt] = p
-                break
-            ptr[nxt] = p + 1
-            i = a[p]
-            cur.append(i)
-            pos = i
-            if nxt == k - 1:
-                matched.extend(cur)
-                mids.extend([m] * k)
-                m += 1
-                cur, nxt = [], 0
-            else:
-                nxt += 1
-        mid = np.full(n, -1, dtype=np.int64)
-        if matched:
-            mid[np.asarray(matched)] = np.asarray(mids)
-        sel = mid >= 0
-        out = g.loc[sel, keep_cols].copy()
-        out[match_col] = mid[sel]
-        if step_col:
-            sid = np.full(n, -1, dtype=np.int32)
-            if matched:
-                # cur is appended in step order, so each match's rows
-                # carry steps 0..k-1 in sequence
-                sid[np.asarray(matched)] = np.tile(
-                    np.arange(k, dtype=np.int32), len(matched) // k
+        # rows arrive sorted by (keys, order): a key starts wherever any
+        # key column differs from the previous row (NULL == NULL)
+        start = np.zeros(n, dtype=bool)
+        start[0] = True
+        for kc in keys:
+            v = g[kc].to_numpy()
+            na = g[kc].isna().to_numpy()
+            start[1:] |= (v[1:] != v[:-1]) & ~(na[1:] & na[:-1])
+        heads = np.flatnonzero(start)
+        gid = np.cumsum(start) - 1
+        if max_group_rows is not None:
+            sizes = np.bincount(gid)
+            big = int(sizes.argmax())
+            if sizes[big] > max_group_rows:
+                key_desc = {kc: g[kc].iloc[heads[big]] for kc in keys}
+                raise ValueError(
+                    f"scan_steps: key group {key_desc} has {sizes[big]} "
+                    f"candidate rows, over max_group_rows={max_group_rows}. "
+                    "A scan group is one sequential task by semantics — "
+                    "split the key or raise the guard."
                 )
-            out[step_col] = sid[sel]
-        return out
+        # bit j of a row's mask = the row satisfies step j
+        masks = sum(
+            g.pop(f"__scanp{j}").to_numpy(dtype=np.int64) << j
+            for j in range(k)
+        ).tolist()
+        bounds = heads.tolist() + [n]
+        top = 1 << (k - 1)
+        pos: list[int] = []
+        for a, b in zip(bounds, bounds[1:]):
+            # `bit` is the step the machine waits for; `done` ends the
+            # key's completed matches, so an open match is cut off
+            done, bit = len(pos), 1
+            for i, mk in enumerate(masks[a:b], a):
+                if mk & bit:
+                    pos.append(i)
+                    if bit == top:
+                        done, bit = len(pos), 1
+                    else:
+                        bit <<= 1
+            del pos[done:]
+        if not pos:
+            return
+        out = g.take(pos)
+        # match j is the j-th K-row block of `pos`; mg (its key) is
+        # nondecreasing, so a key's first match is a binary search away
+        mg = gid[pos[::k]]
+        mid = np.arange(len(mg)) - np.searchsorted(mg, mg)
+        out[match_col] = np.repeat(mid, k)
+        if step_col:
+            # each match's rows were appended in step order 0..k-1
+            out[step_col] = np.tile(np.arange(k, dtype=np.int32), len(mg))
+        yield out
 
-    result = grouped_apply_packed(work, list(keys), matcher, out_schema)
-    return result.drop("__scank") if drop_key else result
+    return (
+        work.repartition(n_parts, *keys)
+        .sortWithinPartitions(*order)
+        .mapInPandas(matcher, schema=out_schema)
+    )

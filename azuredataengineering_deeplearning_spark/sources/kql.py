@@ -5427,18 +5427,17 @@ def _split_csv(s: str) -> list[str]:
 def _scan_kql(
     df: DataFrame, rest: str, now: str | None, order_spec: str | None
 ) -> DataFrame:
-    """``scan [by keys] [with_match_id=Name] with (step s1: cond; ...)``
-    — sequential pattern matching (operators/scan.py does the work).
+    """``scan [output=all|last|none] [by keys] [with_match_id=Name]
+    [declare (v: type [= default], ...)] with (step s1: cond [=> v =
+    expr]; ...)`` — sequential pattern matching (operators/scan.py).
 
-    Dialect subset of Kusto ``scan`` (daily_eval-adjacent telemetry
-    sequence detection): greedy single-active non-overlapping matching,
-    each step matches exactly one row, no ``declare``/assignments, and
-    matched rows are emitted with a per-key 0-based match id. The
-    ``by keys`` clause is a dialect EXTENSION: Kusto shards a scan by
-    composing ``partition by key (scan ...)``; accepting ``by`` here
-    compiles straight to the keyed distributed form (one hash shuffle)
-    instead of a partition loop. Requires a preceding ``sort by`` —
-    the serialized order, exactly like row_cumsum/prev/next."""
+    Dialect subset of Kusto ``scan``: greedy single-active
+    non-overlapping matching, each step matches exactly one row, rows
+    emitted with a per-key 0-based match id; ``declare`` variables take
+    additive or set assignments, computed after matching. ``by keys``
+    is a dialect EXTENSION (Kusto composes ``partition by key (scan
+    ...)``) that compiles to the keyed distributed form. Requires a
+    preceding ``sort by`` — the serialized order, like row_cumsum."""
     if order_spec is None:
         raise ValueError(
             "scan needs a preceding 'sort by' (KQL serialize semantics)"

@@ -4,6 +4,7 @@ the documented state machine (greedy, single-active, non-overlapping,
 one row per step)."""
 
 import random
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -131,6 +132,68 @@ def test_scan_property_vs_python_reference(spark):
     assert got == sorted(expected_rows)
 
 
+def _visit_order(rows, descending):
+    """Reference serialized order of one key's rows: ``o`` (asc or
+    desc) with NULLs last in both directions, then ``seq`` ascending."""
+    return sorted(
+        rows,
+        key=lambda r: (
+            r["o"] is None,
+            0 if r["o"] is None else (-r["o"] if descending else r["o"]),
+            r["seq"],
+        ),
+    )
+
+
+@pytest.mark.parametrize("two_keys", [False, True])
+@pytest.mark.parametrize("descending", [False, True])
+def test_scan_property_nulls_keys_overlaps(spark, descending, two_keys):
+    # NULL order values, NULL keys, one or two key columns, rows that
+    # satisfy two steps at once, and long runs matching no step
+    rng = random.Random(11 + 2 * descending + two_keys)
+    rows, seq = [], 0
+    while len(rows) < 1200:
+        k1 = rng.choice([0, 1, 2, 3, 4, None])
+        k2 = rng.choice([0, 1, None]) if two_keys else 0
+        if rng.random() < 0.1:
+            evs = ["X"] * rng.randint(20, 80)
+        else:
+            evs = [rng.choice(["A", "B", "C", "AB", "BC", "AC", "X"])]
+        for ev in evs:
+            o = None if rng.random() < 0.15 else rng.randint(0, 30)
+            rows.append({"k1": k1, "k2": k2, "o": o, "seq": seq, "ev": ev})
+            seq += 1
+    groups: dict = {}
+    for r in rows:
+        groups.setdefault((r["k1"], r["k2"]), []).append(r)
+    expected = set()
+    for (k1, k2), grp in groups.items():
+        visit = _visit_order(grp, descending)
+        levels = [
+            {j for j, c in enumerate("ABC") if c in r["ev"]} for r in visit
+        ]
+        mids = _py_reference(levels, 3)
+        step = {}
+        for r, m in zip(visit, mids):
+            if m >= 0:
+                expected.add((k1, k2, r["seq"], m, step.get(m, 0)))
+                step[m] = step.get(m, 0) + 1
+    df = spark.createDataFrame(
+        [(r["k1"], r["k2"], r["o"], r["seq"], r["ev"]) for r in rows],
+        "k1 int, k2 int, o int, seq int, ev string",
+    )
+    out = scan_steps(
+        df,
+        ["k1", "k2"] if two_keys else ["k1"],
+        [("o", not descending), ("seq", True)],
+        [F.col("ev").contains(c) for c in "ABC"],
+        step_col="st",
+    )
+    got = {(r.k1, r.k2, r.seq, r.match_id, r.st) for r in out.collect()}
+    assert len(expected) > 50
+    assert got == expected
+
+
 def test_kql_scan_front_end(ab):
     out = kql_to_df(
         {"T": ab},
@@ -200,8 +263,8 @@ def test_scan_max_group_rows_guard(ab):
 
 
 def test_scan_no_candidates_fast_exit(spark):
-    # the candidate-jump matcher exits without visiting rows when a
-    # step has no hits — semantics: zero matches, zero output rows
+    # rows matching no step are filtered out in the JVM, so nothing
+    # reaches the matcher — semantics: zero matches, zero output rows
     df = spark.createDataFrame(
         [(1, i, "X") for i in range(50)], "k int, seq int, ev string"
     )
@@ -210,6 +273,47 @@ def test_scan_no_candidates_fast_exit(spark):
         [F.col("ev") == "A", F.col("ev") == "B"],
     )
     assert out.count() == 0
+
+
+def test_scan_guard_counts_candidate_rows(spark):
+    # the guard bounds a key's CANDIDATE rows (rows matching a step):
+    # 50 rows of which 2 match pass max_group_rows=3...
+    rows = [
+        (1, i, "A" if i == 10 else "B" if i == 40 else "X") for i in range(50)
+    ]
+    df = spark.createDataFrame(rows, "k int, seq int, ev string")
+    steps = [F.col("ev") == "A", F.col("ev") == "B"]
+    out = scan_steps(df, ["k"], [("seq", True)], steps, max_group_rows=3)
+    got = sorted((r.seq, r.match_id) for r in out.collect())
+    assert got == [(10, 0), (40, 0)]
+    # ...while a key with 4 candidate rows is over the bound
+    over = df.unionByName(
+        spark.createDataFrame(
+            [(2, i, "AB"[i % 2]) for i in range(4)], df.schema
+        )
+    )
+    with pytest.raises(Exception, match="max_group_rows"):
+        scan_steps(
+            over, ["k"], [("seq", True)], steps, max_group_rows=3
+        ).count()
+
+
+def test_scan_plan_filter_below_exchange_sort_feeds_matcher(ab):
+    # non-candidate rows are dropped before the shuffle and never reach
+    # Python; the JVM sort hands the single matcher pass ordered rows
+    out = scan_steps(
+        ab, ["k"], [("seq", True)], [F.col("ev") == "A", F.col("ev") == "B"]
+    )
+    lines = out._jdf.queryExecution().executedPlan().toString().splitlines()
+    ops = [re.sub(r"^[\s+\-:|]*(\*\(\d+\) )?", "", ln) for ln in lines]
+    names = [op.split(" ")[0] for op in ops]
+    assert names.count("MapInPandas") == 1
+    assert names[names.index("MapInPandas") + 1] == "Sort"
+    exchange = names.index("Exchange")
+    assert ops[exchange].startswith("Exchange hashpartitioning(k#")
+    step_filter = names.index("Filter")
+    assert step_filter > exchange
+    assert "ev#" in ops[step_filter]
 
 
 # ---- scan declare (round 11): state variables -------------------------

@@ -7,6 +7,7 @@ IVF-vs-brute-force ANN pruning. Synthetic inputs are generated
 distributed (spark.range — never driver-side lists) into a temp dir.
 
 Usage: python tools/scale_probe.py [--rows 20000000] [--vectors 200000]
+       python tools/scale_probe.py --rows 2000000 --only scan_hotkey
 Prints one JSON line per probe plus a closing summary line.
 """
 
@@ -28,6 +29,64 @@ def timed(fn):
     return round(time.time() - t0, 2), out
 
 
+def scan_hotkey_probes(spark, rows: int, results: dict) -> None:
+    """KQL ``scan`` on a hot key: ``rows`` events in ts order, every
+    even id on user 0 (half of the rows), the rest over 999 users.
+
+    - ``scan_hotkey_selective``: 2% of rows hit one of two steps
+      (xxhash buckets), the realistic funnel shape;
+    - ``scan_hotkey_dense``: the two steps alternate along user 0's ts
+      order, so every hot-key row is matched (checked) and no other
+      key completes a match — the worst case for the matcher.
+
+    Each prints the matched-row count and a checksum over
+    (ts, match_id), so two versions of the engine can be compared."""
+    from pyspark.sql import functions as F
+
+    from azuredataengineering_deeplearning_spark.operators.scan import (
+        scan_steps,
+    )
+
+    ev = spark.range(rows).select(
+        F.when(F.col("id") % 2 == 0, 0)
+        .otherwise(F.col("id") % 1000)
+        .alias("user_id"),
+        F.col("id").alias("ts"),
+        (F.abs(F.xxhash64("id")) % 100).alias("bucket"),
+        ((F.col("id") / 2).cast("long") % 2).alias("phase"),
+    )
+    shapes = {
+        "scan_hotkey_selective": [F.col("bucket") == 0, F.col("bucket") == 1],
+        "scan_hotkey_dense": [F.col("phase") == 0, F.col("phase") == 1],
+    }
+    hot_rows = (rows + 1) // 2
+    for name, steps in shapes.items():
+
+        def _run():
+            return (
+                scan_steps(ev, ["user_id"], [("ts", True)], steps)
+                .agg(
+                    F.count("*").alias("matched"),
+                    F.sum((F.col("user_id") == 0).cast("long")).alias("hot"),
+                    F.sum(F.col("ts") * 31 + F.col("match_id")).alias(
+                        "checksum"
+                    ),
+                )
+                .first()
+            )
+
+        t, r = timed(_run)
+        t2, r = timed(_run)
+        if name == "scan_hotkey_dense" and r["hot"] != hot_rows:
+            raise SystemExit(
+                f"{name}: {r['hot']} of {hot_rows} hot-key rows matched"
+            )
+        results[name] = t2
+        print(json.dumps({"probe": name, "rows": rows, "hot_rows": hot_rows,
+                          "matched": r["matched"], "checksum": r["checksum"],
+                          "sec_cold": t, "sec": t2}))
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--rows", type=int, default=20_000_000)
@@ -36,6 +95,8 @@ def main() -> None:
     ap.add_argument("--edges", type=int, default=2_000_000)
     ap.add_argument("--docs", type=int, default=1_000_000)
     ap.add_argument("--scores", type=int, default=4_000_000)
+    ap.add_argument("--only", choices=["scan_hotkey"],
+                    help="run just this probe group")
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
@@ -46,6 +107,12 @@ def main() -> None:
 
     spark = get_spark(app_name="scale-probe")
     results: dict[str, float] = {}
+    scan_hotkey_probes(spark, args.rows, results)
+    if args.only == "scan_hotkey":
+        print(json.dumps({"metric": "scale_probe", "rows": args.rows,
+                          "results": results}))
+        spark.stop()
+        return
 
     with tempfile.TemporaryDirectory() as tmp:
         # ---- skewed events: 50% of rows on ONE key --------------------
