@@ -285,11 +285,11 @@ def pipeline_curate_corpus(spark, sf_dir):
     )
 
     # cache_scope: minhash persists shingle/signature frames; they are
-    # only needed until resolve_clusters eagerly checkpoints the pair
-    # edge list (its first statement; its result is a driver-local frame
-    # or a checkpointed label table, never the pair plan), so release
-    # them at block exit — the pipeline holds zero tracked sketch
-    # caches after this stage
+    # only needed until resolve_clusters has consumed the pair plan (a
+    # bounded collect, plus an edge-list checkpoint on overflow; its
+    # result is a driver-local frame or a checkpointed label table,
+    # never the pair plan), so release them at block exit — the
+    # pipeline holds zero tracked sketch caches after this stage
     with DD.cache_scope():
         pairs = DD.minhash_near_duplicates(sub, "doc_id", "text", threshold=0.8)
         losers = (

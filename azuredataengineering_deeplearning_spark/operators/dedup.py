@@ -27,9 +27,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from azuredataengineering_deeplearning_spark.functions.strings import sql_ident
 from azuredataengineering_deeplearning_spark.sources.readers import local_rows_df
 from azuredataengineering_deeplearning_spark.operators.text import (
     fingerprint,
+    ngrams_sql,
     token_hash60,
     tokens,
     word_shingles,
@@ -45,7 +47,10 @@ MERSENNE31 = 2_147_483_647  # 2^31 - 1, prime modulus for the hash family
 # STRONG references on purpose: the JVM cache outlives the Python
 # handle (GC of the handle does NOT unpersist), so a weak registry
 # would lose the only way to release the executor storage. The handles
-# themselves are a few hundred bytes each.
+# themselves are a few hundred bytes each. resolve_clusters consumes its
+# pair plan eagerly (a bounded collect, or a checkpoint on overflow), so
+# a cache_scope around minhash + resolve_clusters releases the sketches
+# as soon as the components are known.
 _CACHED: list[DataFrame] = []
 
 
@@ -311,7 +316,28 @@ def _shingled(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
     # measured repartition cost exceeds the narrow-input compute here
     return df.select(
         F.col(id_col), word_shingles(text_col, k).alias("__shingles")
-    ).filter(F.size("__shingles") > 0)
+    ).filter("size(__shingles) > 0")
+
+
+def _signatures(shingled: DataFrame, id_col: str, num_hashes: int) -> DataFrame:
+    """(id, signature) from a :func:`_shingled` frame: shingle explode →
+    60-bit md5 hash → mod 2^31-1 → ``num_hashes`` affine permutations,
+    min per doc. One explode + one groupBy, all map-side-combinable; the
+    mins are one SQL string, so building the plan costs a few Py4J
+    calls, not a few per hash."""
+    if num_hashes > len(MINHASH_FAMILY):
+        raise ValueError(f"num_hashes must be <= {len(MINHASH_FAMILY)}")
+    ident = sql_ident(id_col)
+    mins = ", ".join(
+        f"min(({a} * __h + {b}) % {MERSENNE31})"
+        for a, b in MINHASH_FAMILY[:num_hashes]
+    )
+    return (
+        shingled.selectExpr(ident, "explode(__shingles) AS __s")
+        .select(id_col, (token_hash60("__s") % MERSENNE31).alias("__h"))
+        .groupBy(id_col)
+        .agg(F.expr(f"array({mins}) AS signature"))
+    )
 
 
 def minhash_signatures(
@@ -321,25 +347,10 @@ def minhash_signatures(
     num_hashes: int = 16,
     shingle_k: int = 3,
 ) -> DataFrame:
-    """Per-doc MinHash signature (array<long>, length ``num_hashes``).
-
-    shingle explode → 60-bit md5 hash → mod 2^31-1 → ``num_hashes``
-    affine permutations, min per doc — one explode + one groupBy, all
-    map-side-combinable."""
-    assert num_hashes <= len(MINHASH_FAMILY)
-    sh = _shingled(df, id_col, text_col, shingle_k)
-    exploded = sh.select(
-        id_col, F.explode("__shingles").alias("__s")
-    ).withColumn("__h", token_hash60(F.col("__s")) % MERSENNE31)
-    mins = exploded.groupBy(id_col).agg(
-        *[
-            F.min((F.lit(a) * F.col("__h") + F.lit(b)) % MERSENNE31).alias(f"__m{i}")
-            for i, (a, b) in enumerate(MINHASH_FAMILY[:num_hashes])
-        ]
-    )
-    return mins.select(
-        id_col, F.array(*[f"__m{i}" for i in range(num_hashes)]).alias("signature")
-    )
+    """Per-doc MinHash signature (array<long>, length ``num_hashes``)
+    over the distinct ``shingle_k``-word shingles; docs shorter than
+    ``shingle_k`` words (or NULL text) have no row."""
+    return _signatures(_shingled(df, id_col, text_col, shingle_k), id_col, num_hashes)
 
 
 def lsh_candidate_pairs(
@@ -351,28 +362,18 @@ def lsh_candidate_pairs(
     """Banded-LSH candidate generation: docs sharing any band's row
     values collide. A bucket *join* on (band, values) — candidate count
     scales with bucket occupancy, not n². Returns (id_a, id_b), a < b."""
-    banded = signatures.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("band"),
-                        *[
-                            F.col("signature")[j * rows_per_band + r].alias(f"v{r}")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                    for j in range(bands)
-                ]
-            )
-        ).alias("__b"),
-    ).select(id_col, "__b.*")
-    left = banded.select(F.col(id_col).alias("id_a"), "band", *[f"v{r}" for r in range(rows_per_band)])
-    right = banded.select(F.col(id_col).alias("id_b"), "band", *[f"v{r}" for r in range(rows_per_band)])
+    vals = [f"v{r}" for r in range(rows_per_band)]
+    bucket = ", ".join(
+        f"named_struct('band', {j}, "
+        + ", ".join(f"'{v}', signature[{j * rows_per_band + r}]" for r, v in enumerate(vals))
+        + ")"
+        for j in range(bands)
+    )
+    banded = signatures.selectExpr(f"{sql_ident(id_col)} AS __id", f"inline(array({bucket}))")
     return (
-        left.join(right, ["band"] + [f"v{r}" for r in range(rows_per_band)])
-        .filter(F.col("id_a") < F.col("id_b"))
+        banded.withColumnRenamed("__id", "id_a")
+        .join(banded.withColumnRenamed("__id", "id_b"), ["band", *vals])
+        .filter("id_a < id_b")
         .select("id_a", "id_b")
         .distinct()
     )
@@ -419,20 +420,9 @@ def minhash_near_duplicates(
     # cluster scale: checkpoint to the lake instead); release later via
     # unpersist_caches()
     sh = _persist_tracked(_shingled(df, id_col, text_col, shingle_k))
-    exploded = sh.select(
-        id_col, F.explode("__shingles").alias("__s")
-    ).withColumn("__h", token_hash60(F.col("__s")) % MERSENNE31)
-    sigs = exploded.groupBy(id_col).agg(
-        *[
-            F.min((F.lit(a) * F.col("__h") + F.lit(b)) % MERSENNE31).alias(f"__m{i}")
-            for i, (a, b) in enumerate(MINHASH_FAMILY[:num_hashes])
-        ]
-    ).select(
-        id_col, F.array(*[f"__m{i}" for i in range(num_hashes)]).alias("signature")
-    )
     # both sides of the band bucket self-join read it; the frame is
     # id + num_hashes longs (~140 B/doc), spill-safe
-    sigs = _persist_tracked(sigs)
+    sigs = _persist_tracked(_signatures(sh, id_col, num_hashes))
     cands = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band)
     return jaccard_verify(cands, sh, id_col, threshold)
 
@@ -602,8 +592,22 @@ def simhash_near_duplicates(
     )
 
 
-# Largest cluster graph (in edges) the driver union-find finishes; a
-# bigger one first runs distributed label rounds. ~50k (id, id) rows is
+@contextmanager
+def _job_description(spark, text: str):
+    """Label the Spark jobs launched inside the block with ``text``
+    (the Spark UI / status tracker job description), then restore the
+    caller's description. The job group is not touched."""
+    sc = spark.sparkContext
+    caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", caller)
+
+
+# Largest pair list or cluster graph (in edges) the driver union-find
+# finishes; a bigger one first runs distributed label rounds. ~50k (id, id) rows is
 # ~1 MB on the driver. Tests monkeypatch it to force the rounds.
 _DRIVER_EDGES = 50_000
 
@@ -706,16 +710,27 @@ def resolve_clusters(
     """Connected components over a near-dup pair list → (node,
     cluster_id), cluster_id = smallest id in the node's component.
 
-    Every node carries a label, at first itself. The *cluster graph* is
-    the set of edges between label classes: before any round, the edges
-    themselves (``src <= dst``, so self-loop nodes are kept); after a
-    round, the distinct (label(src), label(dst)) pairs with label(src) <
-    label(dst). Each pass collects the cluster graph with
-    ``limit(_DRIVER_EDGES + 1)``. If it fits, a driver union-find with
-    min roots finishes the job; if not, one distributed round (hook plus
-    pointer jumps, :func:`_label_round`) runs and the pass repeats. After a round whose labels already prove the cluster
-    graph too big (:func:`_class_surplus`, a lower bound on its size,
-    over ``_DRIVER_EDGES``), the next round runs without building it.
+    The pair list itself is collected first, with ``limit(_DRIVER_EDGES
+    + 1)``. If it fits, a driver union-find with min roots finishes and
+    the result is a driver-local frame. The pairs are persisted for that
+    collect, so on overflow the symmetric, distinct edge list is built
+    from the computed pairs, not from a second run of the pair plan
+    (band and verify joins included); it is checkpointed and the
+    persist released on both paths.
+
+    Rounds. Every node carries a label, at first itself. The *cluster
+    graph* is the set of edges between label classes: before any round,
+    the checkpointed edges themselves (``src <= dst``, so self-loop
+    nodes are kept; a pair list that overflowed only through repeated
+    or mirrored pairs fits here); after a round, the distinct
+    (label(src), label(dst)) pairs with label(src) < label(dst). Each
+    pass collects the cluster graph with ``limit(_DRIVER_EDGES + 1)``.
+    If it fits, the driver union-find finishes the job; if not, one
+    distributed round (hook plus pointer jumps, :func:`_label_round`)
+    runs and the pass repeats. After a round whose labels already prove
+    the cluster graph too big (:func:`_class_surplus`, a lower bound on
+    its size, over ``_DRIVER_EDGES``), the next round runs without
+    building it.
 
     Correctness. A round only lowers a label, and only to the label of
     a node in the same component (a neighbour's, a neighbour of its
@@ -738,46 +753,57 @@ def resolve_clusters(
     Driver bound. No collect holds more than ``_DRIVER_EDGES + 1`` rows
     (~1 MB), whatever the hub degree or component size.
 
-    Pairs with a NULL id are ignored. The symmetric edge list is
-    checkpointed first, so the result never reads ``pairs`` again:
-    caches the pair plan depends on (the MinHash sketches under
-    :func:`cache_scope`) may be released as soon as this returns. If no
-    round ran, the result is a driver-local frame; otherwise the label
-    → root map is broadcast onto the checkpointed label table."""
-    edges = pairs.select(F.col(id_a).alias("__src"), F.col(id_b).alias("__dst"))
-    edges = (
-        edges.union(
-            edges.select(F.col("__dst").alias("__src"), F.col("__src").alias("__dst"))
-        )
-        .dropna()
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    Pairs with a NULL id are ignored. The result never reads ``pairs``
+    again (a driver-local frame, or the label → root map broadcast onto
+    the checkpointed label table), so caches the pair plan depends on
+    (the MinHash sketches under :func:`cache_scope`) may be released as
+    soon as this returns. The Spark jobs it launches carry the job
+    description ``dedup.resolve_clusters``; the caller's description is
+    restored on exit and its job group is left alone."""
     spark = pairs.sparkSession
-    id_type = edges.schema["__src"].dataType
-    schema = StructType(
-        [StructField("node", id_type), StructField("cluster_id", id_type)]
-    )
-    labels = None
-    graph = edges.filter(F.col("__src") <= F.col("__dst"))
-    while True:
-        if graph is not None:
-            rows = graph.limit(_DRIVER_EDGES + 1).collect()
-            if len(rows) <= _DRIVER_EDGES:
-                break
-        labels = _label_round(edges, labels)
-        graph = None
-        if _class_surplus(labels) <= _DRIVER_EDGES:
-            graph = _cluster_graph(edges, labels)
-    roots = _union_find(rows)
-    if labels is None:
-        return local_rows_df(spark, roots.items(), schema)
-    if roots:
-        root_map = local_rows_df(spark, roots.items(), schema).toDF("label", "__root")
-        labels = labels.join(F.broadcast(root_map), "label", "left").select(
-            "node", F.coalesce("__root", "label").alias("label")
+    with _job_description(spark, "dedup.resolve_clusters"):
+        raw = (
+            pairs.select(F.col(id_a).alias("__src"), F.col(id_b).alias("__dst"))
+            .dropna()
+            .persist()
         )
-    return labels.select(F.col("node"), F.col("label").alias("cluster_id"))
+        try:
+            id_type = raw.schema["__src"].dataType
+            schema = StructType(
+                [StructField("node", id_type), StructField("cluster_id", id_type)]
+            )
+            rows = raw.limit(_DRIVER_EDGES + 1).collect()
+            if len(rows) <= _DRIVER_EDGES:
+                return local_rows_df(spark, _union_find(rows).items(), schema)
+            edges = (
+                raw.union(
+                    raw.select(F.col("__dst").alias("__src"), F.col("__src").alias("__dst"))
+                )
+                .distinct()
+                .localCheckpoint(eager=True)
+            )
+        finally:
+            raw.unpersist()
+        labels = None
+        graph = edges.filter(F.col("__src") <= F.col("__dst"))
+        while True:
+            if graph is not None:
+                rows = graph.limit(_DRIVER_EDGES + 1).collect()
+                if len(rows) <= _DRIVER_EDGES:
+                    break
+            labels = _label_round(edges, labels)
+            graph = None
+            if _class_surplus(labels) <= _DRIVER_EDGES:
+                graph = _cluster_graph(edges, labels)
+        roots = _union_find(rows)
+        if labels is None:
+            return local_rows_df(spark, roots.items(), schema)
+        if roots:
+            root_map = local_rows_df(spark, roots.items(), schema).toDF("label", "__root")
+            labels = labels.join(F.broadcast(root_map), "label", "left").select(
+                "node", F.coalesce("__root", "label").alias("label")
+            )
+        return labels.select(F.col("node"), F.col("label").alias("cluster_id"))
 
 
 def contamination_flags(
@@ -805,26 +831,13 @@ def contamination_flags(
     is ``xxhash64`` of the token slice (same kernel as
     ``text.gram_hashes``), so the corpus side never pays array_join
     string building — ~2x less per-document work on the big side."""
-    from azuredataengineering_deeplearning_spark.operators.text import (
-        gram_hashes,
-        word_ngrams,
-    )
-
-    def grams(df, *keep):
-        if hash_grams:
-            return df.select(
-                *keep, F.explode(gram_hashes(text_col, n)).alias("__g")
-            )
-        return df.select(
-            *keep, F.explode(F.array_distinct(word_ngrams(text_col, n))).alias("__g")
-        )
-
-    bench_grams = grams(benchmark).distinct()
     from azuredataengineering_deeplearning_spark.operators.relational import (
         widen_narrow_input,
     )
 
-    corpus_grams = grams(widen_narrow_input(corpus), id_col)
+    explode = f"explode(array_distinct({ngrams_sql(text_col, n, hashed=hash_grams)})) AS __g"
+    bench_grams = benchmark.selectExpr(explode).distinct()
+    corpus_grams = widen_narrow_input(corpus).selectExpr(sql_ident(id_col), explode)
     return (
         corpus_grams.join(bench_grams, "__g", "left_semi")
         .groupBy(id_col)

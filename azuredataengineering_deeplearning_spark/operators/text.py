@@ -21,6 +21,8 @@ import pandas as pd  # noqa: F401 — resolves pandas_udf type hints under PEP 5
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from azuredataengineering_deeplearning_spark.functions.strings import sql_ident
+
 TOKEN_SPLIT = " "  # driver corpus is single-space tokenized
 
 
@@ -75,29 +77,42 @@ def token_hash_fast(col: Column | str, seed: int = 42) -> Column:
     return F.xxhash64(_c(col), F.lit(seed))
 
 
-def word_shingles(col: Column | str, k: int = 3, sep: str = TOKEN_SPLIT) -> Column:
+def _sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal (backslash escapes)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def ngrams_sql(col: str, k: int, sep: str = TOKEN_SPLIT, hashed: bool = False) -> str:
+    """SQL expression for a document's k-word grams in order, repeats
+    kept → array<string>, or array<bigint> with ``hashed``. A gram is
+    the space-joined token slice; with ``hashed`` it is ``xxhash64`` of
+    the slice itself, never materializing the string. Docs shorter than
+    k words have no grams (the oracles drop them too).
+
+    One string parsed once, where composing Column objects pays a Py4J
+    round trip per expression node. slice + array_join is one bounds-checked
+    copy per gram (~3.4x faster than n chained element_at/concat_ws).
+    The split is bound once as the lambda variable ``w`` (the
+    :func:`bind_once` shape): Catalyst inlines an outer expression a
+    lambda references, re-tokenizing the document per gram."""
+    gram = f"xxhash64(slice(w, i, {k}))" if hashed else f"array_join(slice(w, i, {k}), ' ')"
+    empty = "bigint" if hashed else "string"
+    return (
+        f"element_at(transform(array(split({sql_ident(col)}, {_sql_string(sep)})), "
+        f"w -> CASE WHEN size(w) >= {k} "
+        f"THEN transform(sequence(1, size(w) - {k - 1}), i -> {gram}) "
+        f"ELSE CAST(array() AS array<{empty}>) END), 1)"
+    )
+
+
+def word_shingles(col: str, k: int = 3, sep: str = TOKEN_SPLIT) -> Column:
     """Distinct k-word shingles of a document → array<string>. The
     discriminative unit for near-dup detection (word *sets* saturate on
     shared-vocabulary corpora)."""
-    # slice + array_join: one catalyst call per shingle (see word_ngrams);
-    # docs shorter than k shingle to empty (the oracle drops them too).
-    # bind_once: the lambda must see the split as a bound variable, not
-    # re-tokenize the document per shingle.
-    def build(w: Column) -> Column:
-        sh = F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size(w) - k + 1),
-                lambda i: F.array_join(F.slice(w, i, k), " "),
-            )
-        )
-        return F.when(F.size(w) >= k, sh).otherwise(
-            F.array().cast("array<string>")
-        )
-
-    return bind_once(tokens(col, sep), build)
+    return F.expr(f"array_distinct({ngrams_sql(col, k, sep)})")
 
 
-def gram_hashes(col: Column | str, k: int = 3, sep: str = TOKEN_SPLIT) -> Column:
+def gram_hashes(col: str, k: int = 3, sep: str = TOKEN_SPLIT) -> Column:
     """Distinct k-word shingles as 64-bit HASHES (array<bigint>) —
     ``xxhash64`` of the token SLICE directly, never materializing the
     joined shingle string. ~2x cheaper per document than
@@ -105,19 +120,7 @@ def gram_hashes(col: Column | str, k: int = 3, sep: str = TOKEN_SPLIT) -> Column
     consumers that only compare shingles for equality (exact-jaccard
     gram joins, blocking). Keep :func:`word_shingles` where the string
     itself is consumed (minhash md5 oracle parity, forensics)."""
-
-    def build(w: Column) -> Column:
-        sh = F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size(w) - k + 1),
-                lambda i: F.xxhash64(F.slice(w, i, k)),
-            )
-        )
-        return F.when(F.size(w) >= k, sh).otherwise(
-            F.array().cast("array<bigint>")
-        )
-
-    return bind_once(tokens(col, sep), build)
+    return F.expr(f"array_distinct({ngrams_sql(col, k, sep, hashed=True)})")
 
 
 def stopword_ratio(col: Column | str, stopwords: Sequence[str]) -> Column:
@@ -195,23 +198,11 @@ def fingerprint_fast(col: Column | str) -> Column:
     return F.xxhash64(F.trim(F.regexp_replace(_c(col), r"\s+", " ")))
 
 
-def word_ngrams(col: Column | str, n: int = 2, sep: str = TOKEN_SPLIT) -> Column:
+def word_ngrams(col: str, n: int = 2, sep: str = TOKEN_SPLIT) -> Column:
     """All (non-distinct) n-word grams of a document → array<string>.
     Unlike :func:`word_shingles` this keeps multiplicity — the input to
     repetition metrics, where how *often* a gram repeats is the signal."""
-    # slice + array_join beats n chained element_at/concat_ws ~3.4x
-    # (one bounds-checked copy per gram instead of n catalyst calls);
-    # bind_once so the split isn't re-evaluated per gram
-    def build(w: Column) -> Column:
-        grams = F.transform(
-            F.sequence(F.lit(1), F.size(w) - n + 1),
-            lambda i: F.array_join(F.slice(w, i, n), " "),
-        )
-        return F.when(F.size(w) >= n, grams).otherwise(
-            F.array().cast("array<string>")
-        )
-
-    return bind_once(tokens(col, sep), build)
+    return F.expr(ngrams_sql(col, n, sep))
 
 
 def repetition_metrics(
@@ -226,7 +217,7 @@ def repetition_metrics(
 
     ZERO-SHUFFLE: both metrics group only WITHIN a document, so they
     compute map-side as a single codegen'd expression — sort the doc's
-    gram array, then one linear pass (``F.aggregate``) tracking run
+    gram array, then one linear pass (``aggregate``) tracking run
     lengths: max run = top-gram count, rows in runs > 1 = duplicated
     grams. The former (id, gram) explode+shuffle carried one row per
     gram per doc (petabytes of shuffle at 100 TB) for a computation
@@ -236,43 +227,25 @@ def repetition_metrics(
         widen_narrow_input,
     )
 
-    arr = F.array_sort(word_ngrams(text_col, n))
-    zero = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("long").alias("run"),
-        F.lit(0).cast("long").alias("maxrun"),
-        F.lit(0).cast("long").alias("dup"),
-        F.lit(0).cast("long").alias("tot"),
+    run = "CASE WHEN g = acc.prev THEN acc.run + 1 ELSE 1L END"
+    fold = (
+        f"aggregate(array_sort({ngrams_sql(text_col, n)}), "
+        "named_struct('prev', CAST(NULL AS STRING), 'run', 0L, 'maxrun', 0L, "
+        "'dup', 0L, 'tot', 0L), "
+        f"(acc, g) -> named_struct('prev', g, 'run', {run}, "
+        f"'maxrun', greatest(acc.maxrun, {run}), "
+        f"'dup', acc.dup + CASE WHEN {run} = 2 THEN 2 WHEN {run} > 2 THEN 1 ELSE 0 END, "
+        "'tot', acc.tot + 1))"
     )
-
-    def step(acc, g):
-        new_run = F.when(g == acc["prev"], acc["run"] + 1).otherwise(
-            F.lit(1).cast("long")
-        )
-        return F.struct(
-            g.alias("prev"),
-            new_run.alias("run"),
-            F.greatest(acc["maxrun"], new_run).alias("maxrun"),
-            (
-                acc["dup"]
-                + F.when(new_run == 2, 2).when(new_run > 2, 1).otherwise(0)
-            ).alias("dup"),
-            (acc["tot"] + 1).alias("tot"),
-        )
-
-    st = F.aggregate(arr, zero, step)
+    ident = sql_ident(id_col)
     return (
         widen_narrow_input(df)
-        .select(id_col, st.alias("__st"))
-        .filter(F.col("__st.tot") > 0)
-        .select(
-            id_col,
-            (F.col("__st.maxrun").cast("double") / F.col("__st.tot")).alias(
-                "top_ngram_frac"
-            ),
-            (F.col("__st.dup").cast("double") / F.col("__st.tot")).alias(
-                "dup_ngram_frac"
-            ),
+        .selectExpr(ident, f"{fold} AS __st")
+        .filter("__st.tot > 0")
+        .selectExpr(
+            ident,
+            "CAST(__st.maxrun AS DOUBLE) / __st.tot AS top_ngram_frac",
+            "CAST(__st.dup AS DOUBLE) / __st.tot AS dup_ngram_frac",
         )
     )
 

@@ -1,3 +1,5 @@
+import uuid
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -699,23 +701,114 @@ def test_resolve_clusters_ignores_null_ids(resolve):
 
 
 def test_resolve_clusters_small_graph_job_guard(spark, count_jobs, components):
-    """A pair list under the driver bound resolves in at most 3 Spark
-    jobs (the edge checkpoint and one bounded collect), and the result
-    is a driver-local frame: collecting it launches none."""
+    """A pair list under the driver bound resolves in at most 2 Spark
+    jobs (one bounded collect of the pairs), and the result is a
+    driver-local frame: collecting it launches none."""
     edges = [(4 * c + k, 4 * c) for c in range(10) for k in (1, 2, 3)] + [
         (4 * c + 1, 4 * c + 2) for c in range(10)
     ]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     out, call_jobs = count_jobs(lambda: DD.resolve_clusters(pairs))
     rows, collect_jobs = count_jobs(out.collect)
-    assert call_jobs <= 3 and collect_jobs == 0, (call_jobs, collect_jobs)
+    assert call_jobs <= 2 and collect_jobs == 0, (call_jobs, collect_jobs)
     assert {r.node: r.cluster_id for r in rows} == components(edges)
+
+
+def test_resolve_clusters_under_bound_skips_checkpoint_and_rounds(
+    spark, monkeypatch, spy_rounds, components
+):
+    """Under the driver bound the pair list is collected as it is: no
+    edge-list localCheckpoint and no label round. Over it (bound 3),
+    both run."""
+    edges = [(1, 2), (2, 3), (5, 6), (7, 7), (3, 1), (9, 8)]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    frame = type(pairs)
+    checkpoint, calls = frame.localCheckpoint, []
+
+    def counting_checkpoint(self, *args, **kwargs):
+        calls.append(1)
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "localCheckpoint", counting_checkpoint)
+    got = {r.node: r.cluster_id for r in DD.resolve_clusters(pairs).collect()}
+    assert got == components(edges)
+    assert calls == [] and spy_rounds["rounds"] == 0
+    assert spy_rounds["driver_rows"] == [len(edges)]
+    monkeypatch.setattr(DD, "_DRIVER_EDGES", 3)
+    got = {r.node: r.cluster_id for r in DD.resolve_clusters(pairs).collect()}
+    assert got == components(edges)
+    assert calls and spy_rounds["rounds"] >= 1
+
+
+def test_resolve_clusters_repeated_pairs_stay_on_driver(
+    spark, monkeypatch, spy_rounds, components
+):
+    """A pair list over the bound only through repeated and mirrored
+    pairs (10 rows, 2 distinct edges, bound 3) still resolves on the
+    driver: the distinct edge list fits, so no label round runs."""
+    edges = [(1, 2), (2, 1), (3, 4)] * 3 + [(4, 3)]
+    monkeypatch.setattr(DD, "_DRIVER_EDGES", 3)
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    got = {r.node: r.cluster_id for r in DD.resolve_clusters(pairs).collect()}
+    assert got == components(edges)
+    assert spy_rounds["rounds"] == 0 and spy_rounds["driver_rows"] == [2]
+
+
+def test_resolve_clusters_overflow_runs_pair_plan_once(spark, monkeypatch, components):
+    """On overflow the edge list is built from the pairs the bounded
+    collect computed: every pair row is produced once, counted by an
+    accumulator in a UDF of the pair plan."""
+    produced = spark.sparkContext.accumulator(0)
+
+    def tag(x):
+        produced.add(1)
+        return x
+
+    edges = [(4 * c + k, 4 * c) for c in range(10) for k in (1, 2, 3)]
+    counted = F.udf(tag, "long").asNondeterministic()
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long").select(
+        counted("id_a").alias("id_a"), "id_b"
+    )
+    monkeypatch.setattr(DD, "_DRIVER_EDGES", 3)
+    got = {r.node: r.cluster_id for r in DD.resolve_clusters(pairs).collect()}
+    assert got == components(edges)
+    assert produced.value == len(edges)
+
+
+def test_resolve_clusters_names_its_jobs(spark, monkeypatch):
+    """The jobs resolve_clusters launches carry the job description
+    ``dedup.resolve_clusters`` (read back from the status store); the
+    caller's description and job group hold again afterwards, and the
+    caller's group also covers the operator's jobs."""
+    sc = spark.sparkContext
+    group = f"describe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "caller description")
+    try:
+        for bound in (None, 2):
+            if bound:
+                monkeypatch.setattr(DD, "_DRIVER_EDGES", bound)
+            pairs = spark.createDataFrame([(1, 2), (2, 3), (4, 5)], "id_a long, id_b long")
+            before = set(sc.statusTracker().getJobIdsForGroup(group))
+            DD.resolve_clusters(pairs)
+            assert sc.getLocalProperty("spark.job.description") == "caller description"
+            assert sc.getLocalProperty("spark.jobGroup.id") == group
+            ids = set(sc.statusTracker().getJobIdsForGroup(group)) - before
+            assert ids, bound
+            store = sc._jsc.sc().statusStore()
+            descs = [store.job(i).description() for i in ids]
+            described = {d.get() if d.isDefined() else None for d in descs}
+            assert described == {"dedup.resolve_clusters"}, (bound, described)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 @pytest.mark.parametrize("bound", [1, None])
 def test_resolve_clusters_result_outlives_cache_scope(spark, monkeypatch, components, bound):
-    """resolve_clusters checkpoints its edge list, so the MinHash sketch
-    caches released when cache_scope exits are no longer needed: none
+    """resolve_clusters consumes the pair plan before it returns (a
+    bounded collect, or a checkpointed edge list on overflow), so the
+    MinHash sketch caches released when cache_scope exits are no
+    longer needed: none
     is left tracked, and the result still collects correctly on both
     paths."""
     monkeypatch.setattr(DD, "_DRIVER_EDGES", bound or DD._DRIVER_EDGES)

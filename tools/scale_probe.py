@@ -8,6 +8,7 @@ distributed (spark.range — never driver-side lists) into a temp dir.
 
 Usage: python tools/scale_probe.py [--rows 20000000] [--vectors 200000]
        python tools/scale_probe.py --rows 2000000 --only scan_hotkey
+       python tools/scale_probe.py --only clusters
 Prints one JSON line per probe plus a closing summary line.
 """
 
@@ -87,6 +88,205 @@ def scan_hotkey_probes(spark, rows: int, results: dict) -> None:
                           "sec_cold": t, "sec": t2}))
 
 
+def cluster_probes(spark, n_edges: int, tmp: str, results: dict) -> None:
+    """Connected components (``dedup.resolve_clusters``) on four graph
+    shapes. Each prints its node and component counts and a checksum
+    over the (node, cluster_id) map, so two versions of the engine can
+    be compared.
+
+    - ``cluster_resolution``: ``n_edges`` edges of 4-cliques plus a
+      1000-node chain;
+    - ``cluster_hub_bail``: a 100k-degree hub fed by a 2000-node chain;
+    - ``cluster_multi_round``: a 200k-node sorted chain and 100 chains
+      of 2000 with permuted ids;
+    - ``minhash_overflow``: ``minhash_near_duplicates`` →
+      ``resolve_clusters`` on a 20k-document generated corpus, once at
+      the default driver bound and once with ``_DRIVER_EDGES`` lowered
+      below the pair count, so the bounded collect of the pairs
+      overflows and the edge list is checkpointed (cold and warm
+      times for each)."""
+    from pyspark.sql import functions as F
+
+    from azuredataengineering_deeplearning_spark.operators import dedup as DD
+
+    # ---- near-dup cluster resolution over a pair graph ------------
+    # cliques of 4 (the realistic near-dup shape) + one 1000-node
+    # chain (the diameter worst case for plain propagation)
+    pairs = (
+        spark.range(n_edges)
+        .select(
+            F.col("id").alias("id_a"),
+            (F.col("id") - F.col("id") % 4).alias("id_b"),
+        )
+        .union(
+            spark.range(n_edges, n_edges + 1000).select(
+                F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+            )
+        )
+    )
+
+    def _components(df):
+        return (
+            df.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.countDistinct("cluster_id").alias("comps"),
+                F.max("cluster_id").alias("mx"),
+                F.sum(F.xxhash64("node", "cluster_id") % 1_000_003).alias("checksum"),
+            )
+            .collect()[0]
+        )
+
+    t, out = timed(lambda: _components(DD.resolve_clusters(pairs)))
+    results["cluster_resolution"] = t
+    # one component per four-id clique plus the chain's, whose
+    # label (its min, n_edges) is the largest
+    assert (out["n"], out["comps"], out["mx"]) == (
+        n_edges + 1001, (n_edges + 3) // 4 + 1, n_edges
+    ), out
+    print(
+        json.dumps(
+            {
+                "probe": "cluster_resolution",
+                "edges": n_edges + 1000,
+                "nodes": out["n"],
+                "components": out["comps"],
+                "checksum": out["checksum"],
+                "sec": t,
+            }
+        )
+    )
+
+    # ---- adversarial hub: driver bound ----------------------------
+    # A 100k-degree hub fed by a 2000-node chain: the 102k edges
+    # overflow the driver bound (_DRIVER_EDGES, 50k), so distributed
+    # rounds run until the cluster graph fits; the hub's spokes then
+    # share one label and the driver finishes the chain. Every
+    # collect is limit(_DRIVER_EDGES+1), so the driver never holds
+    # more than ~50k rows (~1 MB) whatever the hub degree.
+    hub_deg = 100_000
+    hub_id = 10_000_000
+    spokes = spark.range(hub_deg).select(
+        F.lit(hub_id).alias("id_a"),
+        (F.col("id") + hub_id + 1).alias("id_b"),
+    )
+    chain_len = 2_000
+    chain = spark.range(chain_len).select(
+        F.when(F.col("id") == 0, F.lit(0))
+        .otherwise(F.col("id") + 20_000_000)
+        .alias("id_a"),
+        F.when(F.col("id") == chain_len - 1, F.lit(hub_id))
+        .otherwise(F.col("id") + 20_000_001)
+        .alias("id_b"),
+    )
+    hub_pairs = spokes.union(chain)
+    t, labels = timed(lambda: _components(DD.resolve_clusters(hub_pairs)))
+    results["cluster_hub_bail"] = t
+    assert labels["comps"] == 1, f"hub component split: {labels['comps']}"
+    assert labels["mx"] == 0, f"hub component mislabeled: max={labels['mx']}"
+    print(
+        json.dumps(
+            {
+                "probe": "cluster_hub_bail",
+                "hub_degree": hub_deg,
+                "chain": chain_len,
+                "nodes": labels["n"],
+                "components": labels["comps"],
+                "checksum": labels["checksum"],
+                "sec": t,
+            }
+        )
+    )
+
+    # ---- multi-round: cluster graphs over the bound for rounds ----
+    # A 200k-node chain with sorted ids keeps every label distinct
+    # until it reaches 0 (12 rounds before the cluster graph fits);
+    # 100 chains of 2000 with ids permuted by i * 7919 mod 1000003
+    # put class labels far from class edges, which only the hook
+    # step of a round crosses at once (6 rounds).
+    n_chain, n_runs, run_len, prime = 200_000, 100, 2_000, 1_000_003
+    sorted_chain = spark.range(n_chain - 1).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    )
+    t, labels = timed(lambda: _components(DD.resolve_clusters(sorted_chain)))
+    sorted_checksum = labels["checksum"]
+    assert (labels["n"], labels["comps"], labels["mx"]) == (n_chain, 1, 0), labels
+    results["cluster_sorted_chain"] = t
+    perm = lambda c: (c * 7919) % prime  # noqa: E731 - a bijection below prime
+    permuted = (
+        spark.range(n_runs * run_len)
+        .filter(F.col("id") % run_len != run_len - 1)
+        .select(perm(F.col("id")).alias("id_a"), perm(F.col("id") + 1).alias("id_b"))
+    )
+    t2, plabels = timed(lambda: _components(DD.resolve_clusters(permuted)))
+    want_mx = max(
+        min(perm(i) for i in range(r * run_len, (r + 1) * run_len))
+        for r in range(n_runs)
+    )
+    assert (plabels["n"], plabels["comps"], plabels["mx"]) == (
+        n_runs * run_len, n_runs, want_mx
+    ), plabels
+    results["cluster_permuted_chains"] = t2
+    print(
+        json.dumps(
+            {
+                "probe": "cluster_multi_round",
+                "sorted_chain_nodes": n_chain,
+                "sorted_chain_sec": t,
+                "sorted_chain_checksum": sorted_checksum,
+                "permuted_chains": n_runs,
+                "permuted_chain_nodes": run_len,
+                "permuted_sec": t2,
+                "permuted_checksum": plabels["checksum"],
+            }
+        )
+    )
+
+    # ---- MinHash pairs into components, over the driver bound -----
+    # doc i belongs to group i // 4; all 60 words come from the group,
+    # except that docs 1-3 of a group each replace one word, so every
+    # pair in a group verifies (jaccard >= 0.8) and groups are apart.
+    # Six pairs per group: n_docs * 1.5 verified pairs.
+    n_docs = 20_000
+    docs_path = f"{tmp}/near_docs"
+    spark.range(n_docs).selectExpr(
+        "id AS doc_id",
+        "concat_ws(' ', transform(sequence(0, 59), j -> CASE "
+        "WHEN id % 4 != 0 AND j = 10 + (id % 4) * 12 THEN concat('x', id) "
+        "ELSE concat('t', pmod(xxhash64(id DIV 4, j), 5000)) END)) AS text",
+    ).write.mode("overwrite").parquet(docs_path)
+    near = spark.read.parquet(docs_path)
+    default = DD._DRIVER_EDGES
+    out = {}
+    for mode, bound in (("driver", default), ("overflow", n_docs // 4)):
+        DD._DRIVER_EDGES = bound
+
+        def _run():
+            with DD.cache_scope():
+                pairs = DD.minhash_near_duplicates(near, "doc_id", "text", threshold=0.8)
+                return _components(DD.resolve_clusters(pairs))
+
+        try:
+            out[f"sec_cold_{mode}"], _ = timed(_run)
+            out[f"sec_{mode}"], labels = timed(_run)
+        finally:
+            DD._DRIVER_EDGES = default
+        assert (labels["n"], labels["comps"]) == (n_docs, (n_docs + 3) // 4), labels
+        out[f"checksum_{mode}"] = labels["checksum"]
+        results[f"minhash_{mode}"] = out[f"sec_{mode}"]
+    print(
+        json.dumps(
+            {
+                "probe": "minhash_overflow",
+                "docs": n_docs,
+                "overflow_bound": n_docs // 4,
+                "nodes": labels["n"],
+                "components": labels["comps"],
+                **out,
+            }
+        )
+    )
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--rows", type=int, default=20_000_000)
@@ -95,7 +295,7 @@ def main() -> None:
     ap.add_argument("--edges", type=int, default=2_000_000)
     ap.add_argument("--docs", type=int, default=1_000_000)
     ap.add_argument("--scores", type=int, default=4_000_000)
-    ap.add_argument("--only", choices=["scan_hotkey"],
+    ap.add_argument("--only", choices=["scan_hotkey", "clusters"],
                     help="run just this probe group")
     args = ap.parse_args()
 
@@ -107,9 +307,13 @@ def main() -> None:
 
     spark = get_spark(app_name="scale-probe")
     results: dict[str, float] = {}
-    scan_hotkey_probes(spark, args.rows, results)
-    if args.only == "scan_hotkey":
-        print(json.dumps({"metric": "scale_probe", "rows": args.rows,
+    if args.only == "clusters":
+        with tempfile.TemporaryDirectory() as tmp:
+            cluster_probes(spark, args.edges, tmp, results)
+    else:
+        scan_hotkey_probes(spark, args.rows, results)
+    if args.only:
+        print(json.dumps({"metric": "scale_probe", "only": args.only,
                           "results": results}))
         spark.stop()
         return
@@ -261,131 +465,7 @@ def main() -> None:
         # ---- near-dup cluster resolution over a pair graph ------------
         from azuredataengineering_deeplearning_spark.operators import dedup as DD
 
-        n_edges = args.edges
-        # cliques of 4 (the realistic near-dup shape) + one 1000-node
-        # chain (the diameter worst case for plain propagation)
-        pairs = (
-            spark.range(n_edges)
-            .select(
-                F.col("id").alias("id_a"),
-                (F.col("id") - F.col("id") % 4).alias("id_b"),
-            )
-            .union(
-                spark.range(n_edges, n_edges + 1000).select(
-                    F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
-                )
-            )
-        )
-
-        def _components(df):
-            return (
-                df.agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.countDistinct("cluster_id").alias("comps"),
-                    F.max("cluster_id").alias("mx"),
-                )
-                .collect()[0]
-            )
-
-        t, out = timed(lambda: _components(DD.resolve_clusters(pairs)))
-        results["cluster_resolution"] = t
-        # one component per four-id clique plus the chain's, whose
-        # label (its min, n_edges) is the largest
-        assert (out["n"], out["comps"], out["mx"]) == (
-            n_edges + 1001, (n_edges + 3) // 4 + 1, n_edges
-        ), out
-        print(
-            json.dumps(
-                {
-                    "probe": "cluster_resolution",
-                    "edges": n_edges + 1000,
-                    "nodes": out["n"],
-                    "components": out["comps"],
-                    "sec": t,
-                }
-            )
-        )
-
-        # ---- adversarial hub: driver bound ----------------------------
-        # A 100k-degree hub fed by a 2000-node chain: the 102k edges
-        # overflow the driver bound (_DRIVER_EDGES, 50k), so distributed
-        # rounds run until the cluster graph fits; the hub's spokes then
-        # share one label and the driver finishes the chain. Every
-        # collect is limit(_DRIVER_EDGES+1), so the driver never holds
-        # more than ~50k rows (~1 MB) whatever the hub degree.
-        hub_deg = 100_000
-        hub_id = 10_000_000
-        spokes = spark.range(hub_deg).select(
-            F.lit(hub_id).alias("id_a"),
-            (F.col("id") + hub_id + 1).alias("id_b"),
-        )
-        chain_len = 2_000
-        chain = spark.range(chain_len).select(
-            F.when(F.col("id") == 0, F.lit(0))
-            .otherwise(F.col("id") + 20_000_000)
-            .alias("id_a"),
-            F.when(F.col("id") == chain_len - 1, F.lit(hub_id))
-            .otherwise(F.col("id") + 20_000_001)
-            .alias("id_b"),
-        )
-        hub_pairs = spokes.union(chain)
-        t, labels = timed(lambda: _components(DD.resolve_clusters(hub_pairs)))
-        results["cluster_hub_bail"] = t
-        assert labels["comps"] == 1, f"hub component split: {labels['comps']}"
-        assert labels["mx"] == 0, f"hub component mislabeled: max={labels['mx']}"
-        print(
-            json.dumps(
-                {
-                    "probe": "cluster_hub_bail",
-                    "hub_degree": hub_deg,
-                    "chain": chain_len,
-                    "nodes": labels["n"],
-                    "components": labels["comps"],
-                    "sec": t,
-                }
-            )
-        )
-
-        # ---- multi-round: cluster graphs over the bound for rounds ----
-        # A 200k-node chain with sorted ids keeps every label distinct
-        # until it reaches 0 (12 rounds before the cluster graph fits);
-        # 100 chains of 2000 with ids permuted by i * 7919 mod 1000003
-        # put class labels far from class edges, which only the hook
-        # step of a round crosses at once (6 rounds).
-        n_chain, n_runs, run_len, prime = 200_000, 100, 2_000, 1_000_003
-        sorted_chain = spark.range(n_chain - 1).select(
-            F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
-        )
-        t, labels = timed(lambda: _components(DD.resolve_clusters(sorted_chain)))
-        assert (labels["n"], labels["comps"], labels["mx"]) == (n_chain, 1, 0), labels
-        results["cluster_sorted_chain"] = t
-        perm = lambda c: (c * 7919) % prime  # noqa: E731 - a bijection below prime
-        permuted = (
-            spark.range(n_runs * run_len)
-            .filter(F.col("id") % run_len != run_len - 1)
-            .select(perm(F.col("id")).alias("id_a"), perm(F.col("id") + 1).alias("id_b"))
-        )
-        t2, plabels = timed(lambda: _components(DD.resolve_clusters(permuted)))
-        want_mx = max(
-            min(perm(i) for i in range(r * run_len, (r + 1) * run_len))
-            for r in range(n_runs)
-        )
-        assert (plabels["n"], plabels["comps"], plabels["mx"]) == (
-            n_runs * run_len, n_runs, want_mx
-        ), plabels
-        results["cluster_permuted_chains"] = t2
-        print(
-            json.dumps(
-                {
-                    "probe": "cluster_multi_round",
-                    "sorted_chain_nodes": n_chain,
-                    "sorted_chain_sec": t,
-                    "permuted_chains": n_runs,
-                    "permuted_chain_nodes": run_len,
-                    "permuted_sec": t2,
-                }
-            )
-        )
+        cluster_probes(spark, args.edges, tmp, results)
 
         # ---- contamination sweep over synthetic corpus ----------------
         docs_path = f"{tmp}/docs"
