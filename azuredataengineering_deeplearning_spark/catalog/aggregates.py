@@ -10,7 +10,7 @@ from azuredataengineering_deeplearning_spark.functions.exact import (
     sql_avg,
     sql_dec,
     sql_sum,
-    sql_wide,
+    sql_sum_wide,
 )
 from azuredataengineering_deeplearning_spark.operators import aggregates as A
 from azuredataengineering_deeplearning_spark.sources.readers import (
@@ -149,13 +149,13 @@ def a11_profile_aggregates(spark, sf_dir):
     "a12_weighted_mean",
     f"""
     SELECT l_returnflag,
-           CAST(SUM({sql_wide("l_extendedprice * l_quantity")}) AS DOUBLE)
-           / CAST(SUM({sql_dec("l_quantity")}) AS DOUBLE) AS wavg_price
+           {sql_sum_wide("l_extendedprice * l_quantity")}
+           / {sql_sum("l_quantity")} AS wavg_price
     FROM lineitem GROUP BY l_returnflag
     """,
 )
 def a12_weighted_mean(spark, sf_dir):
-    """A12-adjacent: weighted mean in exact decimal arithmetic."""
+    """A12-adjacent: weighted mean in exact fixed-point arithmetic."""
     li = read_parquet(
         spark, f"{sf_dir}/lineitem.parquet",
         columns=["l_returnflag", "l_extendedprice", "l_quantity"],
@@ -415,15 +415,11 @@ def a_grouped_histogram_quantiles(spark, sf_dir):
     f"""
     WITH base AS (
       SELECT CAST(SUM(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-             CAST(SUM(CASE WHEN o_orderstatus = 'O'
-                           THEN {sql_dec("o_totalprice")} END) AS DOUBLE) AS sa,
-             CAST(SUM(CASE WHEN o_orderstatus = 'O'
-                           THEN {sql_dec("o_totalprice * o_totalprice")} END) AS DOUBLE) AS ssa,
+             {sql_sum("CASE WHEN o_orderstatus = 'O' THEN o_totalprice END", "sa")},
+             {sql_sum("CASE WHEN o_orderstatus = 'O' THEN o_totalprice * o_totalprice END", "ssa")},
              CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-             CAST(SUM(CASE WHEN o_orderstatus = 'F'
-                           THEN {sql_dec("o_totalprice")} END) AS DOUBLE) AS sb,
-             CAST(SUM(CASE WHEN o_orderstatus = 'F'
-                           THEN {sql_dec("o_totalprice * o_totalprice")} END) AS DOUBLE) AS ssb
+             {sql_sum("CASE WHEN o_orderstatus = 'F' THEN o_totalprice END", "sb")},
+             {sql_sum("CASE WHEN o_orderstatus = 'F' THEN o_totalprice * o_totalprice END", "ssb")}
       FROM orders
     ),
     m AS (
@@ -447,7 +443,7 @@ def a_grouped_histogram_quantiles(spark, sf_dir):
 def a_ab_welch(spark, sf_dir):
     """A/B experiment readout: Welch unequal-variance t statistic for
     o_totalprice between open ('O') and fulfilled ('F') orders — one
-    conditional-aggregation pass, decimal-exact moments."""
+    conditional-aggregation pass, exact moments."""
     o = read_parquet(spark, f"{sf_dir}/orders.parquet")
     return A.ab_welch(o, "o_orderstatus", "o_totalprice", "O", "F")
 
@@ -674,17 +670,17 @@ def a_cramers_v(spark, sf_dir):
     WITH g AS (
       SELECT o_orderstatus,
              COUNT(*) AS n_g,
-             SUM({sql_dec("o_totalprice")}) AS s_g,
-             SUM({sql_dec("o_totalprice * o_totalprice")}) AS ss_g
+             {sql_sum("o_totalprice", "s_g")},
+             {sql_sum_wide("o_totalprice * o_totalprice", "ss_g")}
       FROM orders
       WHERE o_totalprice IS NOT NULL AND o_orderstatus IS NOT NULL
       GROUP BY o_orderstatus
     ),
     t AS (
       SELECT SUM(n_g) AS n,
-             CAST(SUM(s_g) AS DOUBLE) AS s,
-             CAST(SUM(ss_g) AS DOUBLE) AS ss,
-             SUM(CAST(s_g AS DOUBLE) * CAST(s_g AS DOUBLE) / n_g) AS bss_raw
+             {sql_sum_wide("s_g", "s")},
+             {sql_sum_wide("ss_g", "ss")},
+             SUM(s_g * s_g / n_g) AS bss_raw
       FROM g
     )
     SELECT (bss_raw - (s / n) * (s / n) * n)

@@ -13,12 +13,12 @@ from pyspark.sql import functions as F
 
 from azuredataengineering_deeplearning_spark.catalog import query
 from azuredataengineering_deeplearning_spark.functions.exact import (
-    dec,
     exact_avg,
     exact_sum,
+    exact_sum_product,
     sql_avg,
-    sql_dec,
     sql_sum,
+    sql_sum_product,
 )
 from azuredataengineering_deeplearning_spark.operators import aggregates as A
 from azuredataengineering_deeplearning_spark.operators import joins as J
@@ -108,17 +108,23 @@ def p9_clip_clamp(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Q1 — pricing summary (A1/A2 + exact decimal arithmetic)
+# Q1 — pricing summary (A1/A2 + exact fixed-point arithmetic)
 # ---------------------------------------------------------------------------
 
 
-# Exact TPC-H revenue per row, shared by every TPC-H shape, and its DuckDB
-# twin. A function: Column construction needs an active SparkSession.
-def _revenue():
-    return dec("l_extendedprice") * (dec(F.lit(1)) - dec("l_discount"))
+# Exact TPC-H revenue sum(price * (1 - l_discount)), shared by every
+# TPC-H shape, and its DuckDB twin; ``price`` defaults to l_extendedprice
+# (a conditional revenue passes a CASE over it). A function: Column
+# construction needs an active SparkSession.
+def _revenue(alias: str, price: str = "l_extendedprice"):
+    return exact_sum_product(price, "1 - l_discount", alias)
 
 
-_SQL_REV = f"{sql_dec('l_extendedprice')} * ({sql_dec('1')} - {sql_dec('l_discount')})"
+def _sql_revenue(price: str = "l_extendedprice") -> str:
+    return sql_sum_product(price, "1 - l_discount")
+
+
+_SQL_REV = _sql_revenue()
 
 
 @query(
@@ -127,7 +133,7 @@ _SQL_REV = f"{sql_dec('l_extendedprice')} * ({sql_dec('1')} - {sql_dec('l_discou
     SELECT l_returnflag, l_linestatus,
            {sql_sum('l_quantity', 'sum_qty')},
            {sql_sum('l_extendedprice', 'sum_base_price')},
-           CAST(SUM({_SQL_REV}) AS DOUBLE) AS sum_disc_price,
+           {_SQL_REV} AS sum_disc_price,
            {sql_avg('l_quantity', 'avg_qty')},
            {sql_avg('l_extendedprice', 'avg_price')},
            {sql_avg('l_discount', 'avg_disc')},
@@ -138,7 +144,7 @@ _SQL_REV = f"{sql_dec('l_extendedprice')} * ({sql_dec('1')} - {sql_dec('l_discou
     """,
 )
 def q1_pricing_summary(spark, sf_dir):
-    """TPC-H Q1 shape: pushed filter + grouped exact-decimal aggregates."""
+    """TPC-H Q1 shape: pushed filter + grouped exact fixed-point aggregates."""
     li = read_parquet(
         spark,
         f"{sf_dir}/lineitem.parquet",
@@ -150,7 +156,7 @@ def q1_pricing_summary(spark, sf_dir):
         [
             exact_sum("l_quantity", "sum_qty"),
             exact_sum("l_extendedprice", "sum_base_price"),
-            F.sum(_revenue()).cast("double").alias("sum_disc_price"),
+            _revenue("sum_disc_price"),
             exact_avg("l_quantity", "avg_qty"),
             exact_avg("l_extendedprice", "avg_price"),
             exact_avg("l_discount", "avg_disc"),
@@ -165,7 +171,7 @@ def q1_pricing_summary(spark, sf_dir):
 
 _Q5_SQL = f"""
     SELECT n_name,
-           CAST(SUM({_SQL_REV}) AS DOUBLE) AS revenue,
+           {_SQL_REV} AS revenue,
            COUNT(*) AS n_items
     FROM lineitem
     JOIN orders   ON l_orderkey = o_orderkey
@@ -182,7 +188,7 @@ def q5_revenue_by_nation(spark, sf_dir):
 
     Scale shape: lineitem⋈orders and ⋈customer shuffle on their keys
     (AQE handles skew); nation and region are explicit broadcasts so the
-    200-row dims never move the fact table. Exact-decimal revenue.
+    200-row dims never move the fact table. Exact fixed-point revenue.
     """
     t = load_tables(
         spark, sf_dir, ["lineitem", "orders", "customer", "nation", "region"]
@@ -200,7 +206,7 @@ def q5_revenue_by_nation(spark, sf_dir):
         joined,
         ["n_name"],
         [
-            F.sum(_revenue()).cast("double").alias("revenue"),
+            _revenue("revenue"),
             F.count(F.lit(1)).alias("n_items"),
         ],
     )

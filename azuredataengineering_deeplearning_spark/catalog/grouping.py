@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from azuredataengineering_deeplearning_spark.catalog import query
-from azuredataengineering_deeplearning_spark.functions.exact import exact_sum, sql_dec, sql_sum
+from azuredataengineering_deeplearning_spark.functions.exact import exact_sum, sql_sum
 from azuredataengineering_deeplearning_spark.operators import grouping as G
 from azuredataengineering_deeplearning_spark.operators import windows as W
 from azuredataengineering_deeplearning_spark.sources.readers import load_tables, read_parquet
@@ -116,9 +116,8 @@ def g_intersect(spark, sf_dir):
       FROM events GROUP BY 1, 2
     )
     SELECT user_id, day,
-           CAST(SUM({sql_dec("y")}) OVER (
-                PARTITION BY user_id ORDER BY day
-                RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS DOUBLE) AS rolling
+           {sql_sum("y", "rolling", over="PARTITION BY user_id ORDER BY day"
+                    " RANGE BETWEEN 6 PRECEDING AND CURRENT ROW")}
     FROM daily
     """,
 )
@@ -139,9 +138,8 @@ def w_rolling_7d(spark, sf_dir):
 
 _HOTKEY_CUMSUM_SQL = f"""
     SELECT event_id,
-           CAST(SUM({sql_dec("value")}) OVER (
-                ORDER BY epoch_ns(ts), event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS cumsum
+           {sql_sum("value", "cumsum", over="ORDER BY epoch_ns(ts), event_id"
+                    " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW")}
     FROM events
 """
 

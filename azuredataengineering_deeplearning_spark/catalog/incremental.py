@@ -254,7 +254,7 @@ def inc_cdf_gold(spark, sf_dir):
         .select(
             "o_custkey",
             (
-                F.col("__t") + F.coalesce(F.col("__d"), dec(F.lit(0)))
+                F.col("__t") + F.coalesce(F.col("__d"), dec("0"))
             )
             .cast("double")
             .alias("total_price"),

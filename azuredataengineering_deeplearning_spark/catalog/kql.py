@@ -433,7 +433,7 @@ def kql_conditional_aggs(spark, sf_dir):
     "kql_top_hitters",
     f"""
     SELECT user_id,
-           {sql_sum("value", "approximate_sum_value")}
+           CAST(SUM({sql_dec("value")}) AS DOUBLE) AS approximate_sum_value
     FROM events GROUP BY user_id
     ORDER BY approximate_sum_value DESC, user_id LIMIT 10
     """,
@@ -703,7 +703,7 @@ def kql_series_fit_line(spark, sf_dir):
 )
 def kql_series_stats(spark, sf_dir):
     """KQL ``series_stats_dynamic`` — per-series descriptive stats as a
-    struct (sample variance, first-index extrema; decimal-accumulated
+    struct (sample variance, first-index extrema; exactly accumulated
     sums so the hash matches the oracle's summation order)."""
     t = load_tables(spark, sf_dir, ["events"])
     return kql_to_df(
@@ -1331,7 +1331,7 @@ def kql_scalar_extras3(spark, sf_dir):
       WHERE ts >= TIMESTAMP '2024-01-01' AND ts < TIMESTAMP '2024-02-01'
     ),
     b AS (SELECT event_type, i, COUNT(*) AS n,
-                 SUM({sql_dec("value")}) AS sv
+                 {sql_sum("value", "sv")}
           FROM w GROUP BY 1, 2),
     spine AS (SELECT event_type, r.i
               FROM (SELECT DISTINCT event_type FROM b) t

@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from azuredataengineering_deeplearning_spark.catalog import query
-from azuredataengineering_deeplearning_spark.functions.exact import sql_avg, sql_dec
+from azuredataengineering_deeplearning_spark.functions.exact import sql_avg, sql_sum
 from azuredataengineering_deeplearning_spark.operators import encoders as E
 from azuredataengineering_deeplearning_spark.operators import profile as P
 from azuredataengineering_deeplearning_spark.sources.readers import load_tables, read_parquet
@@ -81,11 +81,11 @@ def enc_count(spark, sf_dir):
     WITH base AS (
       SELECT o_orderkey, o_orderpriority, o_totalprice, o_custkey % 5 AS fold FROM orders
     ), g AS (
-      SELECT o_orderpriority, SUM({sql_dec("o_totalprice")}) AS gs,
+      SELECT o_orderpriority, {sql_sum("o_totalprice", "gs")},
              COUNT(o_totalprice) AS gc
       FROM base GROUP BY o_orderpriority
     ), f AS (
-      SELECT o_orderpriority, fold, SUM({sql_dec("o_totalprice")}) AS fs,
+      SELECT o_orderpriority, fold, {sql_sum("o_totalprice", "fs")},
              COUNT(o_totalprice) AS fc
       FROM base GROUP BY o_orderpriority, fold
     ), prior AS (
@@ -93,7 +93,7 @@ def enc_count(spark, sf_dir):
       FROM base
     )
     SELECT b.o_orderkey,
-           (CAST(g.gs - f.fs AS DOUBLE) + prior.p * 20.0)
+           (g.gs - f.fs + prior.p * 20.0)
              / (CAST(g.gc - f.fc AS DOUBLE) + 20.0) AS o_orderpriority_te
     FROM base b
     JOIN g ON b.o_orderpriority = g.o_orderpriority
@@ -219,8 +219,7 @@ def prof_expectations(spark, sf_dir):
            CAST(COUNT(DISTINCT o_orderkey) AS BIGINT) AS n_distinct,
            CAST(MIN(o_orderkey) AS DOUBLE) AS min_num,
            CAST(MAX(o_orderkey) AS DOUBLE) AS max_num,
-           CAST(SUM({sql_dec("CAST(o_orderkey AS DOUBLE)")}) AS DOUBLE)
-             / COUNT(o_orderkey) AS mean,
+           {sql_avg("CAST(o_orderkey AS DOUBLE)", "mean")},
            CAST(NULL AS VARCHAR) AS min_str, CAST(NULL AS VARCHAR) AS max_str
     FROM orders
     UNION ALL
@@ -228,8 +227,7 @@ def prof_expectations(spark, sf_dir):
            CAST(SUM(CASE WHEN o_totalprice IS NULL THEN 1 ELSE 0 END) AS BIGINT),
            CAST(COUNT(DISTINCT o_totalprice) AS BIGINT),
            CAST(MIN(o_totalprice) AS DOUBLE), CAST(MAX(o_totalprice) AS DOUBLE),
-           CAST(SUM({sql_dec("CAST(o_totalprice AS DOUBLE)")}) AS DOUBLE)
-             / COUNT(o_totalprice),
+           {sql_avg("CAST(o_totalprice AS DOUBLE)")},
            NULL, NULL
     FROM orders
     UNION ALL

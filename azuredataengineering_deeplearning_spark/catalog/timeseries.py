@@ -6,17 +6,12 @@ from pyspark.sql import functions as F
 
 from azuredataengineering_deeplearning_spark.catalog import query
 from azuredataengineering_deeplearning_spark.functions.exact import (
-    dec,
     exact_sum,
-    sql_dec,
     sql_sum,
-    sql_wide,
+    sql_sum_wide,
 )
 from azuredataengineering_deeplearning_spark.operators import timeseries as TS
 from azuredataengineering_deeplearning_spark.sources.readers import load_tables
-
-# the per-element square of the series_stats fold, in the widened accumulator
-_V_SQ = sql_wide(f"{sql_dec('v')} * {sql_dec('v')}")
 
 _DAILY_SQL = f"""
       SELECT user_id, date_trunc('day', CAST(ts AS TIMESTAMP)) AS d,
@@ -226,7 +221,7 @@ def ts_make_series(spark, sf_dir):
       SELECT event_type,
              MIN(v) AS s_min, MAX(v) AS s_max,
              {sql_sum("v", "sx")},
-             CAST(SUM({_V_SQ}) AS DOUBLE) AS sx2,
+             {sql_sum_wide("v * v", "sx2")},
              CAST(COUNT(*) AS DOUBLE) AS n
       FROM s GROUP BY event_type
     )
@@ -240,7 +235,7 @@ def ts_make_series(spark, sf_dir):
 def ts_series_stats(spark, sf_dir):
     """series_stats over the make-series output: per-type min/max/avg/
     var/stdev of the daily count series — pure array expressions, no
-    extra shuffle past the series build. Decimal accumulation keeps the
+    extra shuffle past the series build. Fixed-point accumulation keeps the
     moments order-independent (exact here: counts are integral)."""
     ev = load_tables(spark, sf_dir, ["events"])["events"]
     s = TS.make_series(
@@ -271,7 +266,7 @@ def ts_series_stats(spark, sf_dir):
     agg AS (
       SELECT event_type,
              {sql_sum("v", "sx")},
-             CAST(SUM({_V_SQ}) AS DOUBLE) AS sx2,
+             {sql_sum_wide("v * v", "sx2")},
              CAST(COUNT(*) AS DOUBLE) AS n
       FROM s GROUP BY event_type
     ),
@@ -457,7 +452,7 @@ def ts_seasonal_naive(spark, sf_dir):
     ),
     mu AS (
       SELECT user_id,
-             CAST(SUM({sql_dec("y")}) AS DOUBLE) / COUNT(*) AS yhat
+             {sql_sum("y")} / COUNT(*) AS yhat
       FROM split WHERE NOT is_pred GROUP BY user_id
     ),
     q AS (
@@ -474,7 +469,7 @@ def ts_seasonal_naive(spark, sf_dir):
 def ts_conformal_intervals(spark, sf_dir):
     """Split-conformal 90% intervals on the last week of each user's
     daily series: calibrate |y − ȳ_calib| per user on history, band the
-    held-out week. Exact-decimal mean and exact percentile keep both
+    held-out week. Exact fixed-point mean and exact percentile keep both
     engines bit-identical. The split point and calibration mean are
     windows over ONE user-partitioned shuffle of the daily panel (not
     self-joins), so events is scanned twice total — once for the
@@ -490,12 +485,10 @@ def ts_conformal_intervals(spark, sf_dir):
         )
         .withColumn(
             "yhat",
-            F.sum(
-                F.when(~F.col("is_pred"), dec("y"))
-            )
-            .over(w)
-            .cast("double")
-            / F.sum(F.when(~F.col("is_pred"), 1)).over(w),
+            F.expr(
+                f"{sql_sum('CASE WHEN NOT is_pred THEN y END', over='PARTITION BY user_id')}"
+                " / SUM(CASE WHEN NOT is_pred THEN 1 END) OVER (PARTITION BY user_id)"
+            ),
         )
     )
     out = TS.conformal_intervals(
@@ -717,7 +710,7 @@ def ts_tenure_survival(spark, sf_dir):
     )
     SELECT user_id,
            CAST(COUNT(*) AS BIGINT) AS n_gaps,
-           CAST(SUM({sql_dec("gap")}) AS DOUBLE) / COUNT(*) AS mean_gap_s,
+           {sql_sum("gap")} / COUNT(*) AS mean_gap_s,
            quantile_cont(gap, 0.5) AS median_gap_s,
            quantile_cont(gap, 0.9) AS p90_gap_s,
            MAX(gap) AS max_gap_s

@@ -25,7 +25,12 @@ from pyspark.sql import functions as F
 
 from azuredataengineering_deeplearning_spark.catalog import query
 from azuredataengineering_deeplearning_spark.catalog.core import _SQL_REV, _revenue
-from azuredataengineering_deeplearning_spark.functions.exact import dec, sql_dec
+from azuredataengineering_deeplearning_spark.functions.exact import (
+    exact_sum,
+    exact_sum_product,
+    sql_sum,
+    sql_sum_product,
+)
 from azuredataengineering_deeplearning_spark.sources.readers import load_tables
 
 
@@ -112,10 +117,8 @@ def q2_min_cost_supplier(spark, sf_dir):
     "q9_product_type_profit",
     f"""
     SELECT n_name AS nation, year(o_orderdate) AS o_year,
-           CAST(SUM({_SQL_REV}) AS DOUBLE)
-           - 0.1 * CAST(SUM({sql_dec("p_retailprice")}
-                            * {sql_dec("l_quantity")}) AS DOUBLE)
-             AS sum_profit
+           {_SQL_REV}
+           - 0.1 * {sql_sum_product("p_retailprice", "l_quantity")} AS sum_profit
     FROM lineitem
     JOIN part ON p_partkey = l_partkey
     JOIN supplier ON s_suppkey = l_suppkey
@@ -129,7 +132,7 @@ def q9_product_type_profit(spark, sf_dir):
     """TPC-H Q9 shape: profit by supplier nation and order year over a
     part-name pattern. Supply cost proxied as 10% of retail value
     (testdata has no partsupp). Revenue and cost accumulate as separate
-    exact decimal sums; the 0.1 factor applies once per group in double
+    exact sums of products; the 0.1 factor applies once per group in double
     at output — no per-row double rounding to drift."""
     t = load_tables(
         spark, sf_dir, ["lineitem", "part", "supplier", "orders", "nation"]
@@ -148,10 +151,8 @@ def q9_product_type_profit(spark, sf_dir):
             F.year("o_orderdate").alias("o_year"),
         )
         .agg(
-            F.sum(_revenue()).cast("double").alias("rev"),
-            F.sum(dec("p_retailprice") * dec("l_quantity"))
-            .cast("double")
-            .alias("cost"),
+            _revenue("rev"),
+            exact_sum_product("p_retailprice", "l_quantity", "cost"),
         )
         .select(
             "nation",
@@ -166,24 +167,23 @@ def q9_product_type_profit(spark, sf_dir):
     f"""
     WITH value_by_part AS (
         SELECT l_partkey AS pk,
-               SUM({sql_dec("l_extendedprice")}) AS part_value
+               {sql_sum("l_extendedprice", "part_value")}
         FROM lineitem
         JOIN supplier ON s_suppkey = l_suppkey
         JOIN nation ON n_nationkey = s_nationkey
         WHERE n_name = 'NATION_7'
         GROUP BY 1
     )
-    SELECT pk AS l_partkey, CAST(part_value AS DOUBLE) AS part_value
+    SELECT pk AS l_partkey, part_value
     FROM value_by_part
-    WHERE CAST(part_value AS DOUBLE) >
-          0.001 * (SELECT CAST(SUM(part_value) AS DOUBLE) FROM value_by_part)
+    WHERE part_value > 0.001 * (SELECT {sql_sum("part_value")} FROM value_by_part)
     """,
 )
 def q11_important_stock(spark, sf_dir):
     """TPC-H Q11 shape: per-part value share vs a global-total scalar
     subquery (HAVING > fraction * SUM() OVER all). The global total is
     a 1-row aggregate crossJoin-broadcast onto the per-part rows — no
-    driver collect. Both sides accumulate exact decimals and compare in
+    driver collect. Both sides accumulate exact sums and compare in
     double with the identical expression, so threshold rows agree."""
     t = load_tables(spark, sf_dir, ["lineitem", "supplier", "nation"])
     nat = t["nation"].filter(F.col("n_name") == "NATION_7")
@@ -198,20 +198,18 @@ def q11_important_stock(spark, sf_dir):
             "left_semi",
         )
         .groupBy(F.col("l_partkey").alias("pk"))
-        .agg(F.sum(dec("l_extendedprice")).alias("part_value_dec"))
+        .agg(exact_sum("`l_extendedprice`", "part_value"))
         # probe + broadcast-threshold branch both consume this agg;
         # AQE won't reuse the exchange under the broadcast branch —
         # pin the O(#parts) frame so lineitem aggregates ONCE
         .localCheckpoint(eager=True)
     )
-    total = value.agg(
-        (F.lit(0.001) * F.sum("part_value_dec").cast("double")).alias("threshold")
-    )
+    total = value.agg(F.expr(f"0.001 * {sql_sum('`part_value`')}").alias("threshold"))
     return (
         value.crossJoin(F.broadcast(total))
         .select(
             F.col("pk").alias("l_partkey"),
-            F.col("part_value_dec").cast("double").alias("part_value"),
+            "part_value",
             "threshold",
         )
         .filter(F.col("part_value") > F.col("threshold"))
@@ -260,22 +258,22 @@ def q12_late_shipment_priority(spark, sf_dir):
     "q15_top_supplier",
     f"""
     WITH revenue AS (
-        SELECT l_suppkey AS supplier_no, SUM({_SQL_REV}) AS total_rev
+        SELECT l_suppkey AS supplier_no, {_SQL_REV} AS total_rev
         FROM lineitem
         WHERE l_shipdate >= TIMESTAMP '1997-01-01'
           AND l_shipdate < TIMESTAMP '1997-04-01'
         GROUP BY 1
     )
-    SELECT s_suppkey, s_name, CAST(total_rev AS DOUBLE) AS total_rev
+    SELECT s_suppkey, s_name, total_rev
     FROM supplier JOIN revenue ON s_suppkey = supplier_no
     WHERE total_rev = (SELECT MAX(total_rev) FROM revenue)
     """,
 )
 def q15_top_supplier(spark, sf_dir):
     """TPC-H Q15 shape: the revenue "view" + WHERE total = (SELECT MAX)
-    — per-supplier quarterly revenue as an exact decimal sum, the max a
-    1-row broadcast, the equality filter exact because both sides are
-    the same decimal. Ties all survive (order-insensitive result)."""
+    — per-supplier quarterly revenue as an exact sum, the max a 1-row
+    broadcast, the equality filter exact because both sides are the
+    same double, finished once per group. Ties all survive (order-insensitive result)."""
     t = load_tables(spark, sf_dir, ["lineitem", "supplier"])
     revenue = (
         t["lineitem"]
@@ -284,26 +282,22 @@ def q15_top_supplier(spark, sf_dir):
             & (F.col("l_shipdate") < "1997-04-01")
         )
         .groupBy(F.col("l_suppkey").alias("supplier_no"))
-        .agg(F.sum(_revenue()).alias("total_rev_dec"))
+        .agg(_revenue("total_rev"))
         # both the probe and the broadcast MAX branch consume this
         # aggregate, and this Spark build's AQE does not reuse
         # exchanges under broadcast branches — pin the small
         # O(#suppliers) frame so the lineitem scan+agg runs ONCE
         .localCheckpoint(eager=True)
     )
-    top = revenue.agg(F.max("total_rev_dec").alias("max_rev"))
+    top = revenue.agg(F.max("total_rev").alias("max_rev"))
     return (
         revenue.crossJoin(F.broadcast(top))
-        .filter(F.col("total_rev_dec") == F.col("max_rev"))
+        .filter(F.col("total_rev") == F.col("max_rev"))
         .join(
             F.broadcast(t["supplier"]),
             F.col("s_suppkey") == F.col("supplier_no"),
         )
-        .select(
-            "s_suppkey",
-            "s_name",
-            F.col("total_rev_dec").cast("double").alias("total_rev"),
-        )
+        .select("s_suppkey", "s_name", "total_rev")
     )
 
 
@@ -312,20 +306,20 @@ def q15_top_supplier(spark, sf_dir):
     f"""
     WITH shipped AS (
         SELECT l_partkey AS pk, l_suppkey AS sk,
-               SUM({sql_dec("l_quantity")}) AS qty
+               {sql_sum("l_quantity", "qty")}
         FROM lineitem
         WHERE l_shipdate >= TIMESTAMP '1997-01-01'
           AND l_shipdate < TIMESTAMP '1998-01-01'
         GROUP BY 1, 2
     ), tot AS (
-        SELECT pk, SUM(qty) AS tot_qty FROM shipped GROUP BY 1
+        SELECT pk, {sql_sum("qty", "tot_qty")} FROM shipped GROUP BY 1
     ), qualifying AS (
         SELECT DISTINCT sk
         FROM shipped
         JOIN tot USING (pk)
         JOIN part ON p_partkey = pk
         WHERE p_name LIKE '%bolt%'
-          AND CAST(qty AS DOUBLE) > 0.3 * CAST(tot_qty AS DOUBLE)
+          AND qty > 0.3 * tot_qty
     )
     SELECT s_suppkey, s_name, n_name
     FROM supplier JOIN nation ON n_nationkey = s_nationkey
@@ -352,17 +346,14 @@ def q20_part_promotion_suppliers(spark, sf_dir):
         )
         .join(F.broadcast(bolt), F.col("p_partkey") == F.col("l_partkey"), "left_semi")
         .groupBy(F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("sk"))
-        .agg(F.sum(dec("l_quantity")).alias("qty"))
+        .agg(exact_sum("`l_quantity`", "qty"))
     )
     # per-part total as an unordered window over the (pk, sk) aggregate:
     # one scan, the pk shuffle shared, no second groupBy + join-back
-    tot_qty = F.sum("qty").over(Window.partitionBy("pk"))
+    tot_qty = F.expr(sql_sum("`qty`", over="PARTITION BY `pk`"))
     qualifying = (
         shipped.withColumn("tot_qty", tot_qty)
-        .filter(
-            F.col("qty").cast("double")
-            > F.lit(0.3) * F.col("tot_qty").cast("double")
-        )
+        .filter(F.col("qty") > F.lit(0.3) * F.col("tot_qty"))
         .select("sk")
         .distinct()
     )

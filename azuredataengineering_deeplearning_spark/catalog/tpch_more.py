@@ -17,15 +17,19 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from azuredataengineering_deeplearning_spark.catalog import query
-from azuredataengineering_deeplearning_spark.catalog.core import _SQL_REV, _revenue
-from azuredataengineering_deeplearning_spark.functions.exact import dec, exact_sum, sql_dec, sql_sum
+from azuredataengineering_deeplearning_spark.catalog.core import _SQL_REV, _revenue, _sql_revenue
+from azuredataengineering_deeplearning_spark.functions.exact import (
+    exact_sum,
+    exact_sum_product,
+    sql_sum,
+    sql_sum_product,
+)
 from azuredataengineering_deeplearning_spark.sources.readers import load_tables
 
 @query(
     "q6_forecast_revenue",
     f"""
-    SELECT CAST(SUM({sql_dec("l_extendedprice")}
-                    * {sql_dec("l_discount")}) AS DOUBLE) AS revenue,
+    SELECT {sql_sum_product("l_extendedprice", "l_discount", "revenue")},
            COUNT(*) AS n_rows
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1997-01-01'
@@ -47,9 +51,7 @@ def q6_forecast_revenue(spark, sf_dir):
             & (F.col("l_quantity") < 24)
         )
         .agg(
-            F.sum(dec("l_extendedprice") * dec("l_discount"))
-            .cast("double")
-            .alias("revenue"),
+            exact_sum_product("l_extendedprice", "l_discount", "revenue"),
             F.count(F.lit(1)).alias("n_rows"),
         )
     )
@@ -60,7 +62,7 @@ def q6_forecast_revenue(spark, sf_dir):
     f"""
     SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
            year(l_shipdate) AS l_year,
-           CAST(SUM({_SQL_REV}) AS DOUBLE) AS revenue
+           {_SQL_REV} AS revenue
     FROM lineitem
     JOIN supplier ON s_suppkey = l_suppkey
     JOIN orders ON o_orderkey = l_orderkey
@@ -101,8 +103,12 @@ def q7_volume_shipping(spark, sf_dir):
         .join(F.broadcast(n2), F.col("c_nk") == F.col("c_nationkey"))
         .filter(pair)
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
-        .agg(F.sum(_revenue()).cast("double").alias("revenue"))
+        .agg(_revenue("revenue"))
     )
+
+
+_NATION_3_PRICE = "CASE WHEN nation = 'NATION_3' THEN l_extendedprice ELSE 0 END"
+_PROMO_PRICE = "CASE WHEN p_type = 'PROMO' THEN l_extendedprice ELSE 0 END"
 
 
 @query(
@@ -110,7 +116,7 @@ def q7_volume_shipping(spark, sf_dir):
     f"""
     WITH all_nations AS (
         SELECT year(o_orderdate) AS o_year,
-               {_SQL_REV} AS volume,
+               l_extendedprice, l_discount,
                n2.n_name AS nation
         FROM part
         JOIN lineitem ON l_partkey = p_partkey
@@ -125,9 +131,7 @@ def q7_volume_shipping(spark, sf_dir):
           AND p_type = 'PROMO'
     )
     SELECT o_year,
-           CAST(SUM(CASE WHEN nation = 'NATION_3' THEN volume
-                         ELSE {sql_dec("0")} END) AS DOUBLE)
-           / CAST(SUM(volume) AS DOUBLE) AS mkt_share
+           {_sql_revenue(_NATION_3_PRICE)} / {_SQL_REV} AS mkt_share
     FROM all_nations GROUP BY o_year
     """,
 )
@@ -151,8 +155,6 @@ def q8_market_share(spark, sf_dir):
     orders = t["orders"].filter(
         F.col("o_orderdate").between("1996-01-01", "1997-12-31")
     )
-    vol = _revenue()
-    zero = dec(F.lit(0))
     joined = (
         t["lineitem"]
         .join(F.broadcast(part), F.col("p_partkey") == F.col("l_partkey"))
@@ -165,12 +167,7 @@ def q8_market_share(spark, sf_dir):
     )
     return (
         joined.groupBy(F.year("o_orderdate").alias("o_year"))
-        .agg(
-            F.sum(F.when(F.col("nation") == "NATION_3", vol).otherwise(zero))
-            .cast("double")
-            .alias("num"),
-            F.sum(vol).cast("double").alias("den"),
-        )
+        .agg(_revenue("num", _NATION_3_PRICE), _revenue("den"))
         .select("o_year", (F.col("num") / F.col("den")).alias("mkt_share"))
     )
 
@@ -179,7 +176,7 @@ def q8_market_share(spark, sf_dir):
     "q10_returned_items",
     f"""
     SELECT c_custkey, c_name,
-           CAST(SUM({_SQL_REV}) AS DOUBLE) AS revenue,
+           {_SQL_REV} AS revenue,
            c_acctbal, n_name
     FROM customer
     JOIN orders ON o_custkey = c_custkey
@@ -206,7 +203,7 @@ def q10_returned_items(spark, sf_dir):
         .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(t["nation"]), F.col("n_nationkey") == F.col("c_nationkey"))
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(F.sum(_revenue()).cast("double").alias("revenue"))
+        .agg(_revenue("revenue"))
         .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name")
         .orderBy(F.col("revenue").desc(), F.col("c_custkey").asc())
         .limit(20)
@@ -217,9 +214,8 @@ def q10_returned_items(spark, sf_dir):
     "q14_promo_revenue",
     f"""
     SELECT CAST(100.0 AS DOUBLE)
-           * CAST(SUM(CASE WHEN p_type = 'PROMO' THEN {_SQL_REV}
-                           ELSE {sql_dec("0")} END) AS DOUBLE)
-           / CAST(SUM({_SQL_REV}) AS DOUBLE) AS promo_revenue
+           * {_sql_revenue(_PROMO_PRICE)}
+           / {_SQL_REV} AS promo_revenue
     FROM lineitem JOIN part ON l_partkey = p_partkey
     WHERE l_shipdate >= TIMESTAMP '1997-03-01'
       AND l_shipdate < TIMESTAMP '1997-06-01'
@@ -232,16 +228,9 @@ def q14_promo_revenue(spark, sf_dir):
     li = t["lineitem"].filter(
         (F.col("l_shipdate") >= "1997-03-01") & (F.col("l_shipdate") < "1997-06-01")
     )
-    vol = _revenue()
-    zero = dec(F.lit(0))
     return (
         li.join(F.broadcast(t["part"]), F.col("p_partkey") == F.col("l_partkey"))
-        .agg(
-            F.sum(F.when(F.col("p_type") == "PROMO", vol).otherwise(zero))
-            .cast("double")
-            .alias("num"),
-            F.sum(vol).cast("double").alias("den"),
-        )
+        .agg(_revenue("num", _PROMO_PRICE), _revenue("den"))
         .select(
             (F.lit(100.0).cast("double") * F.col("num") / F.col("den")).alias(
                 "promo_revenue"
@@ -283,8 +272,7 @@ def q16_supplier_count(spark, sf_dir):
 @query(
     "q17_small_quantity_revenue",
     f"""
-    SELECT CAST(SUM({sql_dec("l_extendedprice")}) AS DOUBLE)
-           / CAST(7.0 AS DOUBLE) AS avg_yearly
+    SELECT {sql_sum("l_extendedprice")} / CAST(7.0 AS DOUBLE) AS avg_yearly
     FROM lineitem JOIN part ON p_partkey = l_partkey
     WHERE p_brand = 'Brand#5'
       AND l_quantity < (SELECT 0.2 * AVG(l_quantity) FROM lineitem l2
@@ -309,7 +297,7 @@ def q17_small_quantity_revenue(spark, sf_dir):
         .join(per_part, F.col("avg_pk") == F.col("l_partkey"))
         .filter(F.col("l_quantity") < F.col("qty_threshold"))
         .agg(
-            (F.sum(dec("l_extendedprice")).cast("double") / F.lit(7.0).cast("double"))
+            (F.expr(sql_sum("l_extendedprice")) / F.lit(7.0).cast("double"))
             .alias("avg_yearly")
         )
     )
@@ -325,30 +313,29 @@ def q17_small_quantity_revenue(spark, sf_dir):
     JOIN lineitem ON l_orderkey = o_orderkey
     WHERE o_orderkey IN (
         SELECT l_orderkey FROM lineitem
-        GROUP BY l_orderkey HAVING SUM(l_quantity) > 150)
+        GROUP BY l_orderkey HAVING {sql_sum("l_quantity")} > 150)
     GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
     ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 100
     """,
 )
 def q18_large_volume_customers(spark, sf_dir):
-    """TPC-H Q18 shape: HAVING-subquery membership → left-semi join
-    against a grouped-and-filtered key set, then the main 3-table
-    join-agg and top-100."""
+    """TPC-H Q18 shape with one lineitem scan: aggregate lineitem once by
+    order key, keeping the HAVING filter and the exact ``total_qty`` in the
+    same aggregation, then join orders and customer. ``o_orderkey``
+    determines every other group column, so the per-order total is the
+    query's total (the Synapse exchange-sharing rewrite of the IN
+    subquery and the main join-aggregate)."""
     t = load_tables(spark, sf_dir, ["customer", "orders", "lineitem"])
     big = (
         t["lineitem"]
         .groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("q"))
-        .filter(F.col("q") > 150)
-        .select(F.col("l_orderkey").alias("big_ok"))
+        .agg(exact_sum("l_quantity", "total_qty"))
+        .filter(F.col("total_qty") > 150)
     )
     return (
-        t["orders"]
-        .join(big, F.col("big_ok") == F.col("o_orderkey"), "left_semi")
-        .join(t["lineitem"], F.col("l_orderkey") == F.col("o_orderkey"))
+        big.join(t["orders"], F.col("o_orderkey") == F.col("l_orderkey"))
         .join(t["customer"], F.col("c_custkey") == F.col("o_custkey"))
-        .groupBy("c_name", "c_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
-        .agg(exact_sum("l_quantity", "total_qty"))
+        .select("c_name", "c_custkey", "o_orderkey", "o_orderdate", "o_totalprice", "total_qty")
         .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
         .limit(100)
     )
@@ -357,7 +344,7 @@ def q18_large_volume_customers(spark, sf_dir):
 @query(
     "q19_disjunctive_predicates",
     f"""
-    SELECT CAST(SUM({_SQL_REV}) AS DOUBLE) AS revenue, COUNT(*) AS n_rows
+    SELECT {_SQL_REV} AS revenue, COUNT(*) AS n_rows
     FROM lineitem JOIN part ON p_partkey = l_partkey
     WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
            AND l_quantity >= 1 AND l_quantity <= 30)
@@ -395,7 +382,7 @@ def q19_disjunctive_predicates(spark, sf_dir):
         .join(F.broadcast(t["part"]), F.col("p_partkey") == F.col("l_partkey"))
         .filter(cond)
         .agg(
-            F.sum(_revenue()).cast("double").alias("revenue"),
+            _revenue("revenue"),
             F.count(F.lit(1)).alias("n_rows"),
         )
     )

@@ -16,7 +16,7 @@ from azuredataengineering_deeplearning_spark.sources.readers import load_tables
     "q3_shipping_priority",
     f"""
     SELECT l_orderkey,
-           CAST(SUM({_SQL_REV}) AS DOUBLE) AS revenue,
+           {_SQL_REV} AS revenue,
            o_orderdate
     FROM customer JOIN orders ON c_custkey = o_custkey
     JOIN lineitem ON l_orderkey = o_orderkey
@@ -39,7 +39,7 @@ def q3_shipping_priority(spark, sf_dir):
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(cust, F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("l_orderkey", "o_orderdate")
-        .agg(F.sum(_revenue()).cast("double").alias("revenue"))
+        .agg(_revenue("revenue"))
         .select("l_orderkey", "revenue", "o_orderdate")
         .orderBy(F.col("revenue").desc(), F.col("l_orderkey").asc())
         .limit(10)

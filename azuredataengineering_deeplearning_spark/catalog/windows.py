@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from azuredataengineering_deeplearning_spark.catalog import query
-from azuredataengineering_deeplearning_spark.functions.exact import sql_dec
+from azuredataengineering_deeplearning_spark.functions.exact import sql_avg, sql_sum
 from azuredataengineering_deeplearning_spark.operators import scd as SCD
 from azuredataengineering_deeplearning_spark.operators import windows as W
 from azuredataengineering_deeplearning_spark.sources.readers import load_tables, read_parquet
@@ -38,16 +38,15 @@ def w1_flag_partition_max(spark, sf_dir):
 
 _CUMSUM_SQL = f"""
     SELECT event_id,
-           CAST(SUM({sql_dec("value")}) OVER (
-                PARTITION BY user_id ORDER BY epoch_ns(ts)
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS cumsum
+           {sql_sum("value", "cumsum", over="PARTITION BY user_id ORDER BY epoch_ns(ts)"
+                    " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW")}
     FROM events
 """
 
 
 @query("w2_cumsum_events", _CUMSUM_SQL)
 def w2_cumsum_events(spark, sf_dir):
-    """W2 baseline: running sum per user in exact decimal."""
+    """W2 baseline: running sum per user in exact fixed point."""
     ev = _events(spark, sf_dir)
     return W.cumsum(ev, ["user_id"], "ts_ns", "value").select("event_id", "cumsum")
 
@@ -121,11 +120,9 @@ def w6_cumcount(spark, sf_dir):
     "w7_expanding_mean",
     f"""
     SELECT event_id,
-           CAST(SUM({sql_dec("value")}) OVER w AS DOUBLE)
-             / COUNT(value) OVER w AS expanding_mean
+           {sql_avg("value", "expanding_mean", over="PARTITION BY user_id ORDER BY epoch_ns(ts)"
+                    " ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING")}
     FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY epoch_ns(ts)
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
     """,
 )
 def w7_expanding_mean(spark, sf_dir):

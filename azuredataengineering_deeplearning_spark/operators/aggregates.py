@@ -13,7 +13,13 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from azuredataengineering_deeplearning_spark.functions.exact import dec, exact_sum, wide
+from azuredataengineering_deeplearning_spark.functions.exact import (
+    dec,
+    exact_sum,
+    sql_sum,
+    sql_sum_wide,
+    wide,
+)
 from azuredataengineering_deeplearning_spark.sources.readers import local_rows_df
 
 
@@ -157,11 +163,11 @@ def weighted_mean(
     df: DataFrame, keys: Sequence[str], value: str, weight: str, alias: str
 ) -> DataFrame:
     """Σ(w·x)/Σw per group, order-independent: the per-row double product
-    is IEEE-identical everywhere; accumulation is exact decimal."""
+    is IEEE-identical everywhere; accumulation is exact fixed-point, the
+    products in the widened range (|x·w| < 1e22)."""
     return df.groupBy(*keys).agg(
-        (
-            F.sum(wide(F.col(value) * F.col(weight))).cast("double")
-            / F.sum(dec(F.col(weight))).cast("double")
+        F.expr(
+            f"{sql_sum_wide(f'`{value}` * `{weight}`')} / {sql_sum(f'`{weight}`')}"
         ).alias(alias)
     )
 
@@ -193,7 +199,7 @@ def weighted_percentile(
     keys = list(keys)
     if keys:
         w = Window.partitionBy(*keys).orderBy(F.col(value).asc())
-        wd = dec(F.col(weight))
+        wd = dec(f"`{weight}`")
         # the DEFAULT ordered-window frame is RANGE UNBOUNDED
         # PRECEDING .. CURRENT ROW: duplicate values share one
         # cumulative-weight step (ties can't split a CDF step; for the
@@ -231,10 +237,10 @@ def weighted_percentile(
         # broadcast branch over it would recompute the whole kernel
         # (AQE does not reuse exchanges under broadcast branches) —
         # sum(weights) needs only one plain scan of df
-        tot = df.agg(F.sum(dec(F.col(weight))).alias("__tot"))
+        tot = df.agg(F.sum(dec(f"`{weight}`")).alias("__tot"))
         staged = staged.crossJoin(F.broadcast(tot)).select(
             "__v",
-            (dec(F.col("__cum")) / F.col("__tot")).alias("__cdf"),
+            (dec("__cum") / F.col("__tot")).alias("__cdf"),
         )
     aggs = [
         F.min(F.when(F.col("__cdf") >= p, F.col("__v"))).alias(
@@ -399,7 +405,7 @@ def rfm_segments(
     per = df.groupBy(id_col).agg(
         F.max(F.col(ts_col).cast("date")).alias("__last"),
         F.count("*").alias("frequency"),
-        exact_sum(amount_col, "monetary"),
+        exact_sum(f"`{amount_col}`", "monetary"),
     )
     if asof is not None:
         per = per.withColumn(
@@ -573,23 +579,24 @@ def ab_welch(
     to a p-value; neither engine exposes erf in SQL, and the statistic
     is the distributed part.)
 
-    Moments accumulate in decimal (order-independent), so the emitted
-    doubles are bit-identical across engines and partitionings."""
+    Moments accumulate in fixed point (order-independent), so the
+    emitted doubles are bit-identical across engines and partitionings."""
     x = F.col(metric_col).cast("double")
     in_a = F.col(group_col) == arm_a
     in_b = F.col(group_col) == arm_b
-
-    def _m(cond):
-        n = F.sum(F.when(cond, 1).otherwise(0))
-        s = F.sum(F.when(cond, dec(x)))
-        ss = F.sum(F.when(cond, dec(x * x)))
-        return n, s.cast("double"), ss.cast("double")
-
-    na, sa, ssa = _m(in_a)
-    nb, sb, ssb = _m(in_b)
-    agg = df.agg(
-        na.alias("n_a"), sa.alias("__sa"), ssa.alias("__ssa"),
-        nb.alias("n_b"), sb.alias("__sb"), ssb.alias("__ssb"),
+    arms = df.select(
+        F.when(in_a, 1).otherwise(0).alias("__na"),
+        F.when(in_a, x).alias("__xa"),
+        F.when(in_b, 1).otherwise(0).alias("__nb"),
+        F.when(in_b, x).alias("__xb"),
+    )
+    agg = arms.agg(
+        F.sum("__na").alias("n_a"),
+        exact_sum("__xa", "__sa"),
+        exact_sum("__xa * __xa", "__ssa"),
+        F.sum("__nb").alias("n_b"),
+        exact_sum("__xb", "__sb"),
+        exact_sum("__xb * __xb", "__ssb"),
     )
     ma = F.col("__sa") / F.col("n_a")
     mb = F.col("__sb") / F.col("n_b")
@@ -630,7 +637,7 @@ def concentration(
     Groups with a single unit report gini 0. Negative measures are the
     caller's problem (Gini assumes non-negative)."""
     units = df.groupBy(*keys, unit_col).agg(
-        F.sum(dec(F.col(value_col).cast("double"))).alias("__x")
+        F.sum(dec(f"CAST(`{value_col}` AS DOUBLE)")).alias("__x")
     )
     w = Window.partitionBy(*keys).orderBy(F.col("__x").asc(), F.col(unit_col).asc())
     ranked = units.withColumn("__r", F.row_number().over(w))
@@ -675,7 +682,7 @@ def abc_classification(
     else C — the inventory/revenue 80-15-5 split. One unit-grain
     aggregate + one window per group; decimal-exact shares."""
     units = df.groupBy(*keys, unit_col).agg(
-        F.sum(dec(F.col(value_col).cast("double"))).alias("__x")
+        F.sum(dec(f"CAST(`{value_col}` AS DOUBLE)")).alias("__x")
     )
     w = (
         Window.partitionBy(*keys)
@@ -864,27 +871,24 @@ def eta_squared(
     """η² (correlation ratio): the numeric↔categorical association —
     between-group sum of squares over total sum of squares, the ANOVA
     effect size completing the EDA trio (CORR for num↔num,
-    :func:`cramers_v` for cat↔cat). Decimal-exact moments per group,
+    :func:`cramers_v` for cat↔cat). Exact fixed-point moments per group,
     grand stats derived from the (small) per-group frame — ONE scan.
     0 = group means identical, 1 = value determined by group."""
-    x = F.col(value_col).cast("double")
+    x = f"CAST(`{value_col}` AS DOUBLE)"
     g = (
-        df.filter(x.isNotNull() & F.col(group_col).isNotNull())
+        df.filter(F.col(value_col).cast("double").isNotNull() & F.col(group_col).isNotNull())
         .groupBy(group_col)
         .agg(
             F.count("*").alias("n_g"),
-            F.sum(dec(x)).alias("s_g"),
-            F.sum(dec(x * x)).alias("ss_g"),
+            exact_sum(x, "s_g"),
+            F.expr(sql_sum_wide(f"{x} * {x}", "ss_g")),
         )
     )
     tot = g.agg(
         F.sum("n_g").alias("n"),
-        F.sum("s_g").cast("double").alias("s"),
-        F.sum("ss_g").cast("double").alias("ss"),
-        F.sum(
-            (F.col("s_g").cast("double") * F.col("s_g").cast("double"))
-            / F.col("n_g")
-        ).alias("bss_raw"),
+        F.expr(sql_sum_wide("s_g", "s")),
+        F.expr(sql_sum_wide("ss_g", "ss")),
+        F.sum(F.col("s_g") * F.col("s_g") / F.col("n_g")).alias("bss_raw"),
     )
     grand_mean = F.col("s") / F.col("n")
     ss_total = F.col("ss") - grand_mean * grand_mean * F.col("n")

@@ -13,7 +13,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from azuredataengineering_deeplearning_spark.functions.exact import dec, exact_avg
+from azuredataengineering_deeplearning_spark.functions.exact import exact_avg, exact_sum
 
 
 def count_encode(
@@ -41,19 +41,19 @@ def target_encode_oof(
     broadcast joins; no window, no leakage."""
     out = out or f"{column}_te"
     g = df.groupBy(column).agg(
-        F.sum(dec(target)).alias("__gs"), F.count(target).alias("__gc")
+        exact_sum(f"`{target}`", "__gs"), F.count(target).alias("__gc")
     )
     f_ = df.groupBy(column, fold).agg(
-        F.sum(dec(target)).alias("__fs"), F.count(target).alias("__fc")
+        exact_sum(f"`{target}`", "__fs"), F.count(target).alias("__fc")
     )
     prior = df.agg(
-        exact_avg(target, "p")
+        exact_avg(f"`{target}`", "p")
     ).collect()[0].p
     joined = df.join(F.broadcast(g), [column], "left").join(
         F.broadcast(f_), [column, fold], "left"
     )
     enc = (
-        ((F.col("__gs") - F.col("__fs")).cast("double") + F.lit(prior) * smoothing)
+        (F.col("__gs") - F.col("__fs") + F.lit(prior) * smoothing)
         / ((F.col("__gc") - F.col("__fc")).cast("double") + F.lit(smoothing))
     )
     return joined.withColumn(out, enc).drop("__gs", "__gc", "__fs", "__fc")

@@ -61,7 +61,7 @@ def aggregate_batch(df: DataFrame, keys: Sequence[str], spec: AggSpec) -> DataFr
         if kind == "count":
             aggs.append(F.count(F.lit(1)).alias(out))
         elif kind == "sum":
-            aggs.append(F.sum(dec(col)).alias(out))
+            aggs.append(F.sum(dec(f"`{col}`")).alias(out))
         elif kind in ("min", "max"):
             aggs.append(getattr(F, kind)(col).alias(out))
         elif kind == "hist":

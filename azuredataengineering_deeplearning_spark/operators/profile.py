@@ -202,13 +202,13 @@ def profile_table(
     columns: Sequence[str] | None = None,
 ) -> DataFrame:
     """One-pass table profile (the ETL landing report): per column —
-    row count, nulls, exact distincts, numeric min/max/mean (decimal-
-    accumulated), string min/max. ONE aggregate over all columns
+    row count, nulls, exact distincts, numeric min/max/mean (exact
+    fixed-point), string min/max. ONE aggregate over all columns
     (map-side combined), then a map-only explode to long format — never
     a per-column job, the same single-scan discipline as
     ``discover_schema.py``'s profilers. Swap ``approx_count_distinct``
     in for the distinct counts at extreme cardinalities."""
-    from azuredataengineering_deeplearning_spark.functions.exact import dec
+    from azuredataengineering_deeplearning_spark.functions.exact import sql_avg
 
     cols = list(columns or df.columns)
     types = dict(df.dtypes)
@@ -224,9 +224,7 @@ def profile_table(
             aggs += [
                 F.min(c).cast("double").alias(f"__lo_{c}"),
                 F.max(c).cast("double").alias(f"__hi_{c}"),
-                (F.sum(dec(F.col(c).cast("double"))).cast("double") / F.count(c)).alias(
-                    f"__mean_{c}"
-                ),
+                F.expr(sql_avg(f"CAST(`{c}` AS DOUBLE)", f"`__mean_{c}`")),
             ]
         elif types[c] == "string":
             aggs += [

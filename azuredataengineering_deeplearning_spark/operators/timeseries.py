@@ -15,11 +15,10 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from azuredataengineering_deeplearning_spark.functions.exact import (
-    dec,
     exact_avg,
     exact_sum,
-    sql_dec,
-    sql_wide,
+    sql_array_moments,
+    sql_sum,
 )
 from azuredataengineering_deeplearning_spark.sources.readers import local_rows_df
 
@@ -71,11 +70,11 @@ def regrain(
 ) -> DataFrame:
     """Re-aggregate a daily panel to week/month/quarter grain
     (``stats_forecast_predict.py:212`` MonthEnd resample analog).
-    Exact-decimal sums; grain bucket = ``date_trunc`` (ISO Monday
+    Exact fixed-point sums; grain bucket = ``date_trunc`` (ISO Monday
     weeks)."""
     return (
         df.groupBy(id_col, F.date_trunc(grain, F.col(date_col)).alias(out_date))
-        .agg(exact_sum(value_col, out_value))
+        .agg(exact_sum(f"`{value_col}`", out_value))
     )
 
 
@@ -1244,11 +1243,11 @@ def make_series_numeric(
 
 
 def _series_agg(a: str, vc: str | None, alias: str) -> Column:
-    """One make-series bin aggregate as DOUBLE (sum/avg exact-decimal)."""
+    """One make-series bin aggregate as DOUBLE (sum/avg exact fixed-point)."""
     fns = {
         "count": lambda: F.count(F.lit(1)).cast("double").alias(alias),
-        "sum": lambda: exact_sum(vc, alias),
-        "avg": lambda: exact_avg(vc, alias),
+        "sum": lambda: exact_sum(f"`{vc}`", alias),
+        "avg": lambda: exact_avg(f"`{vc}`", alias),
         "min": lambda: F.min(vc).cast("double").alias(alias),
         "max": lambda: F.max(vc).cast("double").alias(alias),
     }
@@ -1311,22 +1310,6 @@ def _make_series_core(df, keys, idx, n_bins, specs, bins_expr, out_bins):
     )
 
 
-def _dec_moments_sql(arr: str) -> tuple[str, str]:
-    """SQL for the exact sum and sum of squares of a numeric array, as
-    DOUBLE: each element converts through ``functions.exact`` and the
-    fold accumulates in the widened decimal, so the result depends on
-    neither element order nor engine."""
-
-    def fold(term: str) -> str:
-        return (
-            f"CAST(aggregate({arr}, {sql_wide('0')},"
-            f" (acc, x) -> {sql_wide('acc + ' + term)}) AS DOUBLE)"
-        )
-
-    x = sql_dec("x")
-    return fold(x), fold(sql_wide(f"{x} * {x}"))
-
-
 def series_stats(
     df: DataFrame,
     series_col: str,
@@ -1337,15 +1320,15 @@ def series_stats(
 
     Pure higher-order array expressions (``aggregate``/``array_min``):
     zero extra shuffles, works on ``make_series`` output directly. Sums
-    accumulate in DECIMAL so the result is independent of both element
-    order and the oracle engine's summation order; squared terms are
-    rounded to 6 decimals at accumulation (exact whenever the series
-    values are counts/6-dp quantities — documented caveat for
-    full-precision doubles).
+    accumulate in fixed-point limbs (``functions.exact``) so the result
+    is independent of both element order and the oracle engine's
+    summation order; each double square is rounded to micro-units at
+    accumulation (exact whenever the series values are counts/3-dp
+    quantities — documented caveat for full-precision doubles).
     """
     s = series_col
     n = F.size(F.col(s)).cast("double")
-    sum_x, sum_x2 = (F.expr(e) for e in _dec_moments_sql(s))
+    sum_x, sum_x2 = (F.expr(e) for e in sql_array_moments(s))
     avg = sum_x / n
     var = sum_x2 / n - avg * avg
     return df.withColumns(
@@ -1495,15 +1478,15 @@ def series_stats_dynamic_sql(y_sql: str) -> str:
     max_idx, avg, stdev, variance, sum, len). Variance/stdev are SAMPLE
     moments (Kusto convention; the :func:`series_stats` operator keeps
     its population form). ``*_idx`` is the FIRST index attaining the
-    extremum. Sums accumulate in the widened exact decimal so the result is
-    element-order- and engine-independent at 6 decimals (same caveat as
+    extremum. Sums accumulate in exact fixed-point limbs so the result is
+    element-order- and engine-independent (same caveat as
     :func:`series_stats`). Empty series → null struct."""
-    dec_sum, dec_sum_sq = _dec_moments_sql("__y")
+    sum_x, sum_x2 = sql_array_moments("__y")
     moments = (
         "named_struct("
         "'n', CAST(size(__y) AS DOUBLE), "
-        f"'s', {dec_sum}, "
-        f"'ss', {dec_sum_sq}, "
+        f"'s', {sum_x}, "
+        f"'ss', {sum_x2}, "
         "'mn', array_min(__y), 'mx', array_max(__y))"
     )
     var = (
@@ -2731,8 +2714,9 @@ def linear_trend(
     division happens once per key in double. Degenerate series (single
     point / zero x-variance) yield slope 0 with the mean as intercept.
     """
-    x, y = F.col(x_col).cast("double"), F.col(y_col).cast("double")
-    moments, slope, intercept = _least_squares(x, y)
+    moments, slope, intercept = _least_squares(
+        f"CAST(`{x_col}` AS DOUBLE)", f"CAST(`{y_col}` AS DOUBLE)"
+    )
     return df.groupBy(*keys).agg(*moments).select(
         *keys,
         F.col("__n").cast("long").alias("n"),
@@ -2741,12 +2725,13 @@ def linear_trend(
     )
 
 
-def _least_squares(x: Column, y: Column) -> tuple[list[Column], Column, Column]:
-    """Moment aggregates ``__n, __sx, __sy, __sxy, __sxx`` (exact-decimal
+def _least_squares(x: str, y: str) -> tuple[list[Column], Column, Column]:
+    """Moment aggregates ``__n, __sx, __sy, __sxy, __sxx`` (exact fixed-point
     sums) and the closed-form slope and intercept over them, in double;
     slope 0 when x has no variance."""
     moments = [F.count(F.lit(1)).cast("double").alias("__n")] + [
-        exact_sum(e, a) for e, a in ((x, "__sx"), (y, "__sy"), (x * y, "__sxy"), (x * x, "__sxx"))
+        exact_sum(e, a)
+        for e, a in ((x, "__sx"), (y, "__sy"), (f"{x} * {y}", "__sxy"), (f"{x} * {x}", "__sxx"))
     ]
     n, sx, sy = F.col("__n"), F.col("__sx"), F.col("__sy")
     denom = n * F.col("__sxx") - sx * sx
@@ -3150,13 +3135,13 @@ def period_growth(
     grain: str = "week",
 ) -> DataFrame:
     """Period totals with period-over-period delta and percent change —
-    the WoW/MoM growth report: exact-decimal totals, one lag window
+    the WoW/MoM growth report: exact fixed-point totals, one lag window
     over the (small) period summary. First period reports null
     delta/pct; a zero prior period reports null pct (no division by
     zero surprises)."""
     p = F.date_trunc(grain, F.col(ts_col)).alias("period")
     tot = df.groupBy(p).agg(
-        exact_sum(F.col(value_col).cast("double"), "total")
+        exact_sum(f"CAST(`{value_col}` AS DOUBLE)", "total")
     )
     w = Window.orderBy("period")
     prev = F.lag("total").over(w)
@@ -3206,7 +3191,7 @@ def interarrival_stats(
     tiebreak_col: str | None = None,
 ) -> DataFrame:
     """Per-key inter-arrival (gap) statistics in seconds: count of
-    gaps, mean (exact-decimal), median and p90 (exact percentiles),
+    gaps, mean (exact fixed-point), median and p90 (exact percentiles),
     max — the activity-cadence fingerprint behind engagement scoring
     and anomaly baselines. One lag window + one aggregate; keys with a
     single event have no gaps and drop out."""
@@ -3221,7 +3206,7 @@ def interarrival_stats(
     gaps = df.withColumn("__g", gap).filter(F.col("__g").isNotNull())
     return gaps.groupBy(id_col).agg(
         F.count("*").cast("long").alias("n_gaps"),
-        (F.sum(dec("__g")).cast("double") / F.count("*")).alias("mean_gap_s"),
+        F.expr(f"{sql_sum('__g')} / COUNT(*)").alias("mean_gap_s"),
         F.expr("percentile(__g, 0.5)").alias("median_gap_s"),
         F.expr("percentile(__g, 0.9)").alias("p90_gap_s"),
         F.max("__g").alias("max_gap_s"),
@@ -3235,7 +3220,7 @@ def activity_heatmap(
 ) -> DataFrame:
     """Day-of-week × hour-of-day activity heatmap — the ops-dashboard
     staple: per (ISO dow 1-7, hour 0-23) cell, event count (plus
-    exact-decimal value sum when ``value_col`` given) and the cell's
+    exact fixed-point value sum when ``value_col`` given) and the cell's
     share of total. One aggregation pass; the share join is O(168)."""
     dow = F.dayofweek(F.col(ts_col))  # Sun=1; convert to ISO Mon=1
     iso_dow = ((dow + F.lit(5)) % 7 + 1).cast("int")
@@ -3244,7 +3229,7 @@ def activity_heatmap(
     ).agg(
         F.count("*").cast("long").alias("n"),
         *(
-            [exact_sum(F.col(value_col).cast("double"), "value_sum")]
+            [exact_sum(f"CAST(`{value_col}` AS DOUBLE)", "value_sum")]
             if value_col
             else []
         ),
@@ -3390,12 +3375,11 @@ def ensemble_forecast(
         .withColumn("__rn", F.row_number().over(w_ord))
         .withColumn("__maxrn", F.max("__rn").over(w_all))
     )
-    x = F.col("__rn").cast("double")
     tail = F.when(
         F.col("__rn") > F.col("__maxrn") - season,
         F.struct(F.col("__rn").alias("rn"), F.col("__y").alias("y")),
     )
-    moments, slope, intercept = _least_squares(x, F.col("__y"))
+    moments, slope, intercept = _least_squares("CAST(__rn AS DOUBLE)", "__y")
     agg = b.groupBy(*keys).agg(
         *moments,
         F.max(order_col).alias("__last"),

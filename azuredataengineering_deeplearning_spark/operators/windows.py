@@ -16,11 +16,16 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from azuredataengineering_deeplearning_spark.functions.exact import dec, wide
+from azuredataengineering_deeplearning_spark.functions.exact import dec, sql_avg, sql_sum, wide
 
 
 def _cols(xs: Sequence[str]) -> list[Column]:
     return [F.col(x) for x in xs]
+
+
+def _partition_sql(keys: Sequence[str]) -> str:
+    """``PARTITION BY`` clause of a SQL window over ``keys`` ("" if none)."""
+    return f"PARTITION BY {', '.join(f'`{k}`' for k in keys)}" if keys else ""
 
 
 # ---------------------------------------------------------------------------
@@ -49,14 +54,10 @@ def cumsum(
     value: str,
     out: str = "cumsum",
 ) -> DataFrame:
-    """Running sum per key (W2 baseline). Accumulates in exact decimal
-    so results are order-independent and salting-invariant."""
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(order_by)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return df.withColumn(out, F.sum(dec(value)).over(w).cast("double"))
+    """Running sum per key (W2 baseline). Accumulates in exact fixed
+    point so results are order-independent and salting-invariant."""
+    w = f"{_partition_sql(keys)} ORDER BY `{order_by}` ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+    return df.withColumn(out, F.expr(sql_sum(f"`{value}`", over=w)))
 
 
 def salted_cumsum(
@@ -82,7 +83,7 @@ def salted_cumsum(
     salt = F.floor(F.col(order_by) / F.lit(salt_size)).alias("__salt")
     df = df.withColumn("__salt", salt)
 
-    v = dec(value)
+    v = dec(f"`{value}`")
     w_in = (
         Window.partitionBy(*keys, "__salt")
         .orderBy(order_by)
@@ -101,7 +102,7 @@ def salted_cumsum(
     offsets = totals.select(
         *keys,
         "__salt",
-        F.coalesce(F.sum("__bt").over(w_prev), dec(F.lit(0))).alias("__offset"),
+        F.coalesce(F.sum("__bt").over(w_prev), dec("0")).alias("__offset"),
     )
     joined = df.join(offsets, [*keys, "__salt"], "left")
 
@@ -214,14 +215,8 @@ def expanding_mean_excluding_current(
     """Leakage-free expanding mean (W7; ``generate_data.py:596-610``):
     mean of all *strictly previous* values per key — the target-encoding
     primitive. First row per key is NULL (no history)."""
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(order_by)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return df.withColumn(
-        out, F.sum(dec(value)).over(w).cast("double") / F.count(value).over(w)
-    )
+    w = f"{_partition_sql(keys)} ORDER BY `{order_by}` ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING"
+    return df.withColumn(out, F.expr(sql_avg(f"`{value}`", over=w)))
 
 
 # ---------------------------------------------------------------------------
@@ -303,11 +298,10 @@ def rolling_time_agg(
     the 7-day-rolling-sum shape. RANGE frame, not ROWS: gaps in the
     series shrink the window, exactly like a time-based rolling join."""
     w = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col(order_by))
-        .rangeBetween(-preceding, 0)
+        f"{_partition_sql(keys)} ORDER BY `{order_by}`"
+        f" RANGE BETWEEN {int(preceding)} PRECEDING AND CURRENT ROW"
     )
-    return df.withColumn(out, F.sum(dec(value)).over(w).cast("double"))
+    return df.withColumn(out, F.expr(sql_sum(f"`{value}`", over=w)))
 
 
 # ---------------------------------------------------------------------------
@@ -754,7 +748,7 @@ def global_cumsum(
         else None
     )
     aggs = [
-        F.sum(dec(value_col)).alias("__s"),
+        F.sum(dec(f"`{value_col}`")).alias("__s"),
         F.count(value_col).alias("__c"),
     ]
     if flag is not None:
@@ -787,7 +781,7 @@ def global_cumsum(
     # fall: NULL only while NO non-null term has occurred yet globally
     # (within-bucket window NULL *and* zero values in earlier buckets);
     # otherwise nulls add nothing and the total carries forward.
-    wsum = F.sum(dec(value_col)).over(w)
+    wsum = F.sum(dec(f"`{value_col}`")).over(w)
     run = F.when(
         wsum.isNull() & (F.element_at(c_arr, F.col("__rb") + 1) == 0),
         F.lit(None).cast("decimal(29,6)"),
@@ -820,7 +814,7 @@ def global_cumsum(
         "__gcs_seg",
         (
             F.coalesce(F.col("__gcs_c"), zero)
-            - F.coalesce(dec(value_col), zero)
+            - F.coalesce(dec(f"`{value_col}`"), zero)
         ).alias("__gcs_p"),
     )
     return (

@@ -2348,12 +2348,15 @@ _STREAM_UNSUPPORTED = frozenset(
 # union/count). Ops NOT listed (take/limit/sample/top/partition/
 # invoke/...) select rows by physical position or break value ties by
 # encounter order, so a pipe containing one after the elision point
-# keeps the global sort. `summarize` is safe only when no aggregate
-# breaks ties by encounter order (arg_max/arg_min/any/take_any);
-# make_list/make_set are sort_array'd (see _AGGS). Plain sum/avg
-# (_AGG_FNS) add doubles in encounter order, so their last bits can still
-# move with row order; only top-nested's sum is exact-decimal. Allowlist,
-# not blocklist: an unknown op disables the optimization, never corrupts.
+# keeps the global sort. `summarize` is safe only when none of its
+# aggregates depends on encounter order (_ORDER_SENSITIVE_AGGS): the
+# tie-breaking picks (arg_max/arg_min/any/take_any) and the double
+# accumulators (sum/sumif/avg/avgif/stdev/variance, plain `F.sum`/`F.avg`
+# in _AGG_FNS, whose last bits move with the order rows are added in;
+# they stay doubles because KQL values may be NaN, ±inf or past the
+# exact kernel's range). make_list/make_set are sort_array'd (see
+# _AGG_FNS). Allowlist, not blocklist: an unknown op disables the
+# optimization, never corrupts.
 _ORDER_INSENSITIVE_OPS = frozenset(
     {"where", "project", "project-away", "project-rename",
      "project-keep", "project-reorder", "extend", "serialize",
@@ -2362,14 +2365,16 @@ _ORDER_INSENSITIVE_OPS = frozenset(
      "mv-expand"}
 )
 
-_ORDER_TIEBREAK_AGGS = re.compile(r"\b(?:arg_max|arg_min|any|take_any)\s*\(")
+_ORDER_SENSITIVE_AGGS = re.compile(
+    r"\b(?:arg_max|arg_min|any|take_any|sum|sumif|avg|avgif|stdev|variance)\s*\("
+)
 
 
 def _stages_order_insensitive(rest_stages) -> bool:
     for stage in rest_stages:
         op, _, rest = stage.partition(" ")
         if op == "summarize":
-            if _ORDER_TIEBREAK_AGGS.search(rest):
+            if _ORDER_SENSITIVE_AGGS.search(rest):
                 return False
         elif op not in _ORDER_INSENSITIVE_OPS:
             return False
@@ -5069,7 +5074,7 @@ def _top_nested(df: DataFrame, rest: str) -> DataFrame:
     fact table is semi-joined to the shrinking key set between levels,
     so deeper aggregates scan only surviving branches; every level's
     aggregate column appears in the result (KQL behavior). Sums
-    accumulate in decimal (order-independent vs the oracle). Ties break
+    accumulate in exact fixed point (order-independent vs the oracle). Ties break
     deterministically on the key value.
 
     ``with others='label'``: one extra row per surviving parent branch
