@@ -357,7 +357,7 @@ def s_txlog_skipping(spark, sf_dir):
         TX.append_with_stats(
             d.filter(F.col("n_chars") > med), table, ["n_chars"], target_files=1
         )
-    out, _ = TX.read_skipping(spark, table, "n_chars", 150, 300)
+    out, _ = TX.read_skipping(spark, table, {"n_chars": (150, 300)})
     return out
 
 

@@ -111,7 +111,7 @@ def j_asof_join_events(spark, sf_dir):
     """True two-table as-of join: each purchase picks up the user's most
     recent view at-or-before it (merge_asof semantics, computed fully
     JVM-side by the union+window strategy; DuckDB ASOF LEFT JOIN is the
-    oracle; the cogrouped-pandas path is equivalence-tested). Right side is
+    oracle; all three directions are tested against pd.merge_asof). Right side is
     deduped per (user, ts) with a max-id tiebreak so the nearest match
     is deterministic on both engines. Times compare at microsecond
     resolution (``ts_ns div 1000`` ≡ DuckDB ``epoch_us``): DuckDB's
@@ -137,7 +137,7 @@ def j_asof_join_events(spark, sf_dir):
         )
         .select("user_id", "ts_us", F.col("event_id").alias("view_id"))
     )
-    return J.asof_join_native(purchases, views, on="ts_us", by=["user_id"])
+    return J.asof_join(purchases, views, on="ts_us", by=["user_id"])
 
 
 @query(
@@ -258,7 +258,7 @@ def j_asof_hotkey_native(spark, sf_dir):
     with one global key serializes the sort onto one task — correct,
     and the yardstick the salted variant must match."""
     purchases, views = _asof_hotkey_inputs(spark, sf_dir)
-    out = J.asof_join_native(purchases, views, on="ts_us", by=["g"])
+    out = J.asof_join(purchases, views, on="ts_us", by=["g"])
     return out.select("event_id", "ts_us", "ts_us_right", "view_id")
 
 

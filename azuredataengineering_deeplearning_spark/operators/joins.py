@@ -4,8 +4,10 @@ Strategy notes for 100 TB: dimension joins are *explicitly* broadcast
 (J1) — at cluster scale the fact side never shuffles for a dim lookup.
 Fact-fact joins shuffle on their keys; AQE converts to broadcast at
 runtime when a side turns out small, and splits skewed partitions
-(skew-join enabled in the session profile). As-of joins are expressed as
-window `lag` over a single shuffle by key — not a self-join.
+(skew-join enabled in the session profile). As-of joins are one ordered
+window over a single shuffle by key — not a self-join: `lag` against a
+table's own history, the union trick (:func:`asof_join`) against a second
+table for every merge_asof direction.
 """
 
 from __future__ import annotations
@@ -118,84 +120,6 @@ def range_clamp(
     )
 
 
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    by: Sequence[str],
-    direction: str = "backward",
-    suffix: str = "_right",
-) -> DataFrame:
-    """True two-table as-of join (pandas ``merge_asof`` semantics):
-    for every left row, the nearest right row per ``by`` key at or
-    before (``backward``), at or after (``forward``), or closest to
-    (``nearest``) the left ``on`` value; unmatched rows keep nulls
-    (left-join semantics).
-
-    Spark has no native as-of join; a window `lag` only works against a
-    table's own history (:func:`asof_previous`). This is the classic
-    feature-to-label attachment op for training pipelines ("state of X
-    when Y happened"). Implementation: cogrouped ``applyInPandas`` — one
-    shuffle per side on ``by``, then an in-memory per-key merge_asof;
-    right columns colliding with left names get ``suffix``. A key's
-    whole history must fit one task (time-bucket the key to split
-    pathological hot keys, as in salted_cumsum)."""
-    import pandas as pd
-    from pyspark.sql.types import StructField, StructType
-
-    by = list(by)
-    left_names = set(left.columns)
-    rename = {
-        c: c + suffix
-        for c in right.columns
-        if c not in by and c != on and c in left_names
-    }
-    right_renamed = right
-    for old, new in rename.items():
-        right_renamed = right_renamed.withColumnRenamed(old, new)
-    r_on = on + suffix  # right's own timestamp survives, suffixed
-    right_renamed = right_renamed.withColumnRenamed(on, r_on)
-
-    r_fields = [
-        f for f in right_renamed.schema.fields if f.name not in by
-    ]
-    out_schema = StructType(
-        list(left.schema.fields)
-        + [StructField(f.name, f.dataType, True) for f in r_fields]
-    )
-    out_cols = [f.name for f in out_schema.fields]
-    r_names = [f.name for f in r_fields]
-
-    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if lpdf.empty:
-            return pd.DataFrame(columns=out_cols)
-        lpdf = lpdf.sort_values(on, kind="mergesort")
-        if rpdf.empty:
-            res = lpdf.reindex(columns=out_cols)
-        else:
-            rpdf = rpdf.drop(columns=by).sort_values(r_on, kind="mergesort")
-            res = pd.merge_asof(
-                lpdf,
-                rpdf,
-                left_on=on,
-                right_on=r_on,
-                direction=direction,
-            )
-        # integer right columns become float64 when unmatched rows
-        # introduce NaN — convert to nullable Int64 so Arrow hands Spark
-        # proper bigint-with-nulls
-        for f in r_fields:
-            if f.dataType.typeName() in ("long", "integer") and f.name in res:
-                res[f.name] = res[f.name].astype("Int64")
-        return res.reindex(columns=out_cols)
-
-    return (
-        left.groupBy(*by)
-        .cogroup(right_renamed.groupBy(*by))
-        .applyInPandas(merge, out_schema)
-    )
-
-
 def interval_join(
     points: DataFrame,
     intervals: DataFrame,
@@ -242,7 +166,7 @@ def interval_join(
     )
 
 
-def asof_join_native(
+def asof_join(
     left: DataFrame,
     right: DataFrame,
     on: str,
@@ -250,37 +174,67 @@ def asof_join_native(
     direction: str = "backward",
     suffix: str = "_right",
 ) -> DataFrame:
-    """As-of join computed entirely JVM-side — the scale path.
+    """True two-table as-of join (pandas ``merge_asof`` semantics):
+    for every left row, the nearest right row per ``by`` key at or
+    before (``backward``), at or after (``forward``), or closest to
+    (``nearest``) the left ``on`` value; unmatched rows keep nulls
+    (left-join semantics). Right columns colliding with left names get
+    ``suffix``; the right ``on`` column survives as ``on + suffix``.
 
-    Union trick: tag and union both inputs, then one ordered window per
-    key carries the nearest right ROW (packed as a struct so a null
-    field inside a matched right row stays null, exactly like
-    merge_asof) onto every left row:
+    Spark has no native as-of join; a window `lag` only works against a
+    table's own history (:func:`asof_previous`). Union trick: tag and
+    union both inputs, then one ordered window per key carries the
+    nearest right ROW (packed as a struct so a null field inside a
+    matched right row stays null, exactly like merge_asof) onto every
+    left row:
 
     - ``backward``: last right-struct over (t asc, left-after-right at
       equal t) → nearest right at-or-before; ties at equal t match.
     - ``forward``: same with t desc → nearest right at-or-after.
+    - ``nearest``: both of the above, the forward window re-sorting the
+      same shuffled partitions; the backward row wins when
+      ``t - t_back <= t_fwd - t``. That is pandas' tie rule: at equal
+      distance the earlier row is taken, and an exact match (distance
+      0, the same row on both sides) always wins.
 
-    One shuffle on ``by`` + one sort — no Python, no Arrow transfer,
-    whole-stage codegen end to end. ~10x the cogrouped-pandas
-    :func:`asof_join` throughput and no per-key memory bound (the
-    window streams). 'nearest' still routes to the pandas path."""
-    if direction not in ("backward", "forward"):
-        raise ValueError("asof_join_native supports backward/forward")
-    unified, r_value_cols = _asof_unified(left, right, on, list(by), suffix)
+    One shuffle on ``by`` + one sort + one window (two of each sort and
+    window for ``nearest``, still one shuffle) — no Python, no Arrow
+    transfer, whole-stage codegen end to end, and no per-key memory
+    bound: every frame runs from the partition start to the current
+    row, so the window streams. (A ``first`` over ``(0,
+    unboundedFollowing)`` would buffer the whole key and re-aggregate
+    its tail for every row — quadratic per key.) A key's history still
+    sorts inside one task; :func:`asof_join_salted` is the hot-key path.
+    Like merge_asof, deterministic tie-breaks need a right side unique
+    per (``by``, ``on``)."""
+    if direction not in ("backward", "forward", "nearest"):
+        raise ValueError("asof_join supports backward/forward/nearest")
     by = list(by)
-    if direction == "backward":
-        order = [F.col("__t").asc(), F.col("__is_left").asc()]
+    unified, r_value_cols = _asof_unified(left, right, on, by, suffix)
+
+    def carried(t_order: Column) -> Column:
+        w = Window.partitionBy(*by).orderBy(t_order, F.col("__is_left").asc())
+        return F.last("__r", ignorenulls=True).over(
+            w.rowsBetween(Window.unboundedPreceding, 0)
+        )
+
+    back, fwd = carried(F.col("__t").asc()), carried(F.col("__t").desc())
+    if direction == "nearest":
+        t, r_t = F.col("__t"), on + suffix
+        matched = (
+            unified.withColumn("__b", back)
+            .withColumn("__f", fwd)
+            .filter(F.col("__is_left") == 1)
+            .withColumn("__m", F.when(
+                F.col("__b").isNull()
+                | (t - F.col("__b")[r_t] > F.col("__f")[r_t] - t),
+                F.col("__f"),
+            ).otherwise(F.col("__b")))
+        )
     else:
-        order = [F.col("__t").desc(), F.col("__is_left").asc()]
-    w = (
-        Window.partitionBy(*by)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    matched = unified.withColumn(
-        "__m", F.last("__r", ignorenulls=True).over(w)
-    ).filter(F.col("__is_left") == 1)
+        matched = unified.withColumn(
+            "__m", back if direction == "backward" else fwd
+        ).filter(F.col("__is_left") == 1)
     return matched.select(
         *left.columns,
         *[F.col("__m").getField(c).alias(c) for c in r_value_cols],
@@ -343,7 +297,7 @@ def asof_join_salted(
 ) -> DataFrame:
     """Skew-resistant as-of join — the hot-key path.
 
-    :func:`asof_join_native` sorts each ``by`` key inside ONE task; a
+    :func:`asof_join` sorts each ``by`` key inside ONE task; a
     key owning most of the table (one hot user, a global as-of with
     ``by=()``) serializes the whole join. This variant salts the time
     axis the way ``windows.salted_cumsum`` salts cumulative sums:
@@ -360,9 +314,10 @@ def asof_join_salted(
     4. join the carry back on (key, bucket) — AQE broadcasts the
        spine — and ``coalesce(within_bucket_match, carry)``.
 
-    Same result set as the native join (equivalence-tested; same
-    DuckDB ASOF oracle in the catalog). Requires a numeric ``on``
-    column and — like the native path — a right side unique per
+    Same result set as :func:`asof_join` (equivalence-tested; same
+    DuckDB ASOF oracle in the catalog), backward/forward only. Requires
+    a numeric ``on`` column and — like :func:`asof_join` — a right side
+    unique per
     (``by``, ``on``) for deterministic tie-breaks. Pick
     ``bucket_width`` so a hot key spreads over 10–1000 buckets
     (e.g. 1h of epoch-micros for a day-scale table); ``None`` sizes it

@@ -19,10 +19,6 @@ from pyspark.sql import functions as F
 from azuredataengineering_deeplearning_spark.functions.exact import dec, sql_avg, sql_sum, wide
 
 
-def _cols(xs: Sequence[str]) -> list[Column]:
-    return [F.col(x) for x in xs]
-
-
 def _partition_sql(keys: Sequence[str]) -> str:
     """``PARTITION BY`` clause of a SQL window over ``keys`` ("" if none)."""
     return f"PARTITION BY {', '.join(f'`{k}`' for k in keys)}" if keys else ""
@@ -936,52 +932,6 @@ def event_transitions(
     return pairs.withColumn(
         "prob", F.col("n") / F.sum("n").over(w_from)
     )
-
-
-def event_transitions_skew_safe(
-    df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    event_col: str,
-    tiebreak_col: str | None = None,
-) -> DataFrame:
-    """Result-identical to :func:`event_transitions`, built for hot
-    keys: the per-key window there sorts each key's events in ONE task,
-    so a key holding half the stream serializes the stage. Here rows get
-    a skew-proof global row number (range-partitioned two-phase
-    numbering, ``global_row_number``) over (key, ts) and adjacency
-    becomes a self-join on ``rn + 1`` filtered to same key — every stage
-    balanced regardless of key skew. Probe at 20M rows with 50% on one
-    key: the window path sorts the hot key in one task in 12.8 s; this
-    path pays two balanced shuffles for 35 s. Use it only when a single
-    key's volume exceeds what one task can sort-and-spill (billions of
-    rows per key) — below that, the plain window wins."""
-    order = [key_col, ts_col] + ([tiebreak_col] if tiebreak_col else [])
-    numbered = global_row_number(
-        df.select(key_col, ts_col, event_col, *(
-            [tiebreak_col] if tiebreak_col else []
-        )),
-        order=order,
-        out="__rn",
-    )
-    a = numbered.select(
-        F.col(key_col).alias("__k"),
-        F.col(event_col).alias("from_event"),
-        F.col("__rn"),
-    )
-    b = numbered.select(
-        F.col(key_col).alias("__k2"),
-        F.col(event_col).alias("to_event"),
-        (F.col("__rn") - 1).alias("__rn"),
-    )
-    pairs = (
-        a.join(b, "__rn")
-        .filter(F.col("__k") == F.col("__k2"))
-        .groupBy("from_event", "to_event")
-        .agg(F.count("*").alias("n"))
-    )
-    w_from = Window.partitionBy("from_event")
-    return pairs.withColumn("prob", F.col("n") / F.sum("n").over(w_from))
 
 
 def paths_to_conversion(

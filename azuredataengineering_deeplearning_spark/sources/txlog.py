@@ -855,39 +855,42 @@ def append_with_stats(
 def read_skipping(
     spark: SparkSession,
     path: str,
-    column: str,
-    lo,
-    hi,
+    ranges: dict,
     version: int | None = None,
 ) -> tuple[DataFrame, dict]:
     """Stats-pruned snapshot read: scan ONLY files whose recorded
-    [min, max] for ``column`` overlaps [lo, hi] (files without stats
-    are conservatively read). Returns (DataFrame already filtered to
-    the range, {"scanned": n, "skipped": n}) so callers can assert the
+    [min, max] overlaps EVERY ``{column: (lo, hi)}`` range (a missing
+    or NULL stat on a column cannot exclude the file, so it is
+    conservatively read). Returns (DataFrame already filtered to all
+    ranges, {"scanned": n, "skipped": n}) so callers can assert the
     pruning actually happened. The log replay merges each live file's
     newest stats entry."""
     from pyspark.sql import functions as F
 
     live, _, recorded = _snapshot(path, version)
     stats = _replay_stats(path, version)
-    q_lo, q_hi = _stat_encode(lo), _stat_encode(hi)
+    enc_ranges = {
+        col: (_stat_encode(lo), _stat_encode(hi))
+        for col, (lo, hi) in ranges.items()
+    }
     keep, skipped = [], 0
     for f in live:
-        s = stats.get(f, {}).get(column)
-        if s is None:
-            keep.append(f)
-            continue
-        f_lo, f_hi = s
-        if f_lo is None or f_hi is None or (f_lo <= q_hi and f_hi >= q_lo):
-            keep.append(f)
+        fs = stats.get(f, {})
+        for col, (q_lo, q_hi) in enc_ranges.items():
+            f_lo, f_hi = fs.get(col) or (None, None)
+            if f_lo is None or f_hi is None:
+                continue  # a missing or NULL stat cannot exclude the file
+            if f_lo > q_hi or f_hi < q_lo:
+                skipped += 1
+                break
         else:
-            skipped += 1
+            keep.append(f)
     if not keep:
         empty = read(spark, path, version).filter(F.lit(False))
         return empty, {"scanned": 0, "skipped": skipped}
-    df = _scan(spark, path, keep, _struct(recorded)).filter(
-        F.col(column).between(lo, hi)
-    )
+    df = _scan(spark, path, keep, _struct(recorded))
+    for col, (lo, hi) in ranges.items():
+        df = df.filter(F.col(col).between(lo, hi))
     return df, {"scanned": len(keep), "skipped": skipped}
 
 
@@ -903,48 +906,6 @@ def stream_changes(spark: SparkSession, path: str, schema) -> DataFrame:
     it — treat this stream as at-least-once and key downstream merges
     idempotently (the same caveat Delta solves with commit-atomic CDF)."""
     return spark.readStream.schema(schema).parquet(os.path.join(path, "_cdf"))
-
-
-def read_skipping_multi(
-    spark: SparkSession,
-    path: str,
-    ranges: dict,
-    version: int | None = None,
-) -> tuple[DataFrame, dict]:
-    """Multi-predicate skipping read: keep files whose recorded
-    [min, max] overlaps EVERY ``{column: (lo, hi)}`` range (missing
-    stats on any column → conservatively kept), filter the survivors to
-    all ranges. Same contract as :func:`read_skipping`, conjunctive."""
-    from pyspark.sql import functions as F
-
-    live, _, recorded = _snapshot(path, version)
-    stats = _replay_stats(path, version)
-    enc_ranges = {
-        col: (_stat_encode(lo), _stat_encode(hi))
-        for col, (lo, hi) in ranges.items()
-    }
-    keep, skipped = [], 0
-    for f in live:
-        fs = stats.get(f, {})
-        drop = False
-        for col, (q_lo, q_hi) in enc_ranges.items():
-            s = fs.get(col)
-            if s is None or s[0] is None or s[1] is None:
-                continue  # no stats → cannot exclude on this column
-            if s[0] > q_hi or s[1] < q_lo:
-                drop = True
-                break
-        if drop:
-            skipped += 1
-        else:
-            keep.append(f)
-    if not keep:
-        empty = read(spark, path, version).filter(F.lit(False))
-        return empty, {"scanned": 0, "skipped": skipped}
-    df = _scan(spark, path, keep, _struct(recorded))
-    for col, (lo, hi) in ranges.items():
-        df = df.filter(F.col(col).between(lo, hi))
-    return df, {"scanned": len(keep), "skipped": skipped}
 
 
 def clone(

@@ -160,17 +160,17 @@ def test_file_stats_skipping(spark, tmp_path):
             [(lo + i, "v") for i in range(10)], "k long, v string"
         )
         TX.append_with_stats(df, p, ["k"], target_files=1)
-    out, info = TX.read_skipping(spark, p, "k", 105, 107)
+    out, info = TX.read_skipping(spark, p, {"k": (105, 107)})
     assert info["skipped"] == 2 and info["scanned"] == 1
     assert sorted(r.k for r in out.collect()) == [105, 106, 107]
     # out-of-range probe scans nothing
-    empty, info2 = TX.read_skipping(spark, p, "k", 900, 999)
+    empty, info2 = TX.read_skipping(spark, p, {"k": (900, 999)})
     assert info2["scanned"] == 0 and empty.count() == 0
     # files written without stats are conservatively scanned
     TX.append(
         spark.createDataFrame([(500, "x")], "k long, v string"), p, target_files=1
     )
-    _, info3 = TX.read_skipping(spark, p, "k", 105, 107)
+    _, info3 = TX.read_skipping(spark, p, {"k": (105, 107)})
     assert info3["scanned"] == 2  # the matching file + the stats-less one
 
 
@@ -211,15 +211,15 @@ def test_compact_restat_and_multi_column_skipping(spark, tmp_path):
         )
         TX.append_with_stats(df, p, ["k", "x"], target_files=1)
     # multi-range: k in [100,109] AND x in [10.0, 10.5] → only middle file
-    out, info = TX.read_skipping_multi(spark, p, {"k": (100, 109), "x": (10.0, 10.5)})
+    out, info = TX.read_skipping(spark, p, {"k": (100, 109), "x": (10.0, 10.5)})
     assert info["skipped"] == 2 and info["scanned"] == 1
     assert sorted(r.k for r in out.collect()) == [100, 101, 102, 103, 104, 105]
     # compact WITH re-stat keeps skipping effective on the rewritten file
     TX.compact(spark, p, target_files=1, stats_cols=["k", "x"])
-    out2, info2 = TX.read_skipping_multi(spark, p, {"k": (500, 600)})
+    out2, info2 = TX.read_skipping(spark, p, {"k": (500, 600)})
     assert info2["scanned"] == 0 and info2["skipped"] == 1
     # and in-range reads still return the same rows after compaction
-    out3, _ = TX.read_skipping_multi(spark, p, {"k": (100, 109)})
+    out3, _ = TX.read_skipping(spark, p, {"k": (100, 109)})
     assert out3.count() == 10
 
 
@@ -306,7 +306,7 @@ def test_stats_serialize_date_and_decimal_columns(spark, tmp_path):
                          target_files=1)
     # date-range prune: only the January-1 file overlaps
     got, info = TX.read_skipping(
-        spark, p, "d", datetime.date(2023, 12, 1), datetime.date(2024, 1, 10)
+        spark, p, {"d": (datetime.date(2023, 12, 1), datetime.date(2024, 1, 10))}
     )
     assert info == {"scanned": 1, "skipped": 1}
     assert [r.d for r in got.collect()] == [datetime.date(2024, 1, 1)]
@@ -314,7 +314,7 @@ def test_stats_serialize_date_and_decimal_columns(spark, tmp_path):
     import decimal
 
     got2, info2 = TX.read_skipping(
-        spark, p, "amt", decimal.Decimal("2.25"), decimal.Decimal("9.99")
+        spark, p, {"amt": (decimal.Decimal("2.25"), decimal.Decimal("9.99"))}
     )
     assert info2["scanned"] == 1 and info2["skipped"] == 1
     assert [str(r.amt) for r in got2.collect()] == ["2.25"]
@@ -391,7 +391,7 @@ def test_checkpoint_carries_stats_for_skipping(spark, tmp_path):
     TX.append_with_stats(hi, p, ["k"], target_files=1)
     TX.checkpoint_log(p)
     TX.clean_log(p, dry_run=False)
-    got, info = TX.read_skipping(spark, p, "k", 100, 200)
+    got, info = TX.read_skipping(spark, p, {"k": (100, 200)})
     assert info == {"scanned": 1, "skipped": 1}
     assert got.count() == 10
 
@@ -481,10 +481,10 @@ def test_compact_zorder_tightens_skipping(spark, tmp_path):
     TX.append(df, t, target_files=4)
     # plain compact: files still span everything
     TX.compact(spark, t, target_files=4, stats_cols=["k"])
-    plain, plain_stats = TX.read_skipping(spark, t, "k", 5, 10)
+    plain, plain_stats = TX.read_skipping(spark, t, {"k": (5, 10)})
     # zorder compact: range layout -> narrow per-file min/max
     TX.compact(spark, t, target_files=4, stats_cols=["k"], zorder_by=["k"])
-    zz, zz_stats = TX.read_skipping(spark, t, "k", 5, 10)
+    zz, zz_stats = TX.read_skipping(spark, t, {"k": (5, 10)})
     want = df.filter(F.col("k").between(5, 10)).count()
     assert zz.count() == plain.count() == want
     assert plain_stats["skipped"] == 0      # every file spans the range

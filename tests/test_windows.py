@@ -129,6 +129,13 @@ def test_asof_join_directions(spark):
         ).collect()
     }
     assert fwd == {"p1": 20, "p2": None, "p3": None}
+    near = {
+        r.tag: r.t_right
+        for r in asof_join(
+            left, right, on="t", by=["k"], direction="nearest"
+        ).collect()
+    }
+    assert near == {"p1": 8, "p2": 20, "p3": None}
 
 
 def test_asof_join_name_collision_suffix(spark):
@@ -165,13 +172,30 @@ def test_interval_join_matches_naive(spark):
     assert auto.count() == naive.count()
 
 
-def test_asof_native_equals_pandas_path(spark):
+def _merge_asof_reference(L, R, direction):
+    """pandas ``merge_asof`` over the same rows — the contract the
+    engine's as-of join reproduces. ``L`` rows are (k, t, lid), ``R``
+    rows (k, t, rv); returns {lid: (t_right, rv)} with None for
+    unmatched."""
+    import pandas as pd
+
+    lp = pd.DataFrame(L, columns=["k", "t", "lid"]).sort_values("t", kind="mergesort")
+    rp = pd.DataFrame(R, columns=["k", "t_right", "rv"]).sort_values(
+        "t_right", kind="mergesort"
+    )
+    ref = pd.merge_asof(
+        lp, rp, left_on="t", right_on="t_right", by="k", direction=direction
+    )
+    none = lambda v: None if pd.isna(v) else v
+    return {
+        r.lid: (none(r.t_right), none(r.rv)) for r in ref.itertuples(index=False)
+    }
+
+
+def test_asof_join_equals_merge_asof(spark):
     import random
 
-    from azuredataengineering_deeplearning_spark.operators.joins import (
-        asof_join,
-        asof_join_native,
-    )
+    from azuredataengineering_deeplearning_spark.operators.joins import asof_join
 
     random.seed(11)
     L = [(random.randint(0, 15), random.randint(0, 500), i) for i in range(800)]
@@ -185,25 +209,84 @@ def test_asof_native_equals_pandas_path(spark):
     )
     ldf = spark.createDataFrame(L, ["k", "t", "lid"])
     rdf = spark.createDataFrame(R, ["k", "t", "rv"])
-    for d in ("backward", "forward"):
-        pa = {
+    for d in ("backward", "forward", "nearest"):
+        got = {
             r.lid: (r.t_right, r.rv)
             for r in asof_join(ldf, rdf, on="t", by=["k"], direction=d).collect()
         }
-        na = {
-            r.lid: (r.t_right, r.rv)
-            for r in asof_join_native(
-                ldf, rdf, on="t", by=["k"], direction=d
-            ).collect()
-        }
-        assert pa == na
+        assert got == _merge_asof_reference(L, R, d), d
     # matched-row null fields stay null (struct semantics, not ffill)
     l2 = spark.createDataFrame([(1, 10)], ["k", "t"])
     r2 = spark.createDataFrame(
         [(1, 5, 1.0), (1, 8, None)], "k long, t long, v double"
     )
-    row = asof_join_native(l2, r2, on="t", by=["k"]).collect()[0]
+    row = asof_join(l2, r2, on="t", by=["k"]).collect()[0]
     assert row.t_right == 8 and row.v is None
+
+
+def test_asof_join_nearest_cases(spark):
+    from azuredataengineering_deeplearning_spark.operators.joins import asof_join
+
+    L = [
+        (1, 15, 0),   # tie: 10 and 20 both 5 away -> backward (10)
+        (1, 16, 1),   # strictly closer to 20
+        (1, 10, 2),   # exact match
+        (1, 14, 3),   # strictly closer to 10
+        (2, 7, 4),    # key with no right rows -> nulls
+        (3, 5, 5),    # every right row later -> first later one
+        (4, 100, 6),  # every right row earlier -> last earlier one
+        (5, 12, 7),   # nearest right row carries a NULL field
+    ]
+    R = [
+        (1, 10, 1.0), (1, 20, 2.0),
+        (3, 50, 3.0), (3, 60, 4.0),
+        (4, 1, 5.0), (4, 2, 6.0),
+        (5, 10, None), (5, 30, 7.0),
+    ]
+    ldf = spark.createDataFrame(L, "k long, t long, lid long")
+    rdf = spark.createDataFrame(R, "k long, t long, rv double")
+    out = asof_join(ldf, rdf, on="t", by=["k"], direction="nearest")
+    # one shuffle, and every frame ends at the current row: a frame to
+    # unboundedFollowing re-aggregates a key's tail per row (quadratic)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1
+    assert "unboundedfollowing" not in plan.lower()
+    got = {r.lid: (r.t_right, r.rv) for r in out.collect()}
+    assert got == {
+        0: (10, 1.0), 1: (20, 2.0), 2: (10, 1.0), 3: (10, 1.0),
+        4: (None, None), 5: (50, 3.0), 6: (2, 6.0), 7: (10, None),
+    }
+    assert got == _merge_asof_reference(L, R, "nearest")
+
+
+def test_asof_join_nearest_timestamp_on(spark):
+    import datetime as dt
+
+    from azuredataengineering_deeplearning_spark.operators.joins import asof_join
+
+    t0 = dt.datetime(2024, 1, 1)
+    m = lambda minutes, us=0: t0 + dt.timedelta(minutes=minutes, microseconds=us)
+    L = [
+        (1, m(5), 0),      # tie at 5 minutes each way -> backward
+        (1, m(5, 1), 1),   # one microsecond past the midpoint -> forward
+        (1, m(10), 2),     # exact match
+        (2, m(3), 3),      # no right rows for this key
+    ]
+    R = [(1, m(0), 1.0), (1, m(10), 2.0)]
+    ldf = spark.createDataFrame(L, "k int, t timestamp, lid int")
+    rdf = spark.createDataFrame(R, "k int, t timestamp, rv double")
+    got = {
+        r.lid: (r.t_right, r.rv)
+        for r in asof_join(ldf, rdf, on="t", by=["k"], direction="nearest").collect()
+    }
+    assert got == {
+        0: (m(0), 1.0), 1: (m(10), 2.0), 2: (m(10), 2.0), 3: (None, None),
+    }
+    ref = _merge_asof_reference(L, R, "nearest")
+    assert {
+        lid: (None if t is None else t.to_pydatetime(), v)
+        for lid, (t, v) in ref.items()
+    } == got
 
 
 def test_rolling_zscore_known_values(spark):
@@ -325,25 +408,6 @@ def test_event_transitions_counts_and_probs(spark):
     assert ("a", "a") not in out  # no cross-user pair (u1 end -> u2 start)
 
 
-def test_event_transitions_skew_safe_equals_window_path(spark):
-    import datetime as dt
-    from azuredataengineering_deeplearning_spark.operators import windows as W
-
-    t = lambda m: dt.datetime(2024, 1, 1, 0, m)
-    rows = []
-    # hot key with a long sequence + several small keys
-    for i in range(40):
-        rows.append(("hot", t(i), 100 + i, ["a", "b", "c"][i % 3]))
-    for u in ("u1", "u2"):
-        rows += [(u, t(0), 1, "a"), (u, t(1), 2, "b")]
-    df = spark.createDataFrame(rows, "u string, ts timestamp, eid int, e string")
-    plain = {(r.from_event, r.to_event): (r.n, round(r.prob, 12)) for r in
-             W.event_transitions(df, "u", "ts", "e", "eid").collect()}
-    safe = {(r.from_event, r.to_event): (r.n, round(r.prob, 12)) for r in
-            W.event_transitions_skew_safe(df, "u", "ts", "e", "eid").collect()}
-    assert plain == safe
-
-
 def test_paths_to_conversion_semantics(spark):
     import datetime as dt
     from azuredataengineering_deeplearning_spark.operators import windows as W
@@ -393,12 +457,12 @@ def test_frequent_sequences_counts_motifs(spark):
 @pytest.mark.slow
 def test_asof_salted_equals_native(spark):
     """Salted (time-bucketed + carry) as-of must return exactly the
-    native join's rows — uniform keys, a hot key owning most rows,
+    union+window join's rows — uniform keys, a hot key owning most rows,
     buckets with no right rows, and both directions."""
     import random
 
     from azuredataengineering_deeplearning_spark.operators.joins import (
-        asof_join_native,
+        asof_join,
         asof_join_salted,
     )
 
@@ -425,7 +489,7 @@ def test_asof_salted_equals_native(spark):
         for w in (7, 50, 5000):  # tiny buckets, medium, one-bucket-fits-all
             na = {
                 r.lid: (r.t_right, r.rv)
-                for r in asof_join_native(
+                for r in asof_join(
                     ldf, rdf, on="t", by=["k"], direction=d
                 ).collect()
             }
